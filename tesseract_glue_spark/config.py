@@ -28,13 +28,11 @@ class ExtractionConfig:
     preprocess: bool = True           # grayscale→otsu→deskew→segment
     force_unhealthy: bool = False     # simulate bad engine init (reader2.cpp:19-23)
     # scale knobs
-    ocr_partitions: int | None = None     # repartition before mapInPandas; None → leave to AQE
-    broadcast_ocr_results: bool | None = None  # None → let Catalyst/AQE decide
+    ocr_partitions: int | None = None     # OCR stage tasks; None → 1 per core (extract.fan_out)
     # >1 → two-phase range-chunked doc reassembly (chunk = offset DIV
     # max(value, 1024) spans): hot many-page docs split across reducers,
     # pre-sorted chunks concatenated in order (no serial re-sort)
     salt_reassembly: int = 0
-    arrow_batch_rows: int = 256       # cap Arrow batch size for pixel payloads
     # The pages store contract is one row per media_ref. If an upstream
     # resolver can emit duplicates, enable this guard — it costs a full
     # shuffle of image bytes, so it's opt-in rather than always-on.

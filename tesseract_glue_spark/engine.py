@@ -84,10 +84,12 @@ class TesseractBackend:
         if not self.good:
             return ""
         # PSM 1 = automatic page segmentation with OSD, matching the
-        # reference's PSM_AUTO_OSD (reader2.cpp:24).
-        text = self._pytesseract.image_to_string(
-            gray, lang=self.config.lang, config="--psm 1"
-        )
+        # reference's PSM_AUTO_OSD (reader2.cpp:24); the traineddata
+        # come from the tessdata path validated() checked.
+        flags = "--psm 1"
+        if self.config.tessdata_path:
+            flags += f' --tessdata-dir "{self.config.tessdata_path}"'
+        text = self._pytesseract.image_to_string(gray, lang=self.config.lang, config=flags)
         return normalize_text(text)
 
     def version(self) -> str:

@@ -21,8 +21,7 @@ Scale design notes (the part that must survive 1000 executors / 100 TB):
   shuffles only text — never image bytes.
 * **Join strategy**: OCR results are |distinct refs| rows of short
   text; with AQE on, Spark converts the stitch join to broadcast when
-  it fits; `broadcast_ocr_results=True` forces the hint for clusters
-  where the estimate is off.
+  it fits.
 * **Order preservation**: never rely on row order through a shuffle —
   ordering is reconstructed from the carried ``offset`` field via
   ``sort_array`` / ``array_sort`` inside the aggregation (SURVEY §7
@@ -113,9 +112,8 @@ def ocr_one_page(engine, config: ExtractionConfig, img_bytes):
     """OCR one page inside a worker: decode → preprocess (Otsu, deskew,
     XY-cut zones) → recognize, with the degrade-don't-die status
     mapping. Returns ``(text, status, w, h, n_zones, shear,
-    confidence_x10k, proc_us)``. Shared by the media-only OCR stage and
-    the fused web strip+OCR stage — ONE implementation of the per-page
-    contract."""
+    confidence_x10k, proc_us)``. ONE implementation of the per-page
+    contract; :func:`ocr_batch` runs it over a batch."""
     import time as _time
 
     _t0 = _time.perf_counter()
@@ -153,100 +151,110 @@ def ocr_one_page(engine, config: ExtractionConfig, img_bytes):
                 int(1e6 * (_time.perf_counter() - _t0)))
 
 
-def _make_ocr_fn(config: ExtractionConfig):
-    """Build the mapInPandas kernel. The engine is constructed at most
-    once per Python worker process via the module-global cache in
-    :mod:`tesseract_glue_spark.engine` (the Reader-reuse analogue,
-    ``reader2.cpp:15-27``) — NOT per batch, NOT per row."""
+def fan_out(df: DataFrame, n_parts: int | None = None) -> DataFrame:
+    """Ship the package, then round-robin repartition ahead of a Python
+    kernel — the one task-count policy of every mapInPandas stage.
 
-    def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+    Shipping first: kernels reference module globals, so cloudpickle
+    serializes them BY REFERENCE and the worker must import
+    tesseract_glue_spark — which only works from a repo-root cwd unless
+    the zip is added (reproduces only when the driver cwd ≠ repo root).
 
-        engine = get_engine(config)  # lazy init, cached for the worker's lifetime
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
+    Round-robin, never hash or AQE-sized. Two traps:
+    (a) AQE sizes partitions by bytes and coalesces a "small" batch onto
+        one task — but per-row kernel cost (OCR above all) is huge
+        relative to row size, so byte-based coalescing serializes the
+        stage;
+    (b) repartition(N, 'media_ref') is ELIDED by Catalyst as redundant
+        (an upstream distinct already hash-partitions on media_ref),
+        after which AQE collapses that shuffle to 1 partition.
+    Round-robin repartition(N) avoids both: it is never elided (it's a
+    different partitioning), AQE never coalesces a user-specified N,
+    and it load-balances rows evenly regardless of key-hash skew.
 
-        for pdf in batches:
-            refs, texts, statuses, ws, hs, zones, shears = [], [], [], [], [], [], []
-            confs, procs = [], []
-            for ref, img_bytes in zip(pdf["media_ref"], pdf["image"]):
-                refs.append(ref)
-                text, status, w, h, n_zones, shear, conf, us = ocr_one_page(
-                    engine, config, img_bytes
-                )
-                texts.append(text)
-                statuses.append(status)
-                ws.append(w)
-                hs.append(h)
-                zones.append(n_zones)
-                shears.append(shear)
-                confs.append(conf)
-                procs.append(us)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "ocr_text": texts,
-                    "ocr_status": statuses,
-                    "width": ws,
-                    "height": hs,
-                    "n_zones": zones,
-                    "shear": shears,
-                    "partition_id": pid,
-                    "confidence_x10k": confs,
-                    "proc_us": procs,
-                }
-            )
+    1 task per core by default (r6, measured): every mapInPandas task
+    pays a fixed Python protocol cost (~7-14 ms on an identity kernel:
+    32 tasks 0.46 s, 64 tasks 0.63 s, 128 tasks 1.09 s, 256 tasks
+    2.04 s on idle local[32]; mapInArrow measured the same, so it is
+    the task protocol, not pandas conversion), while round-robin keeps
+    per-task ROW COUNTS exactly even — per-row cost variance (deskew,
+    picture blocks) averages out over the ~100+ rows each task holds.
+    Interleaved A/B at sf0.1: extract_full med 2.14 s at 1× vs 2.29 s
+    at 2× vs 2.82 s at the old 4×. The straggler question was also
+    settled by measurement, not assumption: 4→16 scaling_bench pairs at
+    1× vs 2× medianed 0.742 vs 0.715 — the multiplier is NOT what moves
+    pair efficiency (window noise is; see BENCH.md §-2), so 1× stands.
+    It scales with cluster parallelism; ``n_parts`` (the OCR stage's
+    ``config.ocr_partitions``) overrides it for inputs with genuinely
+    heavy-tailed per-row cost, where one task's rows no longer average
+    out."""
+    from tesseract_glue_spark.sources.shipping import ensure_shipped
 
-    return ocr_batches
+    spark = df.sparkSession
+    ensure_shipped(spark)
+    return df.repartition(n_parts or spark.sparkContext.defaultParallelism)
 
 
-def ocr_media(spans: DataFrame, pages: DataFrame, config: ExtractionConfig) -> DataFrame:
-    """distinct media refs ⋈ pages → per-ref OCR results.
+def resolve_pages(spans: DataFrame, pages: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """distinct media refs ⋈ pages → (media_ref, image), fanned out for
+    the OCR kernel.
 
     Left join keeps dangling refs (null image → STATUS_DANGLING inside
     the kernel) so error accounting needs no second pass."""
-    from tesseract_glue_spark.sources.shipping import ensure_shipped
-
-    ensure_shipped(spans.sparkSession)
-    refs = distinct_media_refs(spans)
     page_side = pages.select("media_ref", "image")
     if config.dedup_pages:
         # duplicate page rows would multiply through the left join and
         # duplicate spans after stitch — guard when the resolver can't
         # guarantee uniqueness (costs a pages shuffle; see config)
         page_side = page_side.dropDuplicates(["media_ref"])
-    resolved = refs.join(page_side, "media_ref", "left")
-    # ALWAYS round-robin repartition before the OCR UDF. Two traps here:
-    # (a) AQE sizes partitions by bytes and coalesces a "small" page
-    #     batch onto one task — but per-row OCR cost is huge relative to
-    #     row size, so byte-based coalescing serializes the stage;
-    # (b) repartition(N, 'media_ref') is ELIDED by Catalyst as redundant
-    #     (the upstream distinct already hash-partitions on media_ref),
-    #     after which AQE collapses that shuffle to 1 partition.
-    # Round-robin repartition(N) avoids both: it is never elided (it's a
-    # different partitioning), AQE never coalesces a user-specified N,
-    # and it load-balances pages evenly across UDF workers regardless of
-    # ref-hash skew.
-    # 1 task per core (r6, measured): every mapInPandas task pays a
-    # fixed Python protocol cost (~7-14 ms on an identity kernel: 32
-    # tasks 0.46 s, 64 tasks 0.63 s, 128 tasks 1.09 s, 256 tasks
-    # 2.04 s on idle local[32]; mapInArrow measured the same, so it is
-    # the task protocol, not pandas conversion), while round-robin
-    # keeps per-task PAGE COUNTS exactly even — per-page cost variance
-    # (deskew, picture blocks) averages out over the ~100+ pages each
-    # task holds. Interleaved A/B at sf0.1: extract_full med 2.14 s at
-    # 1× vs 2.29 s at 2× vs 2.82 s at the old 4×. The straggler
-    # question was also settled by measurement, not assumption: 4→16
-    # scaling_bench pairs at 1× vs 2× medianed 0.742 vs 0.715 — the
-    # multiplier is NOT what moves pair efficiency (window noise is;
-    # see BENCH.md §-2), so the bench-optimal 1× stands. The
-    # multiplier scales with cluster parallelism;
-    # config.ocr_partitions overrides it for corpora with genuinely
-    # heavy-tailed per-page cost (where one task's pages no longer
-    # average out).
-    n_parts = config.ocr_partitions or spans.sparkSession.sparkContext.defaultParallelism
-    resolved = resolved.repartition(n_parts)
-    return resolved.mapInPandas(_make_ocr_fn(config), schema=OCR_RESULT_SCHEMA)
+    resolved = distinct_media_refs(spans).join(page_side, "media_ref", "left")
+    return fan_out(resolved, config.ocr_partitions)
+
+
+def ocr_batch(engine, config: ExtractionConfig, pdf: pd.DataFrame) -> pd.DataFrame:
+    """(media_ref, image) rows → one OCR result row each
+    (``OCR_RESULT_SCHEMA``) — the per-page row loop of every OCR stage."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else -1
+    rows = [
+        (ref, *ocr_one_page(engine, config, img))
+        for ref, img in zip(pdf["media_ref"], pdf["image"])
+    ]
+    cols = ["media_ref", "ocr_text", "ocr_status", "width", "height", "n_zones",
+            "shear", "confidence_x10k", "proc_us"]
+    return pd.DataFrame(rows, columns=cols).assign(partition_id=pid)[OCR_RESULT_SCHEMA.names]
+
+
+def strip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """HTML text-span rows → the same rows with ``text`` replaced by its
+    DOM-stripped main content — the per-span row loop of every strip
+    stage."""
+    from tesseract_glue_spark.web.html_main import extract_main
+
+    return pdf.assign(text=[extract_main(html or "")["main_text"] for html in pdf["text"]])
+
+
+def _ocr_kernel(config: ExtractionConfig):
+    """The OCR mapInPandas kernel. The engine is constructed at most
+    once per Python worker process via the module-global cache in
+    :mod:`tesseract_glue_spark.engine` (the Reader-reuse analogue,
+    ``reader2.cpp:15-27``) — NOT per batch, NOT per row."""
+
+    def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        engine = get_engine(config)  # lazy init, cached for the worker's lifetime
+        for pdf in batches:
+            yield ocr_batch(engine, config, pdf)
+
+    return ocr_batches
+
+
+def ocr_media(spans: DataFrame, pages: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """distinct media refs ⋈ pages → per-ref OCR results."""
+    return resolve_pages(spans, pages, config).mapInPandas(
+        _ocr_kernel(config), schema=OCR_RESULT_SCHEMA
+    )
 
 
 def ocr_partition_metrics(ocr: DataFrame) -> DataFrame:
@@ -280,8 +288,6 @@ def stitch(spans: DataFrame, ocr: DataFrame, config: ExtractionConfig) -> DataFr
         (F.col("kind") != "media") | F.col("kind").isNull()
     ).withColumn("ocr_status", F.lit(None).cast("string"))
     ocr_small = ocr.select("media_ref", "ocr_text", "ocr_status")
-    if config.broadcast_ocr_results:
-        ocr_small = F.broadcast(ocr_small)
     stitched_media = media.join(ocr_small, "media_ref", "left").select(
         "doc_id",
         *carry,

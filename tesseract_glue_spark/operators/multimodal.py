@@ -8,8 +8,9 @@ deterministic fake (``backend='fake'``) or ``NotImplementedError``
 partitioning, UDF signatures) is real and tested either way.
 
 Scale notes: all operators are ``mapInPandas`` over a round-robin
-repartitioned input (same AQE-coalescing trap as the OCR stage — see
-operators/extract.py), with only (ref, bytes) projected into the UDF.
+repartitioned input (``extract.fan_out``: same AQE-coalescing trap and
+1-task-per-core policy as the OCR stage), with only (ref, bytes)
+projected into the UDF.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from pyspark.sql import types as T
 from tesseract_glue_spark.imaging import kernels
 from tesseract_glue_spark.imaging.codecs import decode_image, image_dims_any, sniff_mime
 from tesseract_glue_spark.imaging.png import encode_png
+from tesseract_glue_spark.operators.extract import fan_out
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -74,26 +76,6 @@ VIDEO_FRAMES_SCHEMA = T.StructType(
 )
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    # ship the package to Python workers first: these kernels reference
-    # module globals, so cloudpickle serializes them BY REFERENCE and the
-    # worker must import tesseract_glue_spark — which only works from a
-    # repo-root cwd unless the zip is added (bug reproduces only when the
-    # driver cwd ≠ repo root, e.g. the round driver itself)
-    from tesseract_glue_spark.sources.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    # 1 task/core (conf-overridable), same fixed-task-cost measurement
-    # as operators.web._fan_out: these kernels are ~1 ms/page with
-    # round-robin-even row counts, so extra tasks only buy protocol cost
-    from tesseract_glue_spark.operators.web import FANOUT_PER_CORE_CONF
-
-    spark = df.sparkSession
-    mult = int(spark.conf.get(FANOUT_PER_CORE_CONF, "1"))
-    n = max(mult, 1) * spark.sparkContext.defaultParallelism
-    return df.repartition(n)
-
-
 def image_metadata(pages: DataFrame) -> DataFrame:
     """Header-only metadata scan: dims come from the container header
     (PNG IHDR / TIFF IFD) without a full pixel decode (``Image.w/h``
@@ -114,7 +96,7 @@ def image_metadata(pages: DataFrame) -> DataFrame:
                 rows.append((ref, sniff_mime(b), w, h, len(b), status))
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
 
-    return _fan_out(pages.select("media_ref", "image")).mapInPandas(
+    return fan_out(pages.select("media_ref", "image")).mapInPandas(
         scan, schema=IMAGE_META_SCHEMA
     )
 
@@ -145,7 +127,7 @@ def image_features(pages: DataFrame, bins: int = 8) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
 
-    return _fan_out(pages.select("media_ref", "image")).mapInPandas(
+    return fan_out(pages.select("media_ref", "image")).mapInPandas(
         feats, schema=IMAGE_FEATURES_SCHEMA
     )
 
@@ -172,7 +154,7 @@ def image_resize(pages: DataFrame, max_side: int = 64) -> DataFrame:
                 rows.append((ref, encode_png(small), small.shape[1], small.shape[0]))
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_RESIZED_SCHEMA.fields])
 
-    return _fan_out(pages.select("media_ref", "image")).mapInPandas(
+    return fan_out(pages.select("media_ref", "image")).mapInPandas(
         resize, schema=IMAGE_RESIZED_SCHEMA
     )
 
@@ -224,7 +206,7 @@ def image_pixel_stats(pages: DataFrame) -> DataFrame:
                 rows, columns=[f.name for f in IMAGE_PIXEL_STATS_SCHEMA.fields]
             )
 
-    return _fan_out(pages.select("media_ref", "image")).mapInPandas(
+    return fan_out(pages.select("media_ref", "image")).mapInPandas(
         stats, schema=IMAGE_PIXEL_STATS_SCHEMA
     )
 
@@ -322,7 +304,7 @@ def audio_features(media: DataFrame, backend: str = "fake") -> DataFrame:
                 rows.append((ref, dur, rms, _fake_floats(key, 13)))
             yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
 
-    return _fan_out(media.select("media_ref", "image")).mapInPandas(
+    return fan_out(media.select("media_ref", "image")).mapInPandas(
         feats, schema=AUDIO_FEATURES_SCHEMA
     )
 
@@ -347,6 +329,6 @@ def video_frame_sample(media: DataFrame, every_n: int = 10, backend: str = "fake
                     rows.append((ref, i * every_n, encode_png(arr)))
             yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FRAMES_SCHEMA.fields])
 
-    return _fan_out(media.select("media_ref", "image")).mapInPandas(
+    return fan_out(media.select("media_ref", "image")).mapInPandas(
         sample, schema=VIDEO_FRAMES_SCHEMA
     )

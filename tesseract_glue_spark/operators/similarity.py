@@ -359,8 +359,12 @@ def ann_topk_bruteforce(spark, sf_dir: str, table: str = "embeddings"):
         )
 
     # BRUTE_CAP rows → one task holds everything; the kernel needs the
-    # full set to rank, so a single partition is the correct shape
-    return qv.coalesce(1).mapInPandas(kern, schema=schema)
+    # full set to rank, so a single partition is the correct shape.
+    # repartition, not coalesce: coalesce(1) is a narrow dependency that
+    # would pull the whole scan, quantization and stride filter into
+    # the kernel's one task; the exchange keeps those parallel and moves
+    # only the ≤BRUTE_CAP surviving rows
+    return qv.repartition(1).mapInPandas(kern, schema=schema)
 
 
 def ann_topk_lsh_sql(d: str, table: str = "embeddings") -> str:

@@ -29,7 +29,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tesseract_glue_spark.engine import get_engine
 from tesseract_glue_spark.functions import dialect as D
+from tesseract_glue_spark.operators.extract import (
+    OCR_RESULT_SCHEMA,
+    explode_spans,
+    fan_out,
+    ocr_batch,
+    reassemble,
+    resolve_pages,
+    stitch,
+    strip_batch,
+)
 
 # ------------------------------------------------------------------ HTML
 
@@ -160,30 +171,6 @@ HTML_MAIN_SCHEMA = T.StructType(
 )
 
 
-FANOUT_PER_CORE_CONF = "spark.tesseract_glue.fanout_per_core"
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin repartition ahead of a cheap uniform Python kernel.
-
-    1 task per core by default (conf-overridable): the web kernels cost
-    150-200 µs/row with low variance, so a task's compute is ~10-40 ms
-    while every mapInPandas task pays a ~7 ms fixed Python protocol
-    cost (measured on an identity kernel at local[32]: 32 tasks 0.46 s,
-    128 tasks 1.09 s, 256 tasks 2.04 s). At 4 tasks/core the fixed cost
-    dominated the stage; at 1× the round-robin still evens row counts
-    exactly, so there are no data stragglers to smooth. Scales with
-    cluster parallelism; raise the conf for kernels with heavy-tailed
-    per-row cost."""
-    from tesseract_glue_spark.sources.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    spark = df.sparkSession
-    mult = int(spark.conf.get(FANOUT_PER_CORE_CONF, "1"))
-    n = max(mult, 1) * spark.sparkContext.defaultParallelism
-    return df.repartition(n)
-
-
 def html_main_content(pages: DataFrame) -> DataFrame:
     """(doc_id, html) → main-content record via the DOM-heuristic
     kernel, Arrow-batched."""
@@ -205,7 +192,7 @@ def html_main_content(pages: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in HTML_MAIN_SCHEMA.fields])
 
-    return _fan_out(pages.select("doc_id", "html")).mapInPandas(
+    return fan_out(pages.select("doc_id", "html")).mapInPandas(
         run, schema=HTML_MAIN_SCHEMA
     )
 
@@ -288,7 +275,7 @@ def html_metadata(pages: DataFrame) -> DataFrame:
                 rows.append((doc_id, m["title"], m["description"], m["canonical"]))
             yield pd.DataFrame(rows, columns=[f.name for f in HTML_META_SCHEMA.fields])
 
-    return _fan_out(pages.select("doc_id", "html")).mapInPandas(
+    return fan_out(pages.select("doc_id", "html")).mapInPandas(
         run, schema=HTML_META_SCHEMA
     )
 
@@ -333,7 +320,7 @@ def html_outlinks(pages: DataFrame) -> DataFrame:
                     rows.append((doc_id, link.href, link.anchor, int(link.chrome)))
             yield pd.DataFrame(rows, columns=[f.name for f in OUTLINKS_SCHEMA.fields])
 
-    return _fan_out(pages.select("doc_id", "html")).mapInPandas(
+    return fan_out(pages.select("doc_id", "html")).mapInPandas(
         run, schema=OUTLINKS_SCHEMA
     )
 
@@ -738,7 +725,7 @@ def html_tables_extract_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in TABLE_SCHEMA.fields])
 
-    return _fan_out(corpus).mapInPandas(run, schema=TABLE_SCHEMA)
+    return fan_out(corpus).mapInPandas(run, schema=TABLE_SCHEMA)
 
 
 def html_tables_extract_oracle_sql(table: str = "documents") -> str:
@@ -951,7 +938,7 @@ def web_sitemap_parse_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                         rows.append((doc_id, e["loc"], e["lastmod"], e["priority_x10"]))
             yield pd.DataFrame(rows, columns=[f.name for f in SITEMAP_SCHEMA.fields])
 
-    return _fan_out(corpus).mapInPandas(run, schema=SITEMAP_SCHEMA)
+    return fan_out(corpus).mapInPandas(run, schema=SITEMAP_SCHEMA)
 
 
 def web_sitemap_parse_oracle_sql(table: str = "documents") -> str:
@@ -1035,7 +1022,7 @@ def web_sitemap_discover_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                         rows.append((doc_id, e["loc"]))
             yield pd.DataFrame(rows, columns=["index_doc_id", "child_loc"])
 
-    refs = _fan_out(idx).mapInPandas(
+    refs = fan_out(idx).mapInPandas(
         parse_idx, schema="index_doc_id BIGINT, child_loc STRING"
     )
     refs = refs.withColumn(
@@ -1142,7 +1129,7 @@ def robots_filter(urls: DataFrame, robots_txt: str = ROBOTS_TXT, agent: str = RO
             ]
             yield pd.DataFrame(rows, columns=[f.name for f in ROBOTS_SCHEMA.fields])
 
-    return _fan_out(urls.select("doc_id", "url")).mapInPandas(run, schema=ROBOTS_SCHEMA)
+    return fan_out(urls.select("doc_id", "url")).mapInPandas(run, schema=ROBOTS_SCHEMA)
 
 
 def web_robots_filter_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,7 +1200,7 @@ def _synthesize_warc(doc_id: int, html: str) -> bytes:
 
 def _warc_corpus_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
-    return _fan_out(spark.sql(html_corpus_sql(D.SPARK)))
+    return fan_out(spark.sql(html_corpus_sql(D.SPARK)))
 
 
 def warc_ingest_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,14 +1497,10 @@ PDF_SPANS_SCHEMA = T.StructType(
 )
 
 
-def pdf_extract_text(docs: DataFrame, fan_out: bool = True) -> DataFrame:
+def pdf_extract_text(docs: DataFrame) -> DataFrame:
     """(doc_id, pdf: binary) → per-page reading-order text. Undecodable
     PDFs yield a placeholder row (status='decode_error'), never a silent
-    drop — same corruption-screen policy as the image path.
-
-    ``fan_out=False`` when the input is already explicitly partitioned
-    (e.g. straight out of another mapInPandas stage): the parse then
-    pipelines into the producer's stage with no blob shuffle between."""
+    drop — same corruption-screen policy as the image path."""
     from tesseract_glue_spark.web.pdf import PdfDecodeError, extract_pdf_spans, reading_order_text
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1533,13 +1516,10 @@ def pdf_extract_text(docs: DataFrame, fan_out: bool = True) -> DataFrame:
                     rows.append((doc_id, page_no, page_text, "ok"))
             yield pd.DataFrame(rows, columns=[f.name for f in PDF_TEXT_SCHEMA.fields])
 
-    src = docs.select("doc_id", "pdf")
-    if fan_out:
-        src = _fan_out(src)
-    return src.mapInPandas(run, schema=PDF_TEXT_SCHEMA)
+    return fan_out(docs.select("doc_id", "pdf")).mapInPandas(run, schema=PDF_TEXT_SCHEMA)
 
 
-def pdf_spans(docs: DataFrame, fan_out: bool = True) -> DataFrame:
+def pdf_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, pdf: binary) → raw positioned spans (pre-layout),
     x/y floored to ints for exact cross-engine hashing."""
     from tesseract_glue_spark.web.pdf import PdfDecodeError, extract_pdf_spans
@@ -1556,10 +1536,7 @@ def pdf_spans(docs: DataFrame, fan_out: bool = True) -> DataFrame:
                     rows.append((doc_id, page_no, int(x), int(y), txt))
             yield pd.DataFrame(rows, columns=[f.name for f in PDF_SPANS_SCHEMA.fields])
 
-    src = docs.select("doc_id", "pdf")
-    if fan_out:
-        src = _fan_out(src)
-    return src.mapInPandas(run, schema=PDF_SPANS_SCHEMA)
+    return fan_out(docs.select("doc_id", "pdf")).mapInPandas(run, schema=PDF_SPANS_SCHEMA)
 
 
 
@@ -1604,7 +1581,7 @@ def _pdf_text_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.expr(doc_text_expr(D.SPARK)).alias("text")
     )
-    return _fan_out(docs)
+    return fan_out(docs)
 
 
 def pdf_text_extract_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1692,150 +1669,64 @@ STRIPPED_SPAN_SCHEMA = T.StructType(
 )
 
 
-WEB_TEXT_FANOUT_CONF = "spark.tesseract_glue.web_text_fanout"
-
-
-def _text_fanout_conf(spark: SparkSession) -> bool:
-    """Conf-driven fan-out decision for HTML text-span kernels
-    (default FALSE: map-only). The previous auto-probe asked the
-    frame's RDD for its partition count, which forces full physical
-    planning of the upstream frame on the driver just to decide a
-    tiny-input repartition — a non-trivial driver stall on a 100 TB
-    plan, and the pre-AQE partition estimate is unreliable anyway
-    (r5 verdict, "What's wrong" #2). At crawl scale the input splits provide the
-    parallelism and a map-only kernel needs no shuffle (unconditional
-    fan-out here was measured a 1.5× wall regression at local[16]);
-    for tiny single-file local inputs set the conf to true — at gate
-    scale the un-fanned kernel costs <0.5 s, so false stays the
-    default."""
-    return str(spark.conf.get(WEB_TEXT_FANOUT_CONF, "false")).lower() == "true"
-
-
-def strip_text_spans(spans: DataFrame, fan_out: bool | None = None) -> DataFrame:
+def strip_text_spans(spans: DataFrame) -> DataFrame:
     """(doc_id, offset, text=html) → main content per text span.
 
-    ``fan_out=None`` defers to ``spark.tesseract_glue.web_text_fanout``
-    (default false — map-only; see :func:`_text_fanout_conf`).
-    Unconditional round-robin fan-out here was measured a 1.5× wall
+    MAP-ONLY over the input's own splits: at crawl scale the input
+    splits provide the parallelism and the kernel needs no shuffle —
+    unconditional round-robin fan-out here was measured a 1.5× wall
     regression on the full web pipeline at local[16] (41.4 s → 26.7 s
     without it): it shuffles every HTML payload AND adds a stage that
-    interleaves with the OCR stage, while a map-only kernel over an
-    adequately-split input needs neither — at crawl scale the input
-    splits provide the parallelism."""
+    interleaves with the OCR stage. A caller whose input is under-split
+    (a single small file, say) should repartition it first — the kernel
+    then runs on as many tasks as the caller chose."""
     from tesseract_glue_spark.sources.shipping import ensure_shipped
 
-    from tesseract_glue_spark.web.html_main import extract_main
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, off, extract_main(html)["main_text"])
-                for doc_id, off, html in zip(pdf["doc_id"], pdf["offset"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in STRIPPED_SPAN_SCHEMA.fields])
-
-    src = spans.select("doc_id", "offset", "text")
-    if fan_out is None:
-        fan_out = _text_fanout_conf(src.sparkSession)
-    if fan_out:
-        src = _fan_out(src)
-    else:
-        ensure_shipped(src.sparkSession)
-    return src.mapInPandas(run, schema=STRIPPED_SPAN_SCHEMA)
-
-
-def web_strip_exploded(spans: DataFrame) -> DataFrame:
-    """Exploded span frame → same frame with text-span payloads replaced
-    by their DOM-stripped main content. The two span kinds take disjoint
-    paths off one frame and re-unite by UNION (offset travels with every
-    row, so no order join); downstream media-only consumers prune the
-    strip branch entirely — a ``kind = 'media'`` filter pushed through
-    the union constant-folds the stripped child (lit 'text') to empty."""
-    text = spans.where(F.col("kind") == "text")
-    others = spans.where((F.col("kind") != "text") | F.col("kind").isNull())
-    stripped = strip_text_spans(text).select(
-        "doc_id",
-        "offset",
-        F.lit("text").alias("kind"),
-        "text",
-        F.lit("").alias("media_ref"),
-    )
-    return others.select("doc_id", "offset", "kind", "text", "media_ref").unionByName(
-        stripped
+    ensure_shipped(spans.sparkSession)
+    return spans.select("doc_id", "offset", "text").mapInPandas(
+        lambda batches: map(strip_batch, batches), schema=STRIPPED_SPAN_SCHEMA
     )
 
 
+# the fused stage's rows: OCR result columns for media rows, the
+# stripped text span (with its carried doc size) for text rows
 WEB_FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
+    OCR_RESULT_SCHEMA.fields
+    + [
         T.StructField("doc_id", T.LongType()),
+        T.StructField("n_spans", T.IntegerType()),
         T.StructField("offset", T.LongType()),
-        T.StructField("out_text", T.StringType()),
-        T.StructField("ocr_status", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_zones", T.IntegerType()),
-        T.StructField("shear", T.DoubleType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("confidence_x10k", T.IntegerType()),
-        T.StructField("proc_us", T.LongType()),
+        T.StructField("text", T.StringType()),
     ]
 )
 
 
 def _fused_web_kernel(config):
-    """One worker pass for BOTH web work kinds: rows with a media_ref
-    are OCR'd pages (decode→preprocess→recognize via the shared
-    :func:`extract.ocr_one_page` contract); rows without are HTML text
-    spans, DOM-stripped in place. Running the two Python kernels as ONE
-    stage keeps exactly one Python worker per core — the previous
-    two-stage shape ran the strip and OCR stages concurrently, and the
-    doubled Python-process pressure was the web pipeline's measured
-    scaling ceiling (BENCH.md §2: composite 0.75-0.79 vs the OCR
-    kernel's own 0.90)."""
+    """One worker pass for BOTH web work kinds: each batch is split by
+    ``media_ref IS NULL`` — media rows are OCR'd pages
+    (:func:`extract.ocr_batch`), the rest are HTML text spans,
+    DOM-stripped in place (:func:`extract.strip_batch`). Running the two
+    Python kernels as ONE stage keeps exactly one Python worker per core
+    — the previous two-stage shape ran the strip and OCR stages
+    concurrently, and the doubled Python-process pressure was the web
+    pipeline's measured scaling ceiling (BENCH.md §2: composite
+    0.75-0.79 vs the OCR kernel's own 0.90)."""
+    cols = WEB_FUSED_SCHEMA.names
+
+    def pad(part: pd.DataFrame) -> pd.DataFrame:
+        # the other kind's columns as all-null columns
+        return pd.DataFrame({c: part[c] if c in part.columns else None for c in cols})
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-
-        from pyspark import TaskContext
-
-        from tesseract_glue_spark.engine import get_engine
-        from tesseract_glue_spark.operators.extract import ocr_one_page
-        from tesseract_glue_spark.web.html_main import extract_main
-
         engine = None
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
         for pdf in batches:
-            rows = []
-            isna = pdf["media_ref"].isna().tolist()
-            for i, (ref, img, doc_id, off, payload) in enumerate(
-                zip(
-                    pdf["media_ref"],
-                    pdf["image"],
-                    pdf["doc_id"],
-                    pdf["offset"],
-                    pdf["payload"],
-                )
-            ):
-                if not isna[i]:  # media row → OCR
-                    if engine is None:  # lazy: strip-only tasks skip init
-                        engine = get_engine(config)
-                    text, status, w, h, nz, shear, conf, us = ocr_one_page(
-                        engine, config, None if img is None else img
-                    )
-                    rows.append(
-                        (ref, None, None, text, status, w, h, nz, shear, pid, conf, us)
-                    )
-                else:  # text row → DOM strip
-                    _t0 = _time.perf_counter()
-                    main = extract_main(payload or "")["main_text"]
-                    us = int(1e6 * (_time.perf_counter() - _t0))
-                    rows.append(
-                        (None, int(doc_id), int(off), main, None,
-                         None, None, None, None, pid, None, us)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in WEB_FUSED_SCHEMA.fields])
+            is_media = pdf["media_ref"].notna()
+            if is_media.any():
+                if engine is None:  # lazy: strip-only tasks skip init
+                    engine = get_engine(config)
+                yield pad(ocr_batch(engine, config, pdf[is_media]))
+            if not is_media.all():
+                yield pad(strip_batch(pdf[~is_media]))
 
     return run
 
@@ -1844,104 +1735,74 @@ def _fused_web_input(spans: DataFrame, pages: DataFrame, cfg) -> DataFrame:
     """The fused stage's input: media pages ∪ HTML text spans, each side
     partitioned BEFORE the union — a union concatenates its children's
     partitions without an exchange, so the media side gets the
-    round-robin fan-out it needs (byte-based AQE coalescing vs huge
-    per-row OCR cost — same rationale as ocr_media) while the text side
-    stays MAP-ONLY. Repartitioning the union instead pushed every HTML
-    payload through a shuffle — the exact regression round 3 measured
-    and removed from the strip stage (re-measured here as 4→16 scaling
-    0.855 → 0.457); the plan shape is locked by
-    ``tests/test_plans.py::test_fused_web_input_no_html_shuffle``."""
-    from tesseract_glue_spark.operators.extract import distinct_media_refs
-
-    refs = distinct_media_refs(spans)
-    page_side = pages.select("media_ref", "image")
-    if cfg.dedup_pages:
-        page_side = page_side.dropDuplicates(["media_ref"])
-    resolved = refs.join(page_side, "media_ref", "left")
-    par = spans.sparkSession.sparkContext.defaultParallelism
-    # 1 task/core, same fixed-task-cost trade as extract.ocr_media
-    n_parts = cfg.ocr_partitions or par
-    media_in = resolved.repartition(n_parts).select(
+    round-robin fan-out of :func:`extract.resolve_pages` while the text
+    side stays MAP-ONLY (see :func:`strip_text_spans`). Repartitioning
+    the union instead pushed every HTML payload through a shuffle — the
+    exact regression round 3 measured and removed from the strip stage
+    (re-measured here as 4→16 scaling 0.855 → 0.457); the plan shape is
+    locked by ``tests/test_plans.py::test_fused_web_input_no_html_shuffle``."""
+    media_in = resolve_pages(spans, pages, cfg).select(
         "media_ref",
         "image",
         F.lit(None).cast("long").alias("doc_id"),
+        F.lit(None).cast("int").alias("n_spans"),
         F.lit(None).cast("long").alias("offset"),
-        F.lit(None).cast("string").alias("payload"),
+        F.lit(None).cast("string").alias("text"),
     )
     text_in = spans.where(F.col("kind") == "text").select(
         F.lit(None).cast("string").alias("media_ref"),
         F.lit(None).cast("binary").alias("image"),
         "doc_id",
+        "n_spans",
         F.col("offset").cast("long").alias("offset"),
-        F.col("text").alias("payload"),
+        "text",
     )
-    if _text_fanout_conf(spans.sparkSession):  # tiny local inputs only (conf)
-        text_in = text_in.repartition(par)
     return media_in.unionByName(text_in)
 
 
-def extract_web_documents(
-    docs: DataFrame, pages: DataFrame, config=None, fused: bool = True
-) -> DataFrame:
+def extract_web_documents(docs: DataFrame, pages: DataFrame, config=None) -> DataFrame:
     """Nested-form web extraction — the production job surface: same
     output schema as ``extract_documents`` (doc_id, spans, ocr_pages,
     ocr_empty_pages, status), so lineage manifests, bucketed writes, and
     bucket-/doc-granular resume apply unchanged (`run_extract --web`).
     Text spans are DOM-stripped and media spans OCR'd in ONE fused
-    mapInPandas stage (``fused=True``, the default): exactly one Python
-    worker per core, one round-robin fan-out carrying pages+HTML, and
-    one eager materialization of the (small, text-only) kernel output,
-    which both the OCR-stitch branch and the text-span branch then read.
-    ``fused=False`` keeps the round-3 two-stage shape (separate strip
-    and OCR stages on disjoint branches) for A/B scaling measurement."""
+    mapInPandas stage: exactly one Python worker per core, one
+    round-robin fan-out carrying pages, and one eager materialization of
+    the (small, text-only) kernel output, which both the OCR-stitch
+    branch and the text-span branch then read. Every span row carries
+    its doc's ``n_spans``, so salted reassembly routes small docs to
+    the single-phase plan exactly as :func:`extract.extract_documents`
+    does."""
     from tesseract_glue_spark import ExtractionConfig
-    from tesseract_glue_spark.operators.extract import (
-        explode_spans,
-        ocr_media,
-        reassemble,
-        stitch,
-    )
-    from tesseract_glue_spark.sources.shipping import ensure_shipped
 
     cfg = (config or ExtractionConfig()).validated()
     spans = explode_spans(docs)
-    if not fused:
-        spans2 = web_strip_exploded(spans)
-        ocr = ocr_media(spans2, pages, cfg)
-        return reassemble(stitch(spans2, ocr, cfg), cfg)
-
-    ensure_shipped(docs.sparkSession)
-    fused_in = _fused_web_input(spans, pages, cfg)
-    out = fused_in.mapInPandas(_fused_web_kernel(cfg), schema=WEB_FUSED_SCHEMA)
+    out = _fused_web_input(spans, pages, cfg).mapInPandas(
+        _fused_web_kernel(cfg), schema=WEB_FUSED_SCHEMA
+    )
     # the kernel output (stripped text + OCR text, no page bytes) feeds
     # TWO branches below; materialize once so neither recomputes the
     # expensive stage — the cost is one write of what the reassembly
     # shuffle moves anyway
     out = out.localCheckpoint(eager=True)
-    ocr = out.where(F.col("media_ref").isNotNull()).select(
-        "media_ref",
-        F.col("out_text").alias("ocr_text"),
-        "ocr_status",
-        "width",
-        "height",
-        "n_zones",
-        "shear",
-        "partition_id",
-        "confidence_x10k",
-        "proc_us",
-    )
+    ocr = out.where(F.col("media_ref").isNotNull()).select(*OCR_RESULT_SCHEMA.names)
     stripped = out.where(F.col("media_ref").isNull()).select(
         "doc_id",
+        "n_spans",
         "offset",
         F.lit("text").alias("kind"),
-        F.coalesce("out_text", F.lit("")).alias("text"),
+        F.coalesce("text", F.lit("")).alias("text"),
         F.lit("").alias("media_ref"),
     )
     others = spans.where((F.col("kind") != "text") | F.col("kind").isNull()).select(
-        "doc_id", F.col("offset").cast("long").alias("offset"), "kind", "text", "media_ref"
+        "doc_id",
+        "n_spans",
+        F.col("offset").cast("long").alias("offset"),
+        "kind",
+        "text",
+        "media_ref",
     )
-    stitched_spans = others.unionByName(stripped)
-    return reassemble(stitch(stitched_spans, ocr, cfg), cfg)
+    return reassemble(stitch(others.unionByName(stripped), ocr, cfg), cfg)
 
 
 def extract_web_flat_spark(spark: SparkSession, sf_dir: str) -> DataFrame:

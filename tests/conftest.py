@@ -16,6 +16,36 @@ def canonical_csv(pdf):
     return pdf.to_csv(index=False)
 
 
+def drain_stream(query, timeout_s=420):
+    """Wait until a started ``trigger(availableNow=True)`` query has
+    consumed all of its input, then stop it; a query that failed
+    re-raises its error here.
+
+    A stateful query with a processing-time timeout never ends by
+    itself under availableNow: its operator asks for a no-data batch on
+    every trigger to check timeouts, so ``awaitTermination`` would wait
+    out its whole timeout and leave the query running through the tests
+    that follow. A batch that moves no source offset is such a no-data
+    batch, and availableNow runs one only after every available offset
+    is committed — so its progress report marks the drained point."""
+    import time
+
+    def drained(p):
+        return p["sources"] and all(s["startOffset"] == s["endOffset"] for s in p["sources"])
+
+    deadline = time.monotonic() + timeout_s
+    try:
+        while query.isActive and time.monotonic() < deadline:
+            if any(drained(p) for p in query.recentProgress):
+                break
+            time.sleep(0.2)
+    finally:
+        query.stop()
+    err = query.exception()
+    if err is not None:
+        raise err
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = (

@@ -136,16 +136,6 @@ class TestExtraction:
         assert all(t == "" for t in media_texts)
         assert out.count() > 0
 
-    def test_broadcast_stitch_identical(self, docs, pages):
-        out = extract.extract_documents(
-            docs, pages, ExtractionConfig(broadcast_ocr_results=True)
-        )
-        base = extract.extract_documents(docs, pages, ExtractionConfig())
-        assert (
-            out.select("doc_id", "status").orderBy("doc_id").collect()
-            == base.select("doc_id", "status").orderBy("doc_id").collect()
-        )
-
     def test_flat_view_row_count(self, docs, pages):
         flat = extract.extract_flat(docs, pages, ExtractionConfig())
         n_spans = docs.select(F.sum(F.size("spans"))).first()[0]
@@ -244,15 +234,35 @@ class TestOcrMetrics:
         assert sum(r["n_dangling"] for r in m) > 0  # contract guarantees danglings
 
 
+def _mixed_hot_docs(spark):
+    """One multi-chunk hot doc (> block spans) plus 20 normal docs."""
+    from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA
+    from tesseract_glue_spark.imaging.render import num_to_ref
+
+    hot = [("text", f"t{o}", "", o) if o % 2 else
+           ("media", "", num_to_ref((o * 7) % 6000), o) for o in range(2500)]
+    small = [[("text", f"d{d}s{o}", "", o) for o in range(5)] for d in range(20)]
+    return spark.createDataFrame(
+        [(888000, hot)] + [(888001 + d, s) for d, s in enumerate(small)],
+        schema=DOCUMENTS_SCHEMA,
+    )
+
+
 class TestRobustness:
-    def test_duplicate_pages_guard(self, spark, docs, pages):
+    @pytest.mark.parametrize("extractor", ["extract_documents", "extract_web_documents"])
+    def test_duplicate_pages_guard(self, spark, docs, pages, extractor):
         """A resolver emitting duplicate page rows must not duplicate
-        spans when the dedup_pages guard is on."""
+        spans when the dedup_pages guard is on — on both extractors,
+        which share one page resolve."""
+        from tesseract_glue_spark.operators import web
+
+        if extractor == "extract_web_documents":
+            run, docs = web.extract_web_documents, web.wrap_text_spans_html(docs)
+        else:
+            run = extract.extract_documents
         dup_pages = pages.unionByName(pages.limit(50))
-        base = extract.extract_documents(docs, pages, ExtractionConfig())
-        guarded = extract.extract_documents(
-            docs, dup_pages, ExtractionConfig(dedup_pages=True)
-        )
+        base = run(docs, pages, ExtractionConfig())
+        guarded = run(docs, dup_pages, ExtractionConfig(dedup_pages=True))
         a = {r["doc_id"]: spans_key(r["spans"]) for r in base.collect()}
         b = {r["doc_id"]: spans_key(r["spans"]) for r in guarded.collect()}
         assert a == b
@@ -263,22 +273,34 @@ class TestRobustness:
         branch (single-phase vs chunked two-phase) and produce output
         identical to the unsalted plan — no doc lost, duplicated, or
         reordered across the union."""
-        from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA
-        from tesseract_glue_spark.imaging.render import num_to_ref
-
-        hot = [("text", f"t{o}", "", o) if o % 2 else
-               ("media", "", num_to_ref((o * 7) % 6000), o) for o in range(2500)]
-        small = [[("text", f"d{d}s{o}", "", o) for o in range(5)] for d in range(20)]
-        docs = spark.createDataFrame(
-            [(888000, hot)] + [(888001 + d, s) for d, s in enumerate(small)],
-            schema=DOCUMENTS_SCHEMA,
-        )
+        docs = _mixed_hot_docs(spark)
         base = extract.extract_documents(docs, pages, ExtractionConfig()).collect()
         salted = extract.extract_documents(
             docs, pages, ExtractionConfig(salt_reassembly=16)
         ).collect()
         a = {r["doc_id"]: spans_key(r["spans"]) for r in base}
         b = {r["doc_id"]: spans_key(r["spans"]) for r in salted}
+        assert a == b and len(b) == 21
+
+    def test_salted_web_routing_mixed_corpus(self, spark, pages):
+        """Web extraction carries the doc size through the fused stage,
+        so salted reassembly routes the normal docs to the single-phase
+        plan (the ``n_spans`` filter) instead of the two-phase fallback
+        for every doc — with output identical to the unsalted plan."""
+        import re
+
+        from tesseract_glue_spark.operators import web
+        from tesseract_glue_spark.plans import checks as C
+
+        docs = web.wrap_text_spans_html(_mixed_hot_docs(spark))
+        base = web.extract_web_documents(docs, pages, ExtractionConfig())
+        salted = web.extract_web_documents(
+            docs, pages, ExtractionConfig(salt_reassembly=16)
+        )
+        plan = C.plan_text(salted)
+        assert re.search(r"n_spans#\d+ <= 1024", plan), plan
+        a = {r["doc_id"]: spans_key(r["spans"]) for r in base.collect()}
+        b = {r["doc_id"]: spans_key(r["spans"]) for r in salted.collect()}
         assert a == b and len(b) == 21
 
     def test_salted_fallback_without_doc_size(self, spark):

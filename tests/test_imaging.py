@@ -568,6 +568,14 @@ class TestTesseractBackendContract:
         assert out == "recognized text"
         assert fake.calls == [{"lang": "deu", "config": "--psm 1", "shape": (4, 4)}]
 
+    def test_tessdata_path_passthrough(self, monkeypatch):
+        import numpy as np
+
+        fake = self._FakePytesseract()
+        eng = self._backend(monkeypatch, fake, tessdata_path="/models/tessdata")
+        eng.recognize(np.full((4, 4), 255, dtype=np.uint8))
+        assert fake.calls[0]["config"] == '--psm 1 --tessdata-dir "/models/tessdata"'
+
     def test_whitespace_output_normalizes_to_empty(self, monkeypatch):
         import numpy as np
 

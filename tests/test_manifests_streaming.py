@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain_stream
 
 
 class TestManifestsResume:
@@ -520,7 +520,7 @@ class TestStatefulStreaming:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(420)
+        drain_stream(q)
         # last snapshot per user (updates accumulate across batches)
         snap = spark.sql(
             """

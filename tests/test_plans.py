@@ -75,16 +75,6 @@ class TestExtractionPlanShape:
         anything beyond ~8 exchanges means a new unplanned shuffle)."""
         assert C.count_exchanges(extraction_plan) <= 8, extraction_plan
 
-    def test_broadcast_stitch_when_forced(self, spark):
-        from tesseract_glue_spark import ExtractionConfig, extract_documents
-        from tesseract_glue_spark.fixtures import interleaved_documents, pages_for
-
-        docs = interleaved_documents(spark, SF_DIR)
-        out = extract_documents(
-            docs, pages_for(docs), ExtractionConfig(broadcast_ocr_results=True)
-        )
-        assert C.has_broadcast_join(C.plan_text(out))
-
 
 class TestAntiJoinPlanShape:
     """Round-1 judge findings: the survivors keep-lists must plan as
@@ -144,6 +134,22 @@ class TestIvfPlanShape:
         plan = C.plan_text(spark.sql(ivf_step_sql(D.SPARK, "ivf_qv", "ivf_cent")))
         assert "Window" not in plan, plan
         assert "HashAggregate" in plan, plan
+
+
+class TestBruteForceAnnPlanShape:
+    def test_only_capped_rows_reach_the_single_task(self, spark):
+        """The brute-force kernel ranks the whole capped vector set in
+        one task, but the scan, quantization and stride filter below it
+        stay parallel: a SinglePartition exchange sits between the scan
+        and the MapInPandas (a coalesce(1) there would be a narrow
+        dependency that pulls the whole scan into the one task)."""
+        from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce
+
+        plan = C.plan_text(ann_topk_bruteforce(spark, SF_DIR), mode="simple")
+        lines = plan.splitlines()
+        kernel = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+        assert "Exchange SinglePartition" in lines[kernel + 1], plan
+        assert any("Scan parquet" in ln for ln in lines[kernel + 2:]), plan
 
 
 class TestPackingPlanShape:

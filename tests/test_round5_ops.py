@@ -175,7 +175,7 @@ class TestFunnelStream:
         import os
         import shutil
 
-        from tests.conftest import SF_DIR
+        from tests.conftest import SF_DIR, drain_stream
         from tesseract_glue_spark.operators.relational import events_funnel_sql
         from tesseract_glue_spark.streaming.events import EVENTS_SCHEMA
         from tesseract_glue_spark.streaming.funnel_stream import funnel_state
@@ -212,7 +212,7 @@ class TestFunnelStream:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(420)
+        drain_stream(q)
         # completed funnels drop their state, so post-purchase events open a
         # SECOND funnel with strictly later timestamps; the batch query keeps
         # only the FIRST funnel, so reconcile by taking the EARLIEST snapshot
