@@ -132,7 +132,7 @@ def main() -> None:
         )
         from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
         from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce, ann_topk_ivf
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             html_main_content_spark,
             pdf_text_extract_spark,
             warc_main_content_spark,

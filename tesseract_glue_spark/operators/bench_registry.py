@@ -57,7 +57,7 @@ def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
             runner = spark_runner(builder, tables=tables)
         out[name] = (lambda r=runner: r(spark, sf_dir).count())
     out["ann_topk_ivf"] = lambda: ann_topk_ivf(spark, sf_dir).count()
-    from tesseract_glue_spark.operators.web import (
+    from tesseract_glue_spark.operators.crawl import (
         html_main_content_spark,
         pdf_text_extract_spark,
         warc_main_content_spark,

@@ -676,7 +676,7 @@ def ann_topk_ivf(spark, sf_dir: str, table: str = "embeddings"):
     values as data (K×dim literal arrays inside expressions remain a
     Janino codegen bomb — that constraint only rules out literals, not
     distributed frames) with ONE action per step, the same shape as the
-    connected-components / PageRank fixpoint loops."""
+    connected-components fixpoint loop (``dedup.dedup_components``)."""
     from uuid import uuid4
 
     tag = uuid4().hex[:12]  # per-invocation view names: concurrent IVF
@@ -718,97 +718,8 @@ def ann_topk_ivf(spark, sf_dir: str, table: str = "embeddings"):
         spark.catalog.dropTempView(qv_view)
         spark.catalog.dropTempView(cent_view)
         # qv's checkpoint blocks are released by the ContextCleaner once
-        # the frame is unreachable (same lifecycle as the CC/PageRank
+        # the frame is unreachable (same lifecycle as the components
         # per-round checkpoints); nothing persists across invocations
-
-
-# ---------------------------------------------------------------------------
-# Semantic near-dup over TEXT (SemDeDup-style composition stage).
-# ---------------------------------------------------------------------------
-
-# Deterministic feature-hash "embedding" of a text column: tokens hash
-# to a (dimension, sign) pair, the vector is the signed count per
-# dimension (the hashing trick). It is a stand-in for a model embedding
-# — the Spark-side plumbing (vectorize → hyperplane LSH → banded
-# candidate join → exact verify) is exactly what a real SemDeDup stage
-# runs; swapping in model vectors changes only the vectorizer CTE.
-SEM_DIM = 32
-# Bucket count per table is 2^planes: planes must scale ~log2(n) so
-# per-bucket occupancy (and thus the candidate-join fan-out) stays
-# bounded as the corpus grows — 8 planes = 256 buckets is sized for the
-# test corpora (≤5k docs → ~20 docs/bucket); a 10^12-doc run raises
-# SEM_PLANES_N, not the join strategy. 4 planes (16 buckets) measured
-# near-all-pairs at 500 docs and is excluded by
-# test_semantic_candidates_bounded.
-SEM_PLANES_N = 8
-SEM_TABLES = 6            # candidate iff bucket-equal in ANY table
-SEM_TAU_X10K = 9000       # cosine ≥ 0.90 → same-content pair
-_sem_rng = random.Random(999)
-SEM_PLANE_TABLES: list[list[list[int]]] = [
-    [[_sem_rng.randrange(-QUANT, QUANT + 1) for _ in range(SEM_DIM)]
-     for _ in range(SEM_PLANES_N)]
-    for _ in range(SEM_TABLES)
-]
-
-
-def _sem_vec_ctes(d: str, src: str) -> str:
-    """CTEs: ``src`` (doc_id, text) → ``sem_qv`` (doc_id, q, n2) via the
-    hashing trick. Token hash = engine-equal 32-bit md5 prefix; low bit
-    is the sign, the rest picks the dimension. Map-only in both engines
-    (one md5 per token, integer lambda arithmetic per dimension)."""
-    toks = D.ws_tokens(d, "text")
-    h = D.str_hash64(d, "t")
-    if d == D.SPARK:
-        th = f"transform(filter({toks}, t -> t <> ''), t -> {h})"
-        vec = (
-            f"transform(sequence(0, {SEM_DIM - 1}), i -> "
-            f"aggregate(th, CAST(0 AS BIGINT), (acc, h) -> acc + "
-            f"(CASE WHEN (h DIV 2) % {SEM_DIM} = i THEN "
-            f"(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) ELSE 0 END)))"
-        )
-    else:
-        th = f"list_transform(list_filter({toks}, t -> t <> ''), t -> {h})"
-        vec = (
-            f"list_transform(generate_series(0, {SEM_DIM - 1}), i -> "
-            f"CAST(coalesce(list_sum(list_transform(th, h -> "
-            f"CASE WHEN (h // 2) % {SEM_DIM} = i THEN "
-            f"CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END ELSE 0 END)), 0) AS BIGINT))"
-        )
-    return f"""
-    sem_th AS (SELECT doc_id, {th} AS th FROM {src}),
-    sem0 AS (SELECT doc_id, {vec} AS q FROM sem_th),
-    sem_qv AS (SELECT doc_id, q, {_dot(d, "q", "q", SEM_DIM)} AS n2 FROM sem0)
-    """.strip()
-
-
-def semantic_neardup_sql(d: str, src: str) -> str:
-    """Near-dup doc pairs by feature-hash cosine over ``src`` (doc_id,
-    text): multi-table hyperplane LSH candidates + exact integer verify
-    — same scale shape as :func:`cosine_neardup_lsh_sql` (candidates ∝
-    bucket collisions, never all-pairs; the only wide exchanges move
-    32-int vectors, not text)."""
-    bucket_union = _bucket_tables_src(d, SEM_PLANE_TABLES, "doc_id", "sem_qv")
-    cos = _cos_x10k(d, _dot(d, "a.q", "b.q", SEM_DIM), "a.n2", "b.n2")
-    return f"""
-    WITH {_sem_vec_ctes(d, src)},
-    buckets AS (
-{bucket_union}
-    ),
-    cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        FROM buckets x JOIN buckets y
-          ON x.table_no = y.table_no AND x.bucket = y.bucket
-         AND x.doc_id < y.doc_id
-    )
-    SELECT doc_a, doc_b, cos_x10k
-    FROM (
-        SELECT c.doc_a, c.doc_b, {cos} AS cos_x10k
-        FROM cand c
-        JOIN sem_qv a ON a.doc_id = c.doc_a
-        JOIN sem_qv b ON b.doc_id = c.doc_b
-    ) s
-    WHERE cos_x10k >= {SEM_TAU_X10K}
-    """.strip()
 
 
 SIMILARITY_OPS = {

@@ -1,10 +1,15 @@
 """Web-document main-content extraction: DOM-heuristic HTML boilerplate
-removal and from-scratch PDF text/layout parsing.
+removal.
 
 The north-star pipeline treats web documents as interleaved text+media:
-text spans carry markup (HTML) or typed binary (PDF) whose *main
-content* must be isolated from navigation/footer/ad chrome before the
-text enters a training corpus. Both kernels here are dependency-free
-(stdlib ``html.parser`` + ``zlib``) and run Arrow-batched inside
-``mapInPandas`` — never per-row Python UDFs.
+text spans carry HTML whose *main content* must be isolated from
+navigation/footer/ad chrome before the text enters a training corpus.
+The kernel here is dependency-free (one compiled-regex tokenizer, with
+stdlib ``html.parser`` as its differential reference) and runs
+Arrow-batched inside ``mapInPandas`` — never per-row Python UDFs.
+
+The archive readers :mod:`.pdf` (from-scratch PDF text/layout parse)
+and :mod:`.warc` (WARC/HTTP record framing) serve only the crawl-input
+gate queries of ``operators/crawl.py``; no extraction entry point
+reaches them.
 """

@@ -5,13 +5,14 @@ scan instead of stdlib ``html.parser``'s char-by-char ``goahead`` loop
 
 Semantics match :class:`tesseract_glue_spark.web.html_main._BlockParser`
 for everything the segmenter state machine observes — tag names
-lowercased, self-closing flag, ``href`` attribute (entity-unescaped),
-character references decoded in data, script/style contents skipped as
-CDATA — and a differential test in ``tests/test_web.py`` asserts
-block/link equality against the stdlib implementation on handwritten
-and hypothesis-generated markup. EOF recovery on TRUNCATED constructs
-(unclosed tag or comment at end of input) is tolerant but may split
-data differently from the stdlib parser; neither raises.
+lowercased, self-closing flag, character references decoded in data,
+script/style contents skipped as CDATA; no attribute is parsed, since
+the segmenter reads none — and a differential test in
+``tests/test_web.py`` asserts block equality against the stdlib
+implementation on handwritten and hypothesis-generated markup. EOF
+recovery on TRUNCATED constructs (unclosed tag or comment at end of
+input) is tolerant but may split data differently from the stdlib
+parser; neither raises.
 """
 
 from __future__ import annotations
@@ -29,19 +30,9 @@ _TAG_RE = re.compile(
     # whitespace is legal after '</' but NOT between '<' and a tag name
     # (stdlib treats '< b' as text) — keep that asymmetry exactly
     r"|</\s*([a-zA-Z][a-zA-Z0-9:_.-]*)[^>]*>"
-    r"|<([a-zA-Z][a-zA-Z0-9:_.-]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)(/?)\s*>",
+    r"|<([a-zA-Z][a-zA-Z0-9:_.-]*)(?:\"[^\"]*\"|'[^']*'|[^>\"'])*?(/?)\s*>",
     re.DOTALL,
 )
-_HREF_RE = re.compile(
-    r"""href\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.IGNORECASE
-)
-_ATTR_RE = re.compile(
-    r"""([a-zA-Z][a-zA-Z0-9:_-]*)\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""",
-)
-# tags whose FULL attr list is materialized (metadata carriers); for
-# everything else only <a href> is parsed — attr parsing on every tag
-# is what makes the stdlib path slow
-_ATTR_TAGS = frozenset({"meta", "link", "base", "img", "source"})
 _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script[^>]*>", re.IGNORECASE | re.DOTALL),
     "style": re.compile(r"</\s*style[^>]*>", re.IGNORECASE | re.DOTALL),
@@ -52,9 +43,8 @@ def feed_tokens(sink, html: str) -> None:
     """Drive a segmenter-state sink (handle_starttag / handle_endtag /
     handle_startendtag / handle_data) over ``html`` with one regex scan.
 
-    Only the ``href`` attribute is materialized (the segmenter needs
-    nothing else) — attr parsing for every tag is what makes the stdlib
-    path slow."""
+    Tags are delivered with no attributes (the segmenter reads none) —
+    attr parsing for every tag is what makes the stdlib path slow."""
     pos = 0
     n = len(html)
     while pos < n:
@@ -72,23 +62,17 @@ def feed_tokens(sink, html: str) -> None:
             pos = lt + 1
             continue
         pos = m.end()
-        close, name, attrs, selfclose = m.groups()
+        close, name, selfclose = m.groups()
         if close is not None:
             sink.handle_endtag(close.lower())
             continue
         if name is None:
             continue  # comment / CDATA / doctype / PI
         tag = name.lower()
-        if tag == "a":
-            href = _href_attr(attrs)
-        elif tag in _ATTR_TAGS:
-            href = _all_attrs(attrs)
-        else:
-            href = _NO_ATTRS
         if selfclose:
-            sink.handle_startendtag(tag, href)
+            sink.handle_startendtag(tag, ())
             continue
-        sink.handle_starttag(tag, href)
+        sink.handle_starttag(tag, ())
         cdata = _CDATA_CLOSE.get(tag)
         if cdata is not None:
             # script/style: raw text until the matching close tag (or
@@ -101,25 +85,3 @@ def feed_tokens(sink, html: str) -> None:
             pos = cm.end()
             sink.handle_endtag(tag)
 
-
-_NO_ATTRS: list[tuple[str, str]] = []
-
-
-def _all_attrs(attrs: str | None) -> list[tuple[str, str]]:
-    if not attrs:
-        return _NO_ATTRS
-    out = []
-    for m in _ATTR_RE.finditer(attrs):
-        raw = m.group(2) or m.group(3) or m.group(4) or ""
-        out.append((m.group(1).lower(), unescape(raw) if "&" in raw else raw))
-    return out
-
-
-def _href_attr(attrs: str | None) -> list[tuple[str, str]]:
-    if not attrs:
-        return _NO_ATTRS
-    m = _HREF_RE.search(attrs)
-    if m is None:
-        return _NO_ATTRS
-    raw = next(g for g in m.groups() if g is not None)
-    return [("href", unescape(raw) if "&" in raw else raw)]

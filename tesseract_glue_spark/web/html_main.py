@@ -60,13 +60,6 @@ LABEL_SHORT = "short"
 
 
 @dataclass
-class Link:
-    href: str
-    anchor: str      # whitespace-collapsed anchor text
-    chrome: bool     # opened inside nav/header/footer/aside
-
-
-@dataclass
 class Block:
     text: str          # whitespace-collapsed visible text
     raw_chars: int     # pre-collapse char count (density denominator)
@@ -81,7 +74,7 @@ class Block:
 
 
 class _SegmenterMixin:
-    """The block/link state machine, parser-agnostic: driven either by
+    """The block state machine, parser-agnostic: driven either by
     stdlib ``html.parser`` (reference) or the fast regex tokenizer
     (production — ``web/html_fast.py``). Tolerant of malformed markup;
     depth counters are clamped at zero so stray close tags cannot
@@ -89,7 +82,6 @@ class _SegmenterMixin:
 
     def _init_state(self) -> None:
         self.blocks: list[Block] = []
-        self.links: list[Link] = []
         self._parts: list[str] = []
         self._raw = 0
         self._link = 0
@@ -97,8 +89,6 @@ class _SegmenterMixin:
         self._chrome = 0
         self._a = 0
         self._tag = "body"
-        self._a_href = ""
-        self._a_parts: list[str] = []
 
     def _flush(self) -> None:
         text = " ".join("".join(self._parts).split())
@@ -124,9 +114,6 @@ class _SegmenterMixin:
             self._flush()
             self._tag = tag
         elif tag == "a":
-            if self._a == 0:  # nested <a> is invalid HTML: outer wins
-                self._a_href = next((v or "" for k, v in attrs if k == "href"), "")
-                self._a_parts = []
             self._a += 1
         elif tag == "br":
             self._parts.append(" ")
@@ -148,15 +135,6 @@ class _SegmenterMixin:
             self._tag = "div"  # heading identity does not outlive its close tag
         elif tag == "a":
             self._a = max(0, self._a - 1)
-            if self._a == 0 and not self._skip:
-                self.links.append(
-                    Link(
-                        href=self._a_href,
-                        anchor=" ".join("".join(self._a_parts).split()),
-                        chrome=self._chrome > 0,
-                    )
-                )
-                self._a_href, self._a_parts = "", []
 
     def handle_data(self, data: str) -> None:
         if self._skip or not data:
@@ -165,7 +143,6 @@ class _SegmenterMixin:
         self._raw += len(data)
         if self._a:
             self._link += len(data)
-            self._a_parts.append(data)
 
 
 class _BlockParser(_SegmenterMixin, HTMLParser):
@@ -199,15 +176,6 @@ def _parse(html: str, reference: bool = False):
     return p
 
 
-def extract_links(html: str) -> list[Link]:
-    """All outlinks in document order: (href, anchor text, chrome flag).
-    Links inside invisible subtrees (script/style/head) are skipped;
-    chrome means the link opened inside nav/header/footer/aside — the
-    link-graph builder downstream filters on it (boilerplate links are
-    site furniture, not endorsements)."""
-    return _parse(html).links
-
-
 def segment_blocks(html: str) -> list[Block]:
     """Parse HTML into classified text blocks (document order)."""
     blocks = _parse(html).blocks
@@ -229,162 +197,6 @@ def segment_blocks(html: str) -> list[Block]:
         ):
             blocks[i].label = LABEL_CONTENT
     return blocks
-
-
-class _MetadataSink:
-    """Head-metadata collector for :func:`extract_metadata` — a second,
-    tiny sink for the same fast tokenizer: the block segmenter SKIPS
-    ``<head>`` (invisible text), so index-grade metadata (title, meta
-    description, canonical URL) needs its own pass."""
-
-    def __init__(self) -> None:
-        self.title = ""
-        self.description = ""
-        self.canonical = ""
-        self._in_title = 0
-        self._title_parts: list[str] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag == "title":
-            self._in_title += 1
-        elif tag in ("meta", "link"):
-            self.handle_startendtag(tag, attrs)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if not attrs:
-            return
-        a = dict(attrs)
-        if tag == "meta" and not self.description:
-            if a.get("name", "").lower() == "description":
-                self.description = a.get("content", "")
-        elif tag == "link" and not self.canonical:
-            if a.get("rel", "").lower() == "canonical":
-                self.canonical = a.get("href", "")
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag == "title":
-            self._in_title = max(0, self._in_title - 1)
-            if not self.title:
-                self.title = " ".join("".join(self._title_parts).split())
-
-    def handle_data(self, data: str) -> None:
-        if self._in_title:
-            self._title_parts.append(data)
-
-
-def extract_metadata(html: str) -> dict:
-    """(title, description, canonical) of a page — first occurrence of
-    each wins, title whitespace-collapsed."""
-    from tesseract_glue_spark.web.html_fast import feed_tokens
-
-    sink = _MetadataSink()
-    feed_tokens(sink, html or "")
-    if not sink.title and sink._title_parts:  # unclosed <title> at EOF
-        sink.title = " ".join("".join(sink._title_parts).split())
-    return {
-        "title": sink.title,
-        "description": sink.description,
-        "canonical": sink.canonical,
-    }
-
-
-@dataclass
-class TableCell:
-    table_no: int
-    row_no: int
-    col_no: int
-    is_header: bool
-    text: str
-
-
-class _TableSink:
-    """Structured-table collector — a third sink for the same fast
-    tokenizer: emits one :class:`TableCell` per ``td``/``th``, with
-    0-based (table, row, col) coordinates in document order. Handles
-    the soup HTML actually serves: implicit cell/row closes (a new
-    ``<td>`` or ``<tr>`` closes the open one), stray text between rows
-    (dropped — it belongs to no cell), and nested tables (data inside
-    the inner table attributes to the INNER table's cells; the outer
-    cell is SUSPENDED while the inner table is open and resumes when it
-    closes, so ``<td>a<table>…</table>b</td>`` keeps BOTH 'a' and 'b'
-    — round-4 advisor finding: the old close-on-nest dropped 'b')."""
-
-    def __init__(self) -> None:
-        self.cells: list[TableCell] = []
-        self._n_tables = 0
-        self._stack: list[dict] = []  # per open table: row/col/cell state
-
-    def _top(self):
-        return self._stack[-1] if self._stack else None
-
-    def _close_cell(self) -> None:
-        t = self._top()
-        if t is None or t["cell"] is None:
-            return
-        text = " ".join("".join(t["buf"]).split())
-        self.cells.append(
-            TableCell(t["no"], t["row"], t["cell"], t["header"], text)
-        )
-        t["cell"] = None
-        t["buf"] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag == "table":
-            # nested table: the enclosing cell (if any) stays open on its
-            # own stack frame — handle_data targets the top frame, so text
-            # inside the inner table can't leak out, and text AFTER the
-            # inner table closes resumes buffering into the outer cell
-            self._stack.append(
-                {"no": self._n_tables, "row": -1, "col": -1, "cell": None,
-                 "header": False, "buf": []}
-            )
-            self._n_tables += 1
-            return
-        t = self._top()
-        if t is None:
-            return
-        if tag == "tr":
-            self._close_cell()
-            t["row"] += 1
-            t["col"] = -1
-        elif tag in ("td", "th"):
-            self._close_cell()
-            if t["row"] < 0:  # rowless cell: implicit first row
-                t["row"] = 0
-            t["col"] += 1
-            t["cell"] = t["col"]
-            t["header"] = tag == "th"
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        self.handle_starttag(tag, attrs)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in ("td", "th", "tr"):
-            self._close_cell()
-        elif tag == "table" and self._stack:
-            self._close_cell()
-            self._stack.pop()
-            t = self._top()
-            if t is not None and t["cell"] is not None:
-                t["buf"].append(" ")  # word boundary across the nested table
-
-    def handle_data(self, data: str) -> None:
-        t = self._top()
-        if t is not None and t["cell"] is not None:
-            t["buf"].append(data)
-
-
-def extract_tables(html: str) -> list[TableCell]:
-    """All table cells of a page in document order (0-based table/row/
-    col coordinates, header flag, whitespace-collapsed text)."""
-    from tesseract_glue_spark.web.html_fast import feed_tokens
-
-    sink = _TableSink()
-    feed_tokens(sink, html or "")
-    while sink._stack:  # unclosed tables at EOF: flush what we have
-        sink._close_cell()
-        sink._stack.pop()
-    return sink.cells
 
 
 def extract_main(html: str) -> dict:

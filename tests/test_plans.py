@@ -215,7 +215,7 @@ class TestWebPlanShape:
         produced and consumed inside the same Python worker call, so
         no exchange ever moves it and the stage pays ONE mapInPandas
         task protocol round-trip, not two."""
-        from tesseract_glue_spark.operators.web import pdf_text_extract_spark
+        from tesseract_glue_spark.operators.crawl import pdf_text_extract_spark
 
         plan = C.plan_text(pdf_text_extract_spark(spark, SF_DIR), mode="simple")
         assert plan.count("Exchange") == 1, plan
@@ -225,7 +225,7 @@ class TestWebPlanShape:
         """The HTML corpus scan reads only (doc_id, text); the stripper
         sits behind an explicit round-robin fan-out that must survive
         Catalyst (same trap as the OCR stage)."""
-        from tesseract_glue_spark.operators.web import html_main_content_spark
+        from tesseract_glue_spark.operators.crawl import html_main_content_spark
 
         df = html_main_content_spark(spark, SF_DIR)
         plan = C.plan_text(df)
@@ -266,13 +266,3 @@ class TestWebPlanShape:
             _fused_web_input(spans, pages, ExtractionConfig()), mode="simple"
         )
         assert plan.count("RoundRobinPartitioning") == 1, plan
-
-    def test_link_graph_partial_aggregates(self, spark):
-        """Distinct-count over href runs the two-phase partial shape
-        (per-(href,doc) partial below the exchange), never a global
-        single-partition aggregation."""
-        from tesseract_glue_spark.operators.web import web_link_graph_spark
-
-        plan = C.plan_text(web_link_graph_spark(spark, SF_DIR), mode="simple")
-        assert plan.count("HashAggregate") >= 3, plan
-        assert "SinglePartition" not in plan, plan

@@ -95,10 +95,7 @@ def test_rotation_partition_is_total():
     and the extraction pipeline — all of which must sit in the checked
     window alongside the 26 one-round-stale former tail entries. That
     leaves only the 18 genuinely-unchanged pure-SQL entries pinnable,
-    so the window is 58; under a strict 50-cap protocol this would
-    need VERDICT r5's retire/merge consolidation, which an
-    optimization round must not do (removing a declared query is
-    graded as a regression)."""
+    so the window is the first 49 of the 67 declared entries."""
     import __spark_entry__ as entry_mod
 
     q = entry_mod.queries()

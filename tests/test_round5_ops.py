@@ -134,7 +134,7 @@ class TestGopherRepetition:
 @pytest.fixture(scope="module")
 def politeness_out(spark):
     from tesseract_glue_spark.operators.registry import spark_runner
-    from tesseract_glue_spark.operators.web import host_politeness_sql
+    from tesseract_glue_spark.operators.crawl import host_politeness_sql
     from tests.conftest import SF_DIR
 
     return spark_runner(host_politeness_sql)(spark, SF_DIR).toPandas()
@@ -142,7 +142,7 @@ def politeness_out(spark):
 
 class TestHostPoliteness:
     def test_per_host_wave_concurrency_cap(self, politeness_out):
-        from tesseract_glue_spark.operators.web import HOST_PARALLELISM
+        from tesseract_glue_spark.operators.crawl import HOST_PARALLELISM
 
         per_wave = politeness_out.groupby(["host", "crawl_wave"]).size()
         assert (per_wave <= HOST_PARALLELISM).all()

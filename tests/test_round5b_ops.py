@@ -1,10 +1,9 @@
 """Semantic unit tests for the second batch of round-5 additions:
 the C4/Gopher-style filter chain (every rule branch + rule ordering on
-constructed docs), benchmark decontamination (known overlap, short-doc
-fallback, ambient-gram cap), and anchor-text aggregation (corpus
-contract + plan shape). Oracle parity for all three is covered by
-tests/test_entry.py::test_queries_match_oracles; these tests pin the
-SEMANTICS with known-answer inputs instead."""
+constructed docs) and benchmark decontamination (known overlap,
+short-doc fallback, ambient-gram cap). Oracle parity for both is
+covered by tests/test_entry.py::test_queries_match_oracles; these tests
+pin the SEMANTICS with known-answer inputs instead."""
 
 import hashlib
 
@@ -214,58 +213,3 @@ class TestFilterChainPlan:
         df = spark_runner(filter_chain_sql, tables=("documents",))(spark, SF_DIR)
         plan = C.plan_text(df)
         assert C.columns_pruned(plan, "documents", {"doc_id", "text"}), plan
-
-
-class TestAnchorText:
-    @pytest.fixture(scope="class")
-    def out(self, spark):
-        from tests.conftest import SF_DIR
-        from tesseract_glue_spark.operators.web import web_anchor_text_spark
-
-        df = web_anchor_text_spark(spark, SF_DIR)
-        return {r["href"]: r.asDict() for r in df.collect()}, df
-
-    def test_share_target_aggregates_three_anchors(self, out):
-        rows, _ = out
-        assert rows["#"]["anchors"] == "fb|rss|tw"  # sorted, pipe-joined
-        assert rows["#"]["n_unique_anchors"] == 3
-        assert rows["#"]["n_anchors"] == 3 * rows["#"]["n_docs"]
-
-    def test_ref_targets_single_anchor(self, out):
-        rows, _ = out
-        ref = [h for h in rows if h.startswith("/ref/")]
-        assert ref
-        assert all(rows[h]["anchors"] == "reference docs" for h in ref)
-
-    def test_doc_targets_prev_next_only(self, out):
-        rows, _ = out
-        doc = [h for h in rows if h.startswith("/doc/")]
-        assert doc
-        for h in doc:
-            assert set(rows[h]["anchors"].split("|")) <= {"next", "prev"}
-
-    def test_chrome_anchors_excluded(self, out):
-        rows, _ = out
-        for h in ("/", "/about", "/contact", "/terms", "/privacy"):
-            assert h not in rows
-
-    def test_plan_href_keyed_exchanges_only(self, out):
-        """The multi-countDistinct runs as Spark's two-phase Expand
-        strategy: exactly two hash exchanges, BOTH leading with href
-        (partial-distinct on (href, anchor, doc_id, gid), final on
-        href) — never a doc-keyed or all-to-all shuffle of the link
-        rows, and no nested-loop shapes. A FRESH (unexecuted) plan is
-        inspected — the fixture's collected frame would show the AQE
-        final+initial plan and double-count every exchange."""
-        from tests.conftest import SF_DIR
-        from tesseract_glue_spark.operators.web import web_anchor_text_spark
-
-        _, executed = out
-        plan = C.plan_text(web_anchor_text_spark(executed.sparkSession, SF_DIR))
-        import re
-
-        keys = re.findall(r"hashpartitioning\((\w+)#", plan)
-        assert keys and set(keys) == {"href"}, keys
-        assert len(keys) == 2, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan

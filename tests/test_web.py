@@ -1,9 +1,12 @@
-"""Main-content extraction: HTML DOM heuristics + PDF layout parse.
+"""Web extraction (HTML DOM-heuristic main content, alone and fused
+with OCR in ``extract_web_documents``) and the crawl-input readers of
+``operators/crawl.py`` (PDF and WARC codecs, robots/sitemap parsing,
+URL frontier).
 
 Kernel tests use handwritten adversarial fixtures (NOT the synthetic
-gate corpus) so the corpus generator and the parsers cannot mirror each
-other's bugs; the Spark tests drive the distributed path end-to-end
-against the DuckDB oracles at sf0.001.
+gate corpus) so the corpus generators and the parsers cannot mirror
+each other's bugs; the Spark tests drive the distributed path
+end-to-end against the DuckDB oracles at sf0.001.
 """
 
 from __future__ import annotations
@@ -79,53 +82,39 @@ class TestHtmlBlocks:
         assert extract_main("")["n_blocks"] == 0
         assert extract_main(None)["main_text"] == ""
 
-    def test_extract_links_order_chrome_and_invisible(self):
-        from tesseract_glue_spark.web.html_main import extract_links
-
+    def test_full_page_main_text_exact(self):
+        """Every segmenter rule on one page: the invisible meta head,
+        nav/aside/footer chrome, the heading exemption, an inline link
+        kept by its plain-text tail (density 14/59 < 1/3), and the
+        share bar and pager rejected by link density. The quoted ``>``
+        in the inline link's title must not end its tag."""
         html = (
-            '<nav><a href="/">home</a></nav>'
-            '<p><a href="/ref/7">reference &amp; docs</a></p>'
-            '<script>document.write(\'<a href="/x">no</a>\');</script>'
-            '<footer><a href="/t">terms</a></footer>'
+            "<html><head><title>doc 6: quarterly notes</title>"
+            '<meta name="description" content="about quarterly notes">'
+            '<link rel="canonical" href="https://example.org/doc/6">'
+            "<style>body{margin:0}</style><script>var x = 1;</script></head><body>"
+            '<nav><a href="/">home</a> <a href="/about">about</a> <a href="/contact">contact</a></nav>'
+            "<aside>limited time offer click here</aside>"
+            "<article><h1>quarterly notes</h1>"
+            '<p>tide log see also <a href="/ref/6" title="a > b">reference docs</a>'
+            " for background and details</p>"
+            "<p>the harbour froze early and the ferries stopped running</p>"
+            '<div><a href="#">tw</a> <a href="#">fb</a> <a href="#">rss</a></div>'
+            '<div><a href="/doc/55">prev</a> <a href="/doc/59">next</a></div>'
+            "</article>"
+            '<footer><a href="/terms">terms</a> <a href="/privacy">privacy</a></footer>'
+            "</body></html>"
         )
-        links = extract_links(html)
-        assert [(l.href, l.anchor, l.chrome) for l in links] == [
-            ("/", "home", True),
-            ("/ref/7", "reference & docs", False),
-            ("/t", "terms", True),
-        ]
-
-    def test_extract_links_nested_and_hrefless(self):
-        from tesseract_glue_spark.web.html_main import extract_links
-
-        links = extract_links('<p><a href="/o">out <a>inner</a> er</a></p><p><a name="x">anch</a></p>')
-        # nested <a> is invalid HTML: the outer link wins and absorbs the
-        # inner text; an href-less anchor still records with href=''
-        assert [(l.href, l.anchor) for l in links] == [("/o", "out inner er"), ("", "anch")]
-
-    def test_extract_metadata_first_wins_and_collapses(self):
-        from tesseract_glue_spark.web.html_main import extract_metadata
-
-        html = (
-            "<head><title>  One   Title </title>"
-            '<meta name="Description" content="first &amp; best">'
-            '<meta name="description" content="second">'
-            '<link rel="Canonical" href="https://c.org/1">'
-            '<link rel="canonical" href="https://c.org/2"></head>'
-            "<title>body title ignored (first wins)</title>"
+        r = extract_main(html)
+        assert r["main_text"] == (
+            "quarterly notes\n"
+            "tide log see also reference docs for background and details\n"
+            "the harbour froze early and the ferries stopped running"
         )
-        m = extract_metadata(html)
-        assert m == {
-            "title": "One Title",
-            "description": "first & best",
-            "canonical": "https://c.org/1",
-        }
-        assert extract_metadata("<p>no head</p>") == {
-            "title": "", "description": "", "canonical": ""
-        }
+        assert (r["n_blocks"], r["n_content_blocks"]) == (8, 3)
 
     def test_robots_rules_first_match_and_agent_section(self):
-        from tesseract_glue_spark.operators.web import ROBOTS_AGENT, ROBOTS_TXT
+        from tesseract_glue_spark.operators.crawl import ROBOTS_AGENT, ROBOTS_TXT
         from urllib.robotparser import RobotFileParser
 
         rp = RobotFileParser()
@@ -135,44 +124,10 @@ class TestHtmlBlocks:
         assert not rp.can_fetch(ROBOTS_AGENT, "https://example.org/doc/archive/5")
         assert not rp.can_fetch("otherbot", "https://example.org/doc/5/view")
 
-    def test_extract_tables_soup_and_nesting(self):
-        from tesseract_glue_spark.web.html_main import extract_tables
-
-        # implicit closes: no </td>, no </tr>
-        cells = extract_tables("<table><tr><th>h1<th>h2<tr><td>a<td>b</table>")
-        assert [(c.row_no, c.col_no, c.is_header, c.text) for c in cells] == [
-            (0, 0, True, "h1"), (0, 1, True, "h2"),
-            (1, 0, False, "a"), (1, 1, False, "b"),
-        ]
-        # nested table: inner cells are their own table; stray text
-        # between rows belongs to no cell; outside text never leaks in
-        # (inner cells emit first — the suspended outer cell closes later)
-        cells = extract_tables(
-            "<p>outside</p><table><tr>stray<td>x"
-            "<table><tr><td>inner</td></tr></table></td></tr></table>"
-        )
-        assert [(c.table_no, c.row_no, c.col_no, c.text) for c in cells] == [
-            (1, 0, 0, "inner"),
-            (0, 0, 0, "x"),
-        ]
-        # round-4 advisor case: outer-cell text AFTER the nested table
-        # closes is kept (suspend/resume), with a word boundary between
-        cells = extract_tables(
-            "<table><tr><td>a<table><tr><td>i</td></tr></table>b</td></tr></table>"
-        )
-        assert [(c.table_no, c.row_no, c.col_no, c.text) for c in cells] == [
-            (1, 0, 0, "i"),
-            (0, 0, 0, "a b"),
-        ]
-        # unclosed table at EOF still flushes its open cell
-        cells = extract_tables("<table><tr><td>tail")
-        assert [(c.row_no, c.col_no, c.text) for c in cells] == [(0, 0, "tail")]
-        assert extract_tables("<p>no tables here</p>") == []
-
     def test_robots_crawl_delay_and_sitemap_discovery(self):
         from urllib.robotparser import RobotFileParser
 
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             ROBOTS_AGENT,
             ROBOTS_CRAWL_DELAY_MS,
             ROBOTS_TXT,
@@ -184,7 +139,7 @@ class TestHtmlBlocks:
         assert rp.site_maps() == ["https://example.org/sitemap.xml"]
 
     def test_sitemap_index_entries_parsed(self):
-        from tesseract_glue_spark.operators.web import parse_sitemap_xml
+        from tesseract_glue_spark.operators.crawl import parse_sitemap_xml
 
         idx = (
             '<?xml version="1.0"?>'
@@ -210,7 +165,8 @@ class TestHtmlBlocks:
 
 class TestFastParserDifferential:
     """The regex tokenizer must observe exactly what stdlib html.parser
-    observes — blocks AND links — on realistic markup."""
+    observes — every block's (text, raw_chars, link_chars, tag, chrome)
+    — on realistic markup."""
 
     CASES = [
         f"<html><head><style>p{{x:1}}</style><script>if(1<2){{}}</script></head><body><p>{LONG}</p>",
@@ -229,10 +185,7 @@ class TestFastParserDifferential:
         from tesseract_glue_spark.web.html_main import _parse
 
         p = _parse(html, reference=reference)
-        return (
-            [(b.text, b.raw_chars, b.link_chars, b.tag, b.chrome) for b in p.blocks],
-            [(l.href, l.anchor, l.chrome) for l in p.links],
-        )
+        return [(b.text, b.raw_chars, b.link_chars, b.tag, b.chrome) for b in p.blocks]
 
     def test_handwritten_cases_identical(self):
         for html in self.CASES:
@@ -541,7 +494,7 @@ class TestWebSpark:
         return con.execute(sql).df()
 
     def test_html_main_content_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             html_main_content_oracle_sql,
             html_main_content_spark,
         )
@@ -551,7 +504,7 @@ class TestWebSpark:
         assert canonical_csv(got) == canonical_csv(exp)
 
     def test_pdf_text_extract_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             pdf_text_extract_oracle_sql,
             pdf_text_extract_spark,
         )
@@ -561,7 +514,7 @@ class TestWebSpark:
         assert canonical_csv(got) == canonical_csv(exp)
 
     def test_pdf_spans_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             pdf_spans_oracle_sql,
             pdf_spans_spark,
         )
@@ -570,23 +523,8 @@ class TestWebSpark:
         exp = self._oracle(pdf_spans_oracle_sql())
         assert canonical_csv(got) == canonical_csv(exp)
 
-    def test_html_outlinks_and_link_graph_match_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
-            html_outlinks_oracle_sql,
-            html_outlinks_spark,
-            web_link_graph_oracle_sql,
-            web_link_graph_spark,
-        )
-
-        got = html_outlinks_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(html_outlinks_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        got = web_link_graph_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_link_graph_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
     def test_web_sitemap_parse_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             web_sitemap_parse_oracle_sql,
             web_sitemap_parse_spark,
         )
@@ -599,35 +537,9 @@ class TestWebSpark:
         n_live = docs.where("doc_id % 7 <> 0").count()
         assert len(got) == n_live < docs.count()
 
-    def test_web_quality_report_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
-            web_quality_report_oracle_sql,
-            web_quality_report_spark,
-        )
-
-        got = web_quality_report_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_quality_report_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_html_metadata_and_robots_match_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
-            html_metadata_oracle_sql,
-            html_metadata_spark,
-            web_robots_filter_oracle_sql,
-            web_robots_filter_spark,
-        )
-
-        got = html_metadata_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(html_metadata_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        got = web_robots_filter_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_robots_filter_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        assert set(got["allowed"].unique()) == {0, 1}  # both verdicts exercised
-
     def test_web_url_normalize_matches_oracle(self, spark):
         from tesseract_glue_spark.operators.registry import oracle, spark_runner
-        from tesseract_glue_spark.operators.web import url_normalize_sql
+        from tesseract_glue_spark.operators.crawl import url_normalize_sql
 
         got = spark_runner(url_normalize_sql)(spark, SF_DIR).toPandas()
         exp = self._oracle(oracle(url_normalize_sql))
@@ -636,7 +548,7 @@ class TestWebSpark:
         assert row.url_norm == "https://example.com/Doc/0?q=1"  # case/port/fragment rules
 
     def test_warc_queries_match_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             warc_ingest_oracle_sql,
             warc_ingest_spark,
             warc_main_content_oracle_sql,
@@ -650,89 +562,13 @@ class TestWebSpark:
         exp = self._oracle(warc_main_content_oracle_sql())
         assert canonical_csv(got) == canonical_csv(exp)
 
-    def test_html_tables_extract_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
-            html_tables_extract_oracle_sql,
-            html_tables_extract_spark,
-        )
-
-        got = html_tables_extract_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(html_tables_extract_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        assert (got["is_header"] == 1).any() and (got["is_header"] == 0).any()
-
-    def test_web_dedup_extracted_matches_oracle(self, spark):
-        """Composed crawl dedup: DOM strip (real kernel) → MinHash-LSH
-        near-dup pairs over the EXTRACTED main content; oracle = same
-        LSH template over the strip contract's closed form."""
-        from tesseract_glue_spark.operators.web import (
-            web_dedup_extracted_oracle_sql,
-            web_dedup_extracted_spark,
-        )
-
-        got = web_dedup_extracted_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_dedup_extracted_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_web_dedup_semantic_matches_oracle(self, spark):
-        """SemDeDup-style stage: DOM strip (real kernel) → feature-hash
-        embedding → hyperplane-LSH candidates → exact integer cosine
-        verify; oracle = same template over the strip contract's
-        closed form."""
-        from tesseract_glue_spark.operators.web import (
-            web_dedup_semantic_oracle_sql,
-            web_dedup_semantic_spark,
-        )
-
-        got = web_dedup_semantic_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_dedup_semantic_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_semantic_candidates_bounded(self):
-        """The LSH candidate set must stay well below all-pairs — the
-        structural scale guarantee is the bucket equi-join (candidates
-        ∝ collisions). 4 planes/16 buckets measured near-all-pairs at
-        this corpus size and is excluded; also pins the join shape: no
-        cross join in the rendered SQL."""
-        from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators import similarity as S
-        from tesseract_glue_spark.operators.web import expected_main_text_expr
-
-        assert S.SEM_PLANES_N >= 8
-        sql = S.semantic_neardup_sql(
-            D.SPARK, "(SELECT doc_id, text FROM documents) sem_txt"
-        )
-        assert "CROSS JOIN" not in sql.upper()
-        assert "x.table_no = y.table_no AND x.bucket = y.bucket" in sql
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-        )
-        src = (
-            f"(SELECT doc_id, {expected_main_text_expr(D.DUCKDB)} AS text "
-            f"FROM documents) sem_txt"
-        )
-        bucket_union = " UNION ALL ".join(
-            f"SELECT doc_id, {t} AS table_no, "
-            f"{S._plane_bucket_expr(D.DUCKDB, planes)} AS bucket FROM sem_qv"
-            for t, planes in enumerate(S.SEM_PLANE_TABLES)
-        )
-        n_cand = con.execute(
-            f"WITH {S._sem_vec_ctes(D.DUCKDB, src)}, buckets AS ({bucket_union}) "
-            f"SELECT COUNT(*) FROM (SELECT DISTINCT x.doc_id, y.doc_id "
-            f"FROM buckets x JOIN buckets y ON x.table_no = y.table_no "
-            f"AND x.bucket = y.bucket AND x.doc_id < y.doc_id)"
-        ).fetchone()[0]
-        n_docs = con.execute("SELECT COUNT(*) FROM documents").fetchone()[0]
-        assert n_cand < 0.5 * n_docs * (n_docs - 1) / 2
-
     def test_web_sitemap_discover_matches_oracle(self, spark):
         """Two-level discovery: sitemapindex parse → child resolution →
         urlset parse; oracle = closed-form hosts×fanout equi-join. The
         commented index reference (host % 20 == 0, k=2) must be honored
         at the INDEX level, and commented url entries at the leaf
         level."""
-        from tesseract_glue_spark.operators.web import (
+        from tesseract_glue_spark.operators.crawl import (
             SM_IDX_COMMENTED_MOD,
             SM_IDX_MOD,
             web_sitemap_discover_oracle_sql,
@@ -759,7 +595,7 @@ class TestWebSpark:
         space) — n_fetches > 1 groups must exist, and totals must add
         back up to one row per document."""
         from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators.web import url_frontier_dedup_sql
+        from tesseract_glue_spark.operators.crawl import url_frontier_dedup_sql
 
         spark.read.parquet(f"{SF_DIR}/documents.parquet").createOrReplaceTempView(
             "documents"
@@ -770,128 +606,6 @@ class TestWebSpark:
         assert (got["n_fetches"] > 1).any()
         n_docs = spark.table("documents").count()
         assert int(got["n_fetches"].sum()) == n_docs
-
-    def test_web_pagerank_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.web import (
-            web_pagerank_oracle_sql,
-            web_pagerank_spark,
-        )
-
-        got = web_pagerank_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_pagerank_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        # the parsed graph must be non-trivial: propagation moved mass
-        assert got["rank_x1m"].nunique() > 1
-
-    def test_pr_round_semantics_tiny_graph(self):
-        """One damped round on a hand-computed 3-node graph: 1→2, 1→3,
-        2→3 (outdeg 2,1). Node 3 is DANGLING: its full r0 mass (SCALE)
-        is redistributed as SCALE div 3 to every vertex inside the
-        damped term. r0=SCALE each."""
-        from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators.web import (
-            PR_BASE,
-            PR_SCALE,
-            _dang_verts_sql,
-            _pr_round_sql,
-        )
-
-        con = duckdb.connect()
-        con.execute("CREATE TABLE verts AS SELECT * FROM (VALUES (1),(2),(3)) t(v)")
-        con.execute(
-            "CREATE TABLE edges AS SELECT * FROM (VALUES "
-            "(1,2,2),(1,3,2),(2,3,1)) t(src,dst,outdeg)"
-        )
-        con.execute(f"CREATE TABLE dangv AS {_dang_verts_sql('verts', 'edges')}")
-        assert [r[0] for r in con.execute("SELECT v FROM dangv").fetchall()] == [3]
-        con.execute(
-            f"CREATE TABLE r0 AS SELECT v, CAST({PR_SCALE} AS BIGINT) AS rank FROM verts"
-        )
-        got = dict(
-            con.execute(
-                _pr_round_sql(D.DUCKDB, "verts", "edges", "r0", "dangv")
-            ).fetchall()
-        )
-        half = PR_SCALE // 2
-        dshare = PR_SCALE // 3
-        assert got == {
-            1: PR_BASE + (85 * dshare) // 100,
-            2: PR_BASE + (85 * (half + dshare)) // 100,
-            3: PR_BASE + (85 * (half + PR_SCALE + dshare)) // 100,
-        }
-
-    @staticmethod
-    def _py_pagerank(verts, edges, rounds):
-        """Python reference of the exact integer round map (floor divs
-        in the same places as the SQL template)."""
-        from tesseract_glue_spark.operators.web import PR_BASE, PR_SCALE
-
-        n = len(verts)
-        srcs = {s for s, _, _ in edges}
-        dang = [v for v in verts if v not in srcs]
-        rank = {v: PR_SCALE for v in verts}
-        for _ in range(rounds):
-            dsum = sum(rank[v] for v in dang)
-            dshare = dsum // n
-            agg = {v: 0 for v in verts}
-            for s, t, outdeg in edges:
-                agg[t] += rank[s] // outdeg
-            new = {v: PR_BASE + (85 * (agg[v] + dshare)) // 100 for v in verts}
-            if new == rank:
-                return rank
-            rank = new
-        return rank
-
-    def test_pagerank_mass_conservation(self, spark):
-        """With the dangling term, total rank mass stays within floor
-        losses of N*SCALE every round (each vertex's two floor divs lose
-        < 2 units, each edge contribution < 1) — without it, a dangling
-        vertex's entire damped mass (up to 0.85*SCALE per vertex)
-        vanished per round."""
-        from tesseract_glue_spark.operators.web import (
-            PR_MAX_ROUNDS,
-            PR_SCALE,
-            web_pagerank_spark,
-        )
-
-        got = web_pagerank_spark(spark, SF_DIR).toPandas()
-        n = len(got)
-        total = int(got["rank_x1m"].sum())
-        # geometric accumulation of per-round floor losses is bounded by
-        # (E + 2N) * damp/(1-damp); the pager contract has E ≤ 2N
-        bound = (4 * n) * 6 * PR_MAX_ROUNDS  # generous, still ≪ N*SCALE/100
-        assert n * PR_SCALE - bound <= total <= n * PR_SCALE
-        assert total >= int(0.99 * n * PR_SCALE)
-
-    def test_pagerank_chain_graph_needs_more_than_three_rounds(self, spark):
-        """A depth-10 chain: rank must propagate ten hops. The unrolled
-        3-round variant (round-3 implementation) gets the tail wrong;
-        the capped fixpoint loop matches the exact reference."""
-        from tesseract_glue_spark.operators.web import PR_MAX_ROUNDS, pagerank_ranks
-
-        verts_list = list(range(11))
-        edges_list = [(i, i + 1, 1) for i in range(10)]
-        verts = spark.createDataFrame([(v,) for v in verts_list], "v long")
-        edges = spark.createDataFrame(edges_list, "src long, dst long, outdeg long")
-        ranks, rounds_run = pagerank_ranks(spark, verts, edges)
-        got = {r["v"]: r["rank"] for r in ranks.collect()}
-        want = self._py_pagerank(verts_list, edges_list, PR_MAX_ROUNDS)
-        assert got == want
-        want3 = self._py_pagerank(verts_list, edges_list, 3)
-        assert got != want3, "3 rounds must NOT suffice on a depth-10 chain"
-        assert rounds_run > 3
-
-    def test_pagerank_fixpoint_stop_engages(self, spark):
-        """An edgeless graph is ALL dangling: after one round every rank
-        is exactly BASE + 0.85*SCALE = SCALE again, so the loop must
-        detect the fixpoint and stop at round 1, not run the full cap."""
-        from tesseract_glue_spark.operators.web import PR_SCALE, pagerank_ranks
-
-        verts = spark.createDataFrame([(v,) for v in range(5)], "v long")
-        edges = spark.createDataFrame([], "src long, dst long, outdeg long")
-        ranks, rounds_run = pagerank_ranks(spark, verts, edges)
-        assert rounds_run == 1
-        assert {r["rank"] for r in ranks.collect()} == {PR_SCALE}
 
     def test_extract_web_flat_matches_oracle(self, spark):
         """Composed flagship: HTML-wrapped text spans + OCR'd media
@@ -985,7 +699,7 @@ class TestWebSpark:
         assert texts.where("t <> ''").count() > 0
 
     def test_pdf_decode_error_yields_placeholder_row(self, spark):
-        from tesseract_glue_spark.operators.web import pdf_extract_text
+        from tesseract_glue_spark.operators.crawl import pdf_extract_text
 
         docs = spark.createDataFrame(
             [(1, bytearray(b"not a pdf")), (2, bytearray(encode_pdf([[(72, 700, "fine")]])))],
