@@ -1,9 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline at sf0.001.
-``queries()`` / ``oracle_sql()`` pair each implemented operator with a
-DuckDB-checkable oracle at sf0.01 (driver compares row-count + schema +
-order-insensitive value-hash).
+``queries()`` / ``oracle_sql()`` pair each of the 50 implemented
+operators with a DuckDB-checkable oracle at sf0.01 (driver compares
+row-count + schema + order-insensitive value-hash). The driver contract
+checks at most 50 queries, so every entry is inside that window and the
+order of ``queries()`` carries no meaning;
+``tests/test_entry.py::test_queries_match_oracles`` keeps it that way.
 
 The interleaved corpus (BASELINE.json input_hint schema) is derived
 deterministically from the driver's flat ``documents`` parquet via the
@@ -83,7 +86,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def _sql_ops() -> dict[str, tuple]:
     """All dual-dialect SQL operators: name -> (builder, tables)."""
     from tesseract_glue_spark.operators.dedup import DEDUP_OPS
-    from tesseract_glue_spark.operators.relational import RELATIONAL_OPS
     from tesseract_glue_spark.operators.similarity import SIMILARITY_OPS
     from tesseract_glue_spark.operators.text import TEXT_OPS
     from tesseract_glue_spark.operators.crawl import WEB_SQL_OPS
@@ -97,8 +99,6 @@ def _sql_ops() -> dict[str, tuple]:
         ops[name] = (b, ("documents",))
     for name, b in SIMILARITY_OPS.items():
         ops[name] = (b, ("embeddings",))
-    for name, (b, tabs) in RELATIONAL_OPS.items():
-        ops[name] = (b, tabs)
     return ops
 
 
@@ -122,13 +122,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_pixel_stats": image_pixel_stats_spark,
         "image_features_blank": image_features_blank_spark,
     }
-    from tesseract_glue_spark.operators.multimodal import (
-        audio_features_fake_spark,
-        video_frames_fake_spark,
-    )
-
-    q["audio_features_fake"] = audio_features_fake_spark
-    q["video_frames_fake"] = video_frames_fake_spark
     from tesseract_glue_spark.operators.registry import cached_shingles_runner
     from tesseract_glue_spark.operators.similarity import ann_topk_ivf
 
@@ -186,100 +179,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce
 
     q["emb_ann_topk_brute"] = ann_topk_bruteforce
-    return _verification_rotation(q)
-
-
-# Entries whose code is untouched since their last green driver check —
-# safe to sit past the driver's 50-query cap for ONE round (they rotate
-# back in next round; nothing may go two rounds unverified). Round-6
-# tail: the r6 optimization round left the text family, the four
-# round-5 rel_* additions, the two round-5 dedup snapshot/decon ops,
-# and the host-politeness SQL untouched (rendered Spark SQL AND oracle
-# byte-identical to their r05-green state, pin-checked); everything
-# the optimization touched — the dedup pair family, the whole
-# emb_*/similarity family, the mapInPandas web operators, and the
-# extraction pipeline — sits in the verified window, behind the 26
-# formerly-tail entries that are at the one-round staleness limit and
-# lead queries() (round-5 verdict ask #1). All 18 are dual-dialect SQL
-# builders whose rendered SQL is hash-pinned by
-# tests/test_rotation_guard.py — any edit to a tail operator fails CI
-# until it is rotated back into the verified window.
-_ROTATION_TAIL = (
-    "text_token_stats",
-    "text_quality",
-    "text_langid",
-    "text_fingerprint",
-    "text_boilerplate_strip",
-    "text_pii_scrub",
-    "text_sample_stratified",
-    "text_pack_sequences",
-    "text_dup_spans",
-    "text_gopher_repetition",
-    "text_filter_chain",
-    "rel_retained_users",
-    "rel_events_asof_join",
-    "rel_events_range_join",
-    "rel_events_funnel",
-    "dedup_incremental",
-    "dedup_decontaminate",
-    "web_host_politeness",
-)
-
-# Second tail class: NON-SQL (DataFrame-function) entries allowed past
-# the cap for one round, pinned by rendered DuckDB oracle + the source
-# bytes of every module in the declared dependency closure. EMPTY for
-# round 6: the optimization touched the extraction/imaging/web
-# mapInPandas machinery, so every DataFrame-function entry (including
-# the six formerly-tail image/pages/audio/video entries, one round
-# stale after r05) is in the verified window.
-_ROTATION_TAIL_FN: dict[str, tuple[str, ...]] = {}
-
-# Round-5's 26 tail entries — ALL missed the r05 driver check (green
-# r04, pins verified unchanged through r05) and are at the one-round
-# staleness limit: they MUST lead queries() this round (round-5
-# verdict ask #1).
-_ROTATION_LEAD = (
-    "rel_pricing_summary",
-    "rel_top_customers",
-    "rel_order_rank_window",
-    "rel_events_hourly",
-    "rel_nation_rollup",
-    "rel_user_sessions",
-    "rel_value_quantiles",
-    "rel_top_parts",
-    "rel_supplier_nations",
-    "rel_pricing_rollup",
-    "rel_events_pivot",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_minhash_survivors",
-    "web_url_normalize",
-    "web_frontier_dedup",
-    "image_resize_dims",
-    "image_pixel_stats",
-    "image_features_blank",
-    "pages_metadata",
-    "audio_features_fake",
-    "video_frames_fake",
-)
-
-
-def _verification_rotation(q: dict) -> dict:
-    """Least-recently-verified entries lead ``queries()``: with 67
-    registered and a driver window that has historically covered the
-    first 50, insertion order decides coverage. Round 6: the 26 entries
-    that sat out the r05 check lead; every operator the optimization
-    round touched stays in the window; only the 18 pure-SQL entries
-    whose rendered SQL is byte-identical to their r05-green state
-    (hash-pinned in ``rotation_tail_pins.json``) trail past the cap."""
-    lead = [n for n in _ROTATION_LEAD if n in q]
-    tail = [n for n in (*_ROTATION_TAIL, *_ROTATION_TAIL_FN) if n in q]
-    mid = [n for n in q if n not in set(lead) | set(tail)]
-    return {n: q[n] for n in (*lead, *mid, *tail)}
+    return q
 
 
 def oracle_sql() -> dict[str, str]:
@@ -312,13 +212,6 @@ def oracle_sql() -> dict[str, str]:
     o["image_resize_dims"] = image_resize_dims_oracle_sql()
     o["image_pixel_stats"] = image_pixel_stats_oracle_sql()
     o["image_features_blank"] = image_features_blank_oracle_sql()
-    from tesseract_glue_spark.operators.multimodal import (
-        audio_features_fake_oracle_sql,
-        video_frames_fake_oracle_sql,
-    )
-
-    o["audio_features_fake"] = audio_features_fake_oracle_sql()
-    o["video_frames_fake"] = video_frames_fake_oracle_sql()
     o["extract_quality_report"] = extract_quality_report_oracle_sql()
     from tesseract_glue_spark.operators.similarity import ann_topk_ivf_oracle_sql
 

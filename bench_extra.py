@@ -122,11 +122,9 @@ def main() -> None:
             ann_topk_bruteforce_sql,
             ann_topk_lsh_sql,
             cosine_neardup_lsh_sql,
-            events_hourly_sql,
             langid_sql,
             minhash_lsh_pairs_sql,
             ngram_jaccard_pairs_sql,
-            pricing_summary_sql,
             quality_sql,
             simhash_pairs_sql,
         )
@@ -151,8 +149,6 @@ def main() -> None:
                 ("documents",),
                 False,
             ),
-            "rel_pricing_summary": (pricing_summary_sql, ("lineitem",), False),
-            "rel_events_hourly": (events_hourly_sql, ("events",), False),
         }
         for name, (builder, tables, cached) in specs.items():
             if cached == "kernel":

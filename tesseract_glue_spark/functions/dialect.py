@@ -138,13 +138,6 @@ def array_distinct_len(d: str, expr: str) -> str:
     return f"len(list_distinct({expr}))"
 
 
-def array_slice(d: str, arr: str, pos1: str, length: int) -> str:
-    """1-based slice of `length` elements starting at pos1."""
-    if d == SPARK:
-        return f"slice({arr}, {pos1}, {length})"
-    return f"({arr})[({pos1}):(({pos1}) + {length - 1})]"
-
-
 def array_join(d: str, arr: str, sep: str = " ") -> str:
     if d == SPARK:
         return f"array_join({arr}, '{sep}')"
@@ -155,13 +148,6 @@ def array_min(d: str, arr: str) -> str:
     if d == SPARK:
         return f"array_min({arr})"
     return f"list_aggregate({arr}, 'min')"
-
-
-def transform_seq(d: str, lo: str, hi: str, var: str, body: str) -> str:
-    """[body(var) for var in lo..hi] (inclusive bounds, both engines)."""
-    if d == SPARK:
-        return f"transform(sequence({lo}, {hi}), {var} -> {body})"
-    return f"list_transform(generate_series({lo}, {hi}), {var} -> {body})"
 
 
 def int_div(d: str, a: str, b: str) -> str:
@@ -177,30 +163,9 @@ def scaled_ratio(d: str, num: str, den: str, scale: int = 10000) -> str:
     )
 
 
-def epoch_us(d: str, col: str) -> str:
-    """Microseconds since epoch of a naive (TIMESTAMP_NTZ) timestamp
-    column, INDEPENDENT of the Spark session timezone. NTZ→NTZ
-    ``timestampdiff`` is pure wall-clock arithmetic; the previous form
-    ``unix_micros(CAST(ts AS TIMESTAMP))`` shifts the value by the
-    session offset, so oracle equality with DuckDB's naive
-    ``epoch_us(ts)`` held only under a UTC session (round-4 advisor
-    finding; verified invariant under America/Chicago)."""
-    if d == SPARK:
-        return (
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', "
-            f"CAST({col} AS TIMESTAMP_NTZ))"
-        )
-    return f"CAST(epoch_us({col}) AS BIGINT)"
-
-
 def bit_count(d: str, expr: str) -> str:
     return f"bit_count({expr})"
 
 
 def bitwise_xor(d: str, a: str, b: str) -> str:
     return f"({a} ^ {b})" if d == SPARK else f"xor({a}, {b})"
-
-
-def quote_ident(d: str, name: str) -> str:
-    """Quote an identifier that collides with a keyword (e.g. offset)."""
-    return f"`{name}`" if d == SPARK else f'"{name}"'

@@ -26,6 +26,20 @@ from tesseract_glue_spark.errors import ImageDecodeError
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
+MAX_PIXELS = 72_000_000
+"""Largest ``width * height`` a page may declare in IHDR; a larger page
+is rejected before any IDAT is inflated. It admits a 600-dpi A3 scan
+(7016 x 9922 = 69.6 Mpx) with a little margin.
+
+Worst case at the cap is an all-ink page with preprocessing on: 18
+bytes per pixel live at once (the gray page and the ink mask at 1 byte
+each, plus the two int64 index arrays of ``np.nonzero`` in
+``kernels.estimate_shear``; the ``tracemalloc`` peak of
+``ocr_one_page`` on a 6 Mpx all-ink page is 18.0 B/px), so about
+1.3 GB in one Python worker. Without the cap, a 16000 x 16000 page
+would need about 4.6 GB, and a few hundred KB of deflate stream can
+declare one."""
+
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
     return (
@@ -114,6 +128,10 @@ def decode_png(data: bytes) -> np.ndarray:
                     raise ImageDecodeError(
                         f"unsupported PNG variant depth={depth} color={ctype} interlace={interlace}"
                     )
+                if w * h > MAX_PIXELS:
+                    raise ImageDecodeError(
+                        f"PNG {w}x{h} exceeds the {MAX_PIXELS}-pixel cap"
+                    )
             elif tag == b"IDAT":
                 idat += body
             elif tag == b"IEND":
@@ -121,10 +139,13 @@ def decode_png(data: bytes) -> np.ndarray:
             pos += 12 + length
         if w <= 0 or h <= 0:
             raise ImageDecodeError("missing IHDR")
-        raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-        if raw.size != h * (w + 1):
+        # inflate at most one byte past the declared size: a deflate
+        # bomb stops there instead of filling memory
+        inflater = zlib.decompressobj()
+        raw = inflater.decompress(bytes(idat), h * (w + 1) + 1)
+        if len(raw) != h * (w + 1) or not inflater.eof:
             raise ImageDecodeError("IDAT size mismatch")
-        return _unfilter(raw, w, h)
+        return _unfilter(np.frombuffer(raw, dtype=np.uint8), w, h)
     except ImageDecodeError:
         raise
     except Exception as exc:  # zlib/struct errors → decode error taxonomy

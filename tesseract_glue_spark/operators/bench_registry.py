@@ -1,8 +1,8 @@
 """Operator benchmarks picked up by bench.py (name -> zero-arg thunk).
 
 Covers the heavy non-extraction families: MinHash-LSH dedup, n-gram
-Jaccard, SimHash pairs, brute-force + LSH ANN over embeddings, and the
-windowed relational aggregation.
+Jaccard, SimHash pairs, brute-force + LSH ANN over embeddings, text
+quality + language id, and the crawl-input HTML/PDF/WARC readers.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from tesseract_glue_spark.operators.dedup import (
     simhash_pairs_sql,
 )
 from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
-from tesseract_glue_spark.operators.relational import events_hourly_sql, pricing_summary_sql
 from tesseract_glue_spark.operators.similarity import (
     ann_topk_bruteforce_sql,
     ann_topk_lsh_sql,
@@ -44,8 +43,6 @@ def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
             f"FROM ({quality_sql(d)}) q JOIN ({langid_sql(d)}) l ON q.doc_id = l.doc_id",
             ("documents",),
         ),
-        "rel_pricing_summary": (pricing_summary_sql, ("lineitem",)),
-        "rel_events_hourly": (events_hourly_sql, ("events",)),
     }
     out: dict[str, Callable[[], int]] = {}
     for name, (builder, tables) in specs.items():

@@ -291,7 +291,7 @@ def dup_spans_sql(d: str, table: str = "documents") -> str:
     """Exact substring-duplication spans — the span-level output a
     dedup pipeline needs to CUT repeated passages instead of dropping
     whole documents (the "exact substring dedup" stage of modern
-    training-data pipelines, re-expressed relationally).
+    training-data pipelines, re-expressed in SQL).
 
     Plan: normalized word {DUP_SPAN_W}-gram windows are hashed
     (codegen'd explode-index projection, same formulation as

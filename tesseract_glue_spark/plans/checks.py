@@ -78,10 +78,6 @@ def count_exchanges(plan: str) -> int:
     )
 
 
-def has_broadcast_join(plan: str) -> bool:
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def has_wholestage_codegen(plan: str) -> bool:
     return "WholeStageCodegen" in plan or "*(" in plan
 

@@ -16,34 +16,21 @@ def canonical_csv(pdf):
     return pdf.to_csv(index=False)
 
 
-def drain_stream(query, timeout_s=420):
-    """Wait until a started ``trigger(availableNow=True)`` query has
-    consumed all of its input, then stop it; a query that failed
-    re-raises its error here.
+def streamed_png(w, h, raw_chunks):
+    """An 8-bit grayscale PNG declaring ``w`` x ``h`` whose IDAT is the
+    deflate of ``raw_chunks`` (filtered scanline bytes, chunk by chunk).
+    A chunked ``compressobj`` never holds the raw image, so a test can
+    build a page far larger than it could afford to render — or one
+    whose IDAT inflates to more than its header declares."""
+    import struct
+    import zlib
 
-    A stateful query with a processing-time timeout never ends by
-    itself under availableNow: its operator asks for a no-data batch on
-    every trigger to check timeouts, so ``awaitTermination`` would wait
-    out its whole timeout and leave the query running through the tests
-    that follow. A batch that moves no source offset is such a no-data
-    batch, and availableNow runs one only after every available offset
-    is committed — so its progress report marks the drained point."""
-    import time
+    from tesseract_glue_spark.imaging.png import _PNG_SIG, _chunk
 
-    def drained(p):
-        return p["sources"] and all(s["startOffset"] == s["endOffset"] for s in p["sources"])
-
-    deadline = time.monotonic() + timeout_s
-    try:
-        while query.isActive and time.monotonic() < deadline:
-            if any(drained(p) for p in query.recentProgress):
-                break
-            time.sleep(0.2)
-    finally:
-        query.stop()
-    err = query.exception()
-    if err is not None:
-        raise err
+    deflater = zlib.compressobj(9)
+    idat = b"".join(deflater.compress(c) for c in raw_chunks) + deflater.flush()
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
 @pytest.fixture(scope="session")

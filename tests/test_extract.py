@@ -318,6 +318,45 @@ class TestRobustness:
         assert len(out) == 1
         assert [s["offset"] for s in out[0]["spans"]] == list(range(1500))
 
+    def test_over_cap_page_degrades_only_its_doc(self, spark, docs, pages):
+        """A white page declaring just over ``png.MAX_PIXELS`` pixels is
+        rejected from its header: its doc reads ``partial``, every other
+        doc keeps its status, and the job completes (local mode runs each
+        task once, so a task failure would fail the job). Without the cap
+        the page inflates to 72 MB, decodes, and its doc reads ``ok``."""
+        from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA, PAGES_SCHEMA
+        from tesseract_glue_spark.imaging.png import MAX_PIXELS
+        from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC
+        from tests.conftest import streamed_png
+
+        w = 10_000
+        h = MAX_PIXELS // w + 1
+        white_row = b"\x00" + b"\xff" * w
+        empty_payload = PAYLOAD_MAGIC + bytes(4)  # stub codec: empty text
+        first = b"\x00" + empty_payload + b"\xff" * (w - len(empty_payload))
+        page = streamed_png(
+            w, h, [first] + [white_row * 100] * ((h - 1) // 100) + [white_row * ((h - 1) % 100)]
+        )
+        big_doc = spark.createDataFrame(
+            [(990001, [("text", "cover", "", 0), ("media", "", "over_cap", 1)])],
+            schema=DOCUMENTS_SCHEMA,
+        )
+        big_page = spark.createDataFrame([("over_cap", page, w, h, "")], schema=PAGES_SCHEMA)
+        few = docs.where(F.col("doc_id") < 40)
+        cfg = ExtractionConfig()
+        base = {
+            r["doc_id"]: r["status"]
+            for r in extract.extract_documents(few, pages, cfg).collect()
+        }
+        got = {
+            r["doc_id"]: r["status"]
+            for r in extract.extract_documents(
+                few.unionByName(big_doc), pages.unionByName(big_page), cfg
+            ).collect()
+        }
+        assert got.pop(990001) == "partial"
+        assert got == base and "ok" in base.values()
+
     def test_extreme_skew_doc(self, spark, pages):
         """One document with thousands of spans (the 10^12-scale hot-key
         shape): salted reassembly must still reconstruct exact order."""

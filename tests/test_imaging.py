@@ -59,6 +59,55 @@ class TestPng:
         data = encode_png(img)
         with pytest.raises(ImageDecodeError):
             decode_png(data[: len(data) // 2])
+        # whole chunks, but the deflate stream stops before its checksum
+        from tests.conftest import streamed_png
+
+        whole = streamed_png(10, 10, [bytes(11 * 10)])
+        idat_len = int.from_bytes(whole[33:37], "big")
+        cut = (
+            whole[:33] + (idat_len - 4).to_bytes(4, "big") + whole[37 : 41 + idat_len - 4]
+            + b"\0\0\0\0" + whole[45 + idat_len :]
+        )
+        assert decode_png(whole).shape == (10, 10)
+        with pytest.raises(ImageDecodeError):
+            decode_png(cut)
+
+    def test_deflate_bomb_inflates_bounded(self):
+        """A 100x100 header over an IDAT that inflates to 64 MB: decode
+        stops one byte past the declared size instead of inflating it
+        all."""
+        import tracemalloc
+
+        from tests.conftest import streamed_png
+
+        bomb = streamed_png(100, 100, (bytes(1 << 20) for _ in range(64)))
+        assert len(bomb) < 256 << 10
+        tracemalloc.start()
+        try:
+            with pytest.raises(ImageDecodeError, match="size mismatch"):
+                decode_png(bomb)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 1 << 20, peak
+
+    def test_pixel_cap_checked_before_inflate(self, monkeypatch):
+        import zlib
+
+        from tesseract_glue_spark.imaging import png
+        from tests.conftest import streamed_png
+
+        assert 7016 * 9922 <= png.MAX_PIXELS  # a 600-dpi A3 page decodes
+        w = 10_000
+        h = png.MAX_PIXELS // w + 1
+        page = streamed_png(w, h, [b"\x00" + b"\xff" * w])
+
+        def no_inflate(*_a, **_k):
+            raise AssertionError("inflated an over-cap page")
+
+        monkeypatch.setattr(zlib, "decompressobj", no_inflate)
+        with pytest.raises(ImageDecodeError, match="pixel cap"):
+            decode_png(page)
 
 
 class TestJp2:

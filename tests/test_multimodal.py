@@ -1,5 +1,5 @@
-"""Multimodal operator tests: real image path, fake/stubbed audio-video
-paths (schemas + distributed plumbing exercised either way)."""
+"""Image operator tests: header metadata, pixel features and resize over
+the rendered page store."""
 
 import pytest
 
@@ -43,30 +43,3 @@ class TestImages:
             arr = decode_png(bytes(r["image"]))
             assert max(arr.shape) <= 64
             assert arr.shape == (r["height"], r["width"])
-
-
-class TestStubbedModalities:
-    def test_audio_fake_deterministic(self, pages):
-        from tesseract_glue_spark.operators.multimodal import audio_features
-
-        a = {r["media_ref"]: r for r in audio_features(pages, backend="fake").collect()}
-        b = {r["media_ref"]: r for r in audio_features(pages, backend="fake").collect()}
-        assert a.keys() == b.keys()
-        k = next(iter(a))
-        assert a[k]["mfcc"] == b[k]["mfcc"] and len(a[k]["mfcc"]) == 13
-
-    def test_audio_real_backend_raises(self, spark, pages):
-        from tesseract_glue_spark.operators.multimodal import audio_features
-
-        with pytest.raises(Exception, match="NotImplementedError|external codecs"):
-            audio_features(pages.limit(1), backend="real").collect()
-
-    def test_video_frame_fanout(self, pages):
-        from tesseract_glue_spark.operators.multimodal import video_frame_sample
-
-        frames = video_frame_sample(pages.limit(50), backend="fake").collect()
-        assert len(frames) >= 50  # ≥1 frame per input row
-        by_ref: dict[str, list[int]] = {}
-        for r in frames:
-            by_ref.setdefault(r["media_ref"], []).append(r["frame_no"])
-        assert all(sorted(v) == v or sorted(v) == sorted(set(v)) for v in by_ref.values())

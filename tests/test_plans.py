@@ -168,46 +168,6 @@ class TestPackingPlanShape:
         assert "SinglePartition" not in plan, plan
 
 
-class TestRelationalPlanShape:
-    def test_partial_aggregation_before_shuffle(self, spark):
-        """TPC-H Q1 shape: map-side partial HashAggregate must appear
-        below the exchange (two HashAggregate levels)."""
-        from tesseract_glue_spark.operators.registry import spark_runner
-        from tesseract_glue_spark.operators.relational import pricing_summary_sql
-
-        df = spark_runner(pricing_summary_sql, tables=("lineitem",))(spark, SF_DIR)
-        plan = C.plan_text(df)
-        assert plan.count("HashAggregate") >= 2, plan
-
-    def test_dim_join_broadcasts(self, spark):
-        """customer⋈nation⋈region: the small dims broadcast."""
-        from tesseract_glue_spark.operators.registry import spark_runner
-        from tesseract_glue_spark.operators.relational import nation_rollup_sql
-
-        df = spark_runner(nation_rollup_sql, tables=("customer", "nation", "region"))(
-            spark, SF_DIR
-        )
-        assert C.has_broadcast_join(C.plan_text(df))
-
-
-class TestRangeJoinPlanShape:
-    def test_range_join_is_binned_equi_join(self, spark):
-        """rel_events_range_join must plan as explode-to-bins + hash/SMJ
-        equi-join — never the per-key nested loop Catalyst falls back to
-        for a raw BETWEEN inequality join (quadratic at 10^12 events)."""
-        from tesseract_glue_spark.operators.registry import spark_runner
-        from tesseract_glue_spark.operators.relational import events_range_join_sql
-
-        df = spark_runner(events_range_join_sql, tables=("events",))(spark, SF_DIR)
-        plan = C.plan_text(df)
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "Generate" in plan, plan  # interval → bin explode
-        assert any(
-            j in plan for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-        ), plan
-
-
 class TestWebPlanShape:
     def test_pdf_pipeline_single_blob_shuffle(self, spark):
         """synthesize→parse is ONE fused kernel (r6): exactly one
