@@ -12,7 +12,7 @@ The interleaved corpus (BASELINE.json input_hint schema) is derived
 deterministically from the driver's flat ``documents`` parquet via the
 truth contract in ``tesseract_glue_spark/functions/truth.py`` — the
 same rules are emitted as DuckDB SQL for the oracles, so even the OCR
-stage (real PNG render → decode → preprocess → stub recognize) is
+stage (real PNG render → decode → grayscale → stub recognize) is
 value-checked end-to-end.
 """
 

@@ -25,7 +25,11 @@ class ExtractionConfig:
     backend: str = "stub"            # 'stub' | 'tesseract'
     lang: str = "eng"
     tessdata_path: str | None = None  # required for backend='tesseract'
-    preprocess: bool = True           # grayscale→otsu→deskew→segment
+    # opt-in layout analysis (Otsu → deskew → XY-cut) before recognize;
+    # its products (n_zones, shear) reach only the OCR result rows, so
+    # the default path recognizes the raw grayscale page, as both
+    # backends and the reference's PSM_AUTO_OSD expect
+    preprocess: bool = False
     force_unhealthy: bool = False     # simulate bad engine init (reader2.cpp:19-23)
     # scale knobs
     ocr_partitions: int | None = None     # OCR stage tasks; None → 1 per core (extract.fan_out)

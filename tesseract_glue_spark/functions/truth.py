@@ -3,8 +3,8 @@
 The synthetic interleaved corpus is derived *deterministically* from the
 driver's flat ``documents`` table (doc_id, text, ...) so that the entire
 extraction pipeline — including the OCR stage — has a DuckDB-checkable
-oracle: the Spark side physically renders PNG pages, decodes,
-preprocesses and stub-recognizes them; the oracle side computes the same
+oracle: the Spark side physically renders PNG pages, decodes and
+stub-recognizes them; the oracle side computes the same
 expected text directly from ``media_ref`` arithmetic
 (:mod:`tesseract_glue_spark.imaging.render` truth contract).
 

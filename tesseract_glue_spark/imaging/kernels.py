@@ -5,7 +5,9 @@ Tesseract's ``PSM_AUTO_OSD`` page-segmentation mode
 (``reader2.cpp:24``): orientation/deskew plus zone detection. Per
 BASELINE.json's north_star the preprocessing chain is grayscale →
 Otsu binarization → deskew → connected-component + recursive XY-cut
-layout segmentation. Everything here is vectorized numpy, testable
+layout segmentation. The OCR stage runs this chain only as opt-in layout
+analysis (``ExtractionConfig.preprocess``): both backends recognize the
+raw grayscale page. Everything here is vectorized numpy, testable
 without Spark, and called only from inside Arrow-batched UDF workers.
 """
 
@@ -71,27 +73,51 @@ def otsu_binarize(gray: np.ndarray) -> np.ndarray:
     return otsu_binarize_with_threshold(gray)[0]
 
 
+_SAMPLE_BLOCK_PX = 1 << 17
+
+
+def sample_ink(ink: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ys, xs) of the ink pixels in row-major order; past 8,192 of them,
+    every ``n // 4096``-th (about 4,096 points).
+
+    The shear search only needs the ARGMAX over ~12 candidates, not an
+    exact profile variance — a deterministic stride subsample of the
+    ink pixels preserves the profile shape while capping the bincount
+    passes. Stride (never RNG) keeps the estimate bit-reproducible
+    across runs and engines. ``np.nonzero`` runs over row blocks of at
+    most ``_SAMPLE_BLOCK_PX`` pixels, carrying the running ink count
+    between blocks, so it never holds 16 B per ink pixel of the whole
+    page; the points equal a whole-page ``np.nonzero`` strided the same
+    way."""
+    h, w = ink.shape
+    n = int(np.count_nonzero(ink))
+    stride = n // 4096 if n > 8192 else 1
+    rows = max(1, _SAMPLE_BLOCK_PX // max(w, 1))
+    ys, xs, seen = [], [], 0
+    for r0 in range(0, h if n else 0, rows):
+        by, bx = np.nonzero(ink[r0 : r0 + rows])
+        first = -seen % stride  # block index of the next kept point
+        ys.append(by[first::stride] + r0)
+        xs.append(bx[first::stride].copy())  # a view would pin the block
+        seen += by.size
+    if not ys:
+        return np.zeros(0, np.intp), np.zeros(0, np.intp)
+    return np.concatenate(ys), np.concatenate(xs)
+
+
 def estimate_shear(ink: np.ndarray, max_shear: float = 0.05, steps: int = 7) -> float:
     """Estimate vertical shear (small-angle skew model, dy = shear * x).
 
     Projection-profile method: the shear that, once removed, maximizes
     the variance of row-ink counts (text lines align → peaky profile).
     Coarse-to-fine search (two levels) — ~12 profile evaluations instead
-    of a dense sweep; this runs on every inked page in the OCR hot path.
+    of a dense sweep; this runs on every inked page of the opt-in
+    layout analysis.
     """
-    h, w = ink.shape
-    if h == 0 or w == 0 or not ink.any():
+    h = ink.shape[0]
+    ys, xs = sample_ink(ink)
+    if ys.size == 0:
         return 0.0
-    ys, xs = np.nonzero(ink)
-    # The search only needs the ARGMAX over ~12 shear candidates, not an
-    # exact profile variance — a deterministic stride subsample of the
-    # ink pixels preserves the profile shape while capping the 12
-    # bincount passes (estimate_shear was ~45% of the whole page kernel,
-    # dominated by dense picture-block pages). Stride (never RNG) keeps
-    # the estimate bit-reproducible across runs and engines.
-    if ys.size > 8192:
-        stride = ys.size // 4096
-        ys, xs = ys[::stride], xs[::stride]
     ys = ys.astype(np.int32)  # keep the (K, P) candidate matrix int32
 
     def scores(cands: np.ndarray) -> np.ndarray:

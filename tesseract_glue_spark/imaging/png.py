@@ -27,18 +27,20 @@ from tesseract_glue_spark.errors import ImageDecodeError
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 MAX_PIXELS = 72_000_000
-"""Largest ``width * height`` a page may declare in IHDR; a larger page
-is rejected before any IDAT is inflated. It admits a 600-dpi A3 scan
-(7016 x 9922 = 69.6 Mpx) with a little margin.
+"""Largest ``width * height`` a page may declare in IHDR (or, for
+:func:`~tesseract_glue_spark.imaging.tiff.decode_tiff`, in its tags); a
+larger page is rejected before any pixel data is read. It admits a
+600-dpi A3 scan (7016 x 9922 = 69.6 Mpx) with a little margin.
 
-Worst case at the cap is an all-ink page with preprocessing on: 18
-bytes per pixel live at once (the gray page and the ink mask at 1 byte
-each, plus the two int64 index arrays of ``np.nonzero`` in
-``kernels.estimate_shear``; the ``tracemalloc`` peak of
-``ocr_one_page`` on a 6 Mpx all-ink page is 18.0 B/px), so about
-1.3 GB in one Python worker. Without the cap, a 16000 x 16000 page
-would need about 4.6 GB, and a few hundred KB of deflate stream can
-declare one."""
+On the default path ``ocr_one_page`` holds 2 bytes per pixel at once
+(the inflated scanlines and the decoded page; its ``tracemalloc`` peak
+on a 6 Mpx all-ink page is 2.0 B/px), so about 145 MB at the cap in
+one Python worker. The opt-in layout analysis (``preprocess=True``)
+peaks at 9.0 B/px on the same page (the page plus the int64 copy of it
+that ``np.bincount`` makes for the Otsu histogram), about 650 MB at the
+cap. Without the cap, a 16000 x 16000 page would need 0.5 GB on the
+default path and 2.3 GB with layout analysis, and a few hundred KB of
+deflate stream can declare one."""
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:

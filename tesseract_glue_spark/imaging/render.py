@@ -19,7 +19,7 @@ for media id ``n`` (``media_ref = 'img_%08d' % n``):
   resolver misses → error-status path, ``tests/test_load_image.py:10-14``)
 * otherwise → ``truth_text(n) = 'page {n} glyph {(n*2654435761) % 9973} lorem ipsum dolor'``
 
-Page classes (structure for the preprocessing kernels to chew on):
+Page classes (structure for the opt-in layout kernels to chew on):
 
 * ``n % 5 == 0`` → skewed body (sheared 1-4 "degrees") — deskew stage
 * ``n % 3 == 0`` → embedded picture block — layout segmentation

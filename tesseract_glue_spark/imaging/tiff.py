@@ -29,6 +29,7 @@ import struct
 import numpy as np
 
 from tesseract_glue_spark.errors import ImageDecodeError
+from tesseract_glue_spark.imaging.png import MAX_PIXELS
 
 TIFF_SIG_LE = b"II*\x00"
 TIFF_SIG_BE = b"MM\x00*"
@@ -164,7 +165,8 @@ def decode_tiff(data: bytes) -> np.ndarray:
     array (black-is-zero orientation; WhiteIsZero input is inverted).
 
     Raises :class:`ImageDecodeError` on any unsupported variant or
-    malformed structure."""
+    malformed structure, and on a page declaring more than
+    ``png.MAX_PIXELS`` pixels, before any strip is read."""
     if not isinstance(data, (bytes, bytearray)) or len(data) < 8:
         raise ImageDecodeError("not a TIFF buffer")
     data = bytes(data)
@@ -193,6 +195,8 @@ def decode_tiff(data: bytes) -> np.ndarray:
             raise ImageDecodeError(f"unsupported TIFF photometric {photo}")
         if w <= 0 or h <= 0:
             raise ImageDecodeError("invalid TIFF dimensions")
+        if w * h > MAX_PIXELS:
+            raise ImageDecodeError(f"TIFF {w}x{h} exceeds the {MAX_PIXELS}-pixel cap")
         if _T_STRIP_OFFSETS not in entries:
             raise ImageDecodeError("TIFF missing strip offsets (tiled TIFF?)")
         offsets = _tag_values(data, bo, entries[_T_STRIP_OFFSETS])
@@ -203,18 +207,25 @@ def decode_tiff(data: bytes) -> np.ndarray:
             if len(offsets) != 1:
                 raise ImageDecodeError("TIFF missing strip byte counts")
             counts = [w * h]
-        raw = bytearray()
+        # strips are copied into the page buffer and reading stops once
+        # it is full: strip offsets may repeat, so the strips' total
+        # bears no bound of its own
+        img = np.empty(w * h, dtype=np.uint8)
+        pos = 0
         for off, cnt in zip(offsets, counts):
-            chunk = data[off : off + cnt]
-            if len(chunk) != cnt:
+            if off < 0 or cnt < 0 or off + cnt > len(data):
                 raise ImageDecodeError("truncated TIFF strip")
-            raw += chunk
-        if len(raw) < w * h:
+            n = min(cnt, img.size - pos)
+            img[pos : pos + n] = np.frombuffer(data, dtype=np.uint8, count=n, offset=off)
+            pos += n
+            if pos == img.size:
+                break
+        if pos < img.size:
             raise ImageDecodeError("TIFF strip data shorter than image")
-        img = np.frombuffer(bytes(raw[: w * h]), dtype=np.uint8).reshape(h, w)
+        img = img.reshape(h, w)
         if photo == 0:  # WhiteIsZero → standard orientation
-            img = 255 - img
-        return img.copy()
+            np.invert(img, out=img)
+        return img
     except ImageDecodeError:
         raise
     except Exception as exc:  # struct errors etc → decode taxonomy

@@ -5,7 +5,8 @@ This is the Spark-first re-expression of the reference's whole workflow
 ``reader2.cpp:39-51``) over a table of 10^12 interleaved documents:
 
     scan documents ──explode──► spans ──filter media──► distinct refs
-        ──left join pages──► OCR (mapInPandas, engine cached per worker)
+        ──left join pages──► OCR (mapInPandas: decode → grayscale →
+            recognize, engine cached per worker)
         ──join back to media spans──► union text spans
         ──groupBy(doc_id) order-preserving reassembly──► output docs
 
@@ -109,11 +110,15 @@ def distinct_media_refs(spans: DataFrame) -> DataFrame:
 
 
 def ocr_one_page(engine, config: ExtractionConfig, img_bytes):
-    """OCR one page inside a worker: decode → preprocess (Otsu, deskew,
-    XY-cut zones) → recognize, with the degrade-don't-die status
-    mapping. Returns ``(text, status, w, h, n_zones, shear,
-    confidence_x10k, proc_us)``. ONE implementation of the per-page
-    contract; :func:`ocr_batch` runs it over a batch."""
+    """OCR one page inside a worker: decode → grayscale → recognize,
+    with the degrade-don't-die status mapping. Both backends take the
+    raw grayscale page and segment it themselves (the reference's
+    PSM_AUTO_OSD, ``reader2.cpp:24``). ``config.preprocess`` opts in to
+    layout analysis first (Otsu, shear estimate and deskew, XY-cut
+    zones); it fills ``n_zones`` and ``shear``, which are 0 and 0.0
+    otherwise, and never changes the text. Returns ``(text, status, w,
+    h, n_zones, shear, confidence_x10k, proc_us)``. ONE implementation
+    of the per-page contract; :func:`ocr_batch` runs it over a batch."""
     import time as _time
 
     _t0 = _time.perf_counter()
@@ -177,8 +182,9 @@ def fan_out(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     32 tasks 0.46 s, 64 tasks 0.63 s, 128 tasks 1.09 s, 256 tasks
     2.04 s on idle local[32]; mapInArrow measured the same, so it is
     the task protocol, not pandas conversion), while round-robin keeps
-    per-task ROW COUNTS exactly even — per-row cost variance (deskew,
-    picture blocks) averages out over the ~100+ rows each task holds.
+    per-task ROW COUNTS exactly even — per-row cost variance (page
+    size, and with ``preprocess`` on, deskew and picture blocks)
+    averages out over the ~100+ rows each task holds.
     Interleaved A/B at sf0.1: extract_full med 2.14 s at 1× vs 2.29 s
     at 2× vs 2.82 s at the old 4×. The straggler question was also
     settled by measurement, not assumption: 4→16 scaling_bench pairs at

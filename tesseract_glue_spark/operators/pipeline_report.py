@@ -3,7 +3,7 @@ quality scoring of the EXTRACTED text.
 
 This is the end-to-end shape of a training-data pipeline (extract, then
 filter on quality), value-checked all the way: the Spark side runs the
-physical pipeline (render → decode → preprocess → stub OCR → stitch →
+physical pipeline (render → decode → grayscale → stub OCR → stitch →
 reassemble → score); the DuckDB oracle computes the same report from
 the truth contract arithmetic without touching a pixel.
 """

@@ -33,6 +33,42 @@ def streamed_png(w, h, raw_chunks):
     return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
+def strip_bomb_tiff(w, h, block, first=b""):
+    """A little-endian 8-bit grayscale TIFF declaring ``w`` x ``h`` whose
+    strips, after an optional distinct ``first`` strip, all point at one
+    shared ``block``. Strip offsets may repeat, so a few KB of offsets
+    and one block declare and fill a page of any size."""
+    import struct
+
+    n_rest = -(-(w * h - len(first)) // len(block))
+    counts = ([len(first)] if first else []) + [len(block)] * n_rest
+    n = len(counts)
+    assert n > 1, "offsets and counts are written as arrays"
+    tags = [(256, 4, 1, w), (257, 4, 1, h), (258, 3, 1, 8), (259, 3, 1, 1),
+            (262, 3, 1, 1), (273, 4, n, None), (277, 3, 1, 1), (279, 4, n, None)]
+    off_at = 8 + 2 + 12 * len(tags) + 4
+    cnt_at = off_at + 4 * n
+    first_at = cnt_at + 4 * n
+    block_at = first_at + len(first)
+    offsets = ([first_at] if first else []) + [block_at] * n_rest
+    ifd = struct.pack("<H", len(tags))
+    for tid, ttype, count, value in tags:
+        if tid == 273:
+            value = off_at
+        elif tid == 279:
+            value = cnt_at
+        if ttype == 3:
+            ifd += struct.pack("<HHIHH", tid, ttype, count, value, 0)
+        else:
+            ifd += struct.pack("<HHII", tid, ttype, count, value)
+    ifd += struct.pack("<I", 0)
+    return (
+        struct.pack("<2sHI", b"II", 42, 8) + ifd
+        + struct.pack(f"<{n}I", *offsets) + struct.pack(f"<{n}I", *counts)
+        + first + block
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = (

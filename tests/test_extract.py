@@ -234,6 +234,34 @@ class TestOcrMetrics:
         assert sum(r["n_dangling"] for r in m) > 0  # contract guarantees danglings
 
 
+def _assert_page_degrades_only_its_doc(spark, docs, pages, page, w, h):
+    """Add one doc whose only media span is ``page`` to 40 fixture docs:
+    that doc reads ``partial``, every other doc keeps its status, and
+    the job completes (local mode runs each task once, so a task
+    failure would fail the job)."""
+    from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA, PAGES_SCHEMA
+
+    big_doc = spark.createDataFrame(
+        [(990001, [("text", "cover", "", 0), ("media", "", "over_cap", 1)])],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    big_page = spark.createDataFrame([("over_cap", page, w, h, "")], schema=PAGES_SCHEMA)
+    few = docs.where(F.col("doc_id") < 40)
+    cfg = ExtractionConfig()
+    base = {
+        r["doc_id"]: r["status"]
+        for r in extract.extract_documents(few, pages, cfg).collect()
+    }
+    got = {
+        r["doc_id"]: r["status"]
+        for r in extract.extract_documents(
+            few.unionByName(big_doc), pages.unionByName(big_page), cfg
+        ).collect()
+    }
+    assert got.pop(990001) == "partial"
+    assert got == base and "ok" in base.values()
+
+
 def _mixed_hot_docs(spark):
     """One multi-chunk hot doc (> block spans) plus 20 normal docs."""
     from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA
@@ -324,7 +352,6 @@ class TestRobustness:
         doc keeps its status, and the job completes (local mode runs each
         task once, so a task failure would fail the job). Without the cap
         the page inflates to 72 MB, decodes, and its doc reads ``ok``."""
-        from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA, PAGES_SCHEMA
         from tesseract_glue_spark.imaging.png import MAX_PIXELS
         from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC
         from tests.conftest import streamed_png
@@ -337,25 +364,25 @@ class TestRobustness:
         page = streamed_png(
             w, h, [first] + [white_row * 100] * ((h - 1) // 100) + [white_row * ((h - 1) % 100)]
         )
-        big_doc = spark.createDataFrame(
-            [(990001, [("text", "cover", "", 0), ("media", "", "over_cap", 1)])],
-            schema=DOCUMENTS_SCHEMA,
-        )
-        big_page = spark.createDataFrame([("over_cap", page, w, h, "")], schema=PAGES_SCHEMA)
-        few = docs.where(F.col("doc_id") < 40)
-        cfg = ExtractionConfig()
-        base = {
-            r["doc_id"]: r["status"]
-            for r in extract.extract_documents(few, pages, cfg).collect()
-        }
-        got = {
-            r["doc_id"]: r["status"]
-            for r in extract.extract_documents(
-                few.unionByName(big_doc), pages.unionByName(big_page), cfg
-            ).collect()
-        }
-        assert got.pop(990001) == "partial"
-        assert got == base and "ok" in base.values()
+        _assert_page_degrades_only_its_doc(spark, docs, pages, page, w, h)
+
+    def test_over_cap_tiff_page_degrades_only_its_doc(self, spark, docs, pages):
+        """A TIFF page declaring just over ``png.MAX_PIXELS`` pixels, its
+        first strip an empty stub payload and every other strip one
+        shared white block, is rejected from its tags: its doc reads
+        ``partial`` and every other doc keeps its status. Without the
+        cap the strips fill the page, it decodes, and its doc reads
+        ``ok``."""
+        from tesseract_glue_spark.imaging.png import MAX_PIXELS
+        from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC
+        from tests.conftest import strip_bomb_tiff
+
+        w = 10_000
+        h = MAX_PIXELS // w + 1
+        empty_payload = PAYLOAD_MAGIC + bytes(4)  # stub codec: empty text
+        first = empty_payload + b"\xff" * (w - len(empty_payload))
+        page = strip_bomb_tiff(w, h, b"\xff" * (10 * w), first=first)
+        _assert_page_degrades_only_its_doc(spark, docs, pages, page, w, h)
 
     def test_extreme_skew_doc(self, spark, pages):
         """One document with thousands of spans (the 10^12-scale hot-key
@@ -431,12 +458,13 @@ class TestRobustness:
         """XY-cut layout segmentation separates the picture block from
         the text body: picture-class pages (n%3==0) segment into exactly
         2 zones, plain/skewed pages into 1 (verified through the
-        distributed OCR path, not just the kernel unit tests)."""
+        distributed OCR path, not just the kernel unit tests). Layout
+        analysis is opt-in, so the config asks for it."""
         from tesseract_glue_spark.imaging.render import is_blank, ref_to_num
         from tesseract_glue_spark.operators import extract as X
 
         spans = X.explode_spans(docs)
-        ocr = X.ocr_media(spans, pages, ExtractionConfig())
+        ocr = X.ocr_media(spans, pages, ExtractionConfig(preprocess=True))
         saw_multi = False
         for r in ocr.where("ocr_status in ('ok','empty')").collect():
             n = ref_to_num(r["media_ref"])
@@ -449,6 +477,27 @@ class TestRobustness:
             else:
                 assert r["n_zones"] >= 1, (n, r["n_zones"])
         assert saw_multi
+
+
+class TestLayoutAnalysisOptIn:
+    """The default OCR path is decode → grayscale → recognize; layout
+    analysis (``preprocess=True``) fills only the OCR stage's zone and
+    shear columns."""
+
+    def test_default_rows_equal_layout_analysis_rows(self, docs, pages):
+        def rows(cfg):
+            out = extract.extract_documents(docs, pages, cfg)
+            return {r["doc_id"]: r for r in out.select(*extract.EXTRACTED_SCHEMA_COLS).collect()}
+
+        default = rows(ExtractionConfig())
+        assert default == rows(ExtractionConfig(preprocess=True))
+        assert {r["status"] for r in default.values()} == {"ok", "partial"}
+
+    def test_default_path_skips_layout_analysis(self, docs, pages):
+        ocr = extract.ocr_media(extract.explode_spans(docs), pages, ExtractionConfig())
+        rows = ocr.collect()
+        assert any(r["ocr_status"] == "ok" for r in rows)
+        assert all(r["n_zones"] == 0 and r["shear"] == 0.0 for r in rows)
 
 
 class TestTiffPageStore:

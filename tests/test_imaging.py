@@ -251,6 +251,35 @@ class TestKernels:
         rows_with_ink = otsu_binarize(fixed).any(axis=1).sum()
         assert rows_with_ink <= 16  # re-collapsed to ~3 tight lines
 
+    @pytest.mark.parametrize("shape, p", [((60, 70), 0.5), ((700, 523), 0.3), ((1200, 1111), 0.01)])
+    def test_sample_ink_matches_whole_page_stride(self, shape, p):
+        """Blocked sampling gives the points of a whole-page
+        ``np.nonzero`` strided by the same rule: every point below 8,192
+        ink pixels, every ``n // 4096``-th above."""
+        from tesseract_glue_spark.imaging.kernels import sample_ink
+
+        ink = np.random.default_rng(shape[0]).random(shape) < p
+        ys, xs = np.nonzero(ink)
+        if ys.size > 8192:
+            stride = ys.size // 4096
+            ys, xs = ys[::stride], xs[::stride]
+        got_ys, got_xs = sample_ink(ink)
+        assert np.array_equal(got_ys, ys) and np.array_equal(got_xs, xs)
+
+    def test_shear_estimate_memory_bounded(self):
+        """A 6 Mpx all-ink mask: the estimate holds a bounded block of
+        ink coordinates, not 16 B per ink pixel of the page (96 MB)."""
+        import tracemalloc
+
+        ink = np.ones((2000, 3000), dtype=bool)
+        tracemalloc.start()
+        try:
+            estimate_shear(ink)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, peak
+
     def test_cc_segment_two_blobs(self):
         img = np.zeros((30, 30), dtype=bool)
         img[2:8, 2:8] = True
@@ -765,6 +794,49 @@ class TestTiff:
             decode_tiff(data[: len(data) // 2])
         with pytest.raises(ImageDecodeError):
             decode_tiff(b"II*\x00\x08\x00")
+
+
+    def test_strip_bomb_decodes_into_one_page_buffer(self):
+        """1,024 strips all pointing at one 64 KB block fill an 8192 x
+        8192 page from a 74 KB file; strips are copied into the page
+        buffer itself, not concatenated and copied again."""
+        import tracemalloc
+
+        from tesseract_glue_spark.imaging.tiff import decode_tiff
+        from tests.conftest import strip_bomb_tiff
+
+        w = h = 8192
+        data = strip_bomb_tiff(w, h, b"\xff" * (8 * w))
+        assert len(data) < 75_000
+        tracemalloc.start()
+        try:
+            img = decode_tiff(data)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert img.shape == (h, w) and img[-1, -1] == 255
+        assert peak <= 1.1 * w * h, peak
+
+    def test_pixel_cap_checked_before_strips(self):
+        """A TIFF declaring more than ``png.MAX_PIXELS`` pixels is rejected
+        from its tags: its strips point past the end of the file, so
+        reading any of them would raise a truncation error instead."""
+        import struct
+
+        from tesseract_glue_spark.imaging import png
+        from tesseract_glue_spark.imaging.tiff import decode_tiff
+        from tests.conftest import strip_bomb_tiff
+
+        w = 10_000
+        h = png.MAX_PIXELS // w + 1
+        data = bytearray(strip_bomb_tiff(w, h, b"\xff" * (100 * w)))
+        del data[-100 * w :]  # the shared block is gone
+        with pytest.raises(ImageDecodeError, match="pixel cap"):
+            decode_tiff(bytes(data))
+        # the same file one row under the cap reads its strips and fails there
+        struct.pack_into("<I", data, 8 + 2 + 12 + 8, h - 1)
+        with pytest.raises(ImageDecodeError, match="truncated TIFF strip"):
+            decode_tiff(bytes(data))
 
 
 class TestCodecDispatch:
