@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline at sf0.001.
-``queries()`` / ``oracle_sql()`` pair each of the 50 implemented
+``queries()`` / ``oracle_sql()`` pair each of the 42 implemented
 operators with a DuckDB-checkable oracle at sf0.01 (driver compares
 row-count + schema + order-insensitive value-hash). The driver contract
 checks at most 50 queries, so every entry is inside that window and the
@@ -86,7 +86,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def _sql_ops() -> dict[str, tuple]:
     """All dual-dialect SQL operators: name -> (builder, tables)."""
     from tesseract_glue_spark.operators.dedup import DEDUP_OPS
-    from tesseract_glue_spark.operators.similarity import SIMILARITY_OPS
     from tesseract_glue_spark.operators.text import TEXT_OPS
     from tesseract_glue_spark.operators.crawl import WEB_SQL_OPS
 
@@ -97,8 +96,6 @@ def _sql_ops() -> dict[str, tuple]:
         ops[name] = (b, ("documents",))
     for name, b in DEDUP_OPS.items():
         ops[name] = (b, ("documents",))
-    for name, b in SIMILARITY_OPS.items():
-        ops[name] = (b, ("embeddings",))
     return ops
 
 
@@ -123,16 +120,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_features_blank": image_features_blank_spark,
     }
     from tesseract_glue_spark.operators.registry import cached_shingles_runner
-    from tesseract_glue_spark.operators.similarity import ann_topk_ivf
 
     from tesseract_glue_spark.operators.pipeline_report import (
         extract_quality_report_spark,
     )
 
-    # IVF k-means coarse quantizer: Spark side runs the shared SQL
-    # templates stepwise (materialized centroid steps); the oracle is
-    # the same templates unrolled into one DuckDB statement
-    q["emb_ann_topk_ivf"] = ann_topk_ivf
     # connected components of the near-dup pair graph: stepwise label
     # propagation on the Spark side, same templates unrolled for DuckDB
     from tesseract_glue_spark.operators.dedup import dedup_components
@@ -172,13 +164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             q[name] = cached_shingles_runner(builder, tables=tables)
         else:
             q[name] = spark_runner(builder, tables=tables)
-    # r6: the brute-force ANN recall oracle runs as one numpy kernel
-    # over the stride-capped set (same contract, bit-equal output; the
-    # DuckDB oracle stays the SQL template) — see
-    # similarity.ann_topk_bruteforce for the measured rationale
-    from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce
-
-    q["emb_ann_topk_brute"] = ann_topk_bruteforce
     return q
 
 
@@ -213,9 +198,6 @@ def oracle_sql() -> dict[str, str]:
     o["image_pixel_stats"] = image_pixel_stats_oracle_sql()
     o["image_features_blank"] = image_features_blank_oracle_sql()
     o["extract_quality_report"] = extract_quality_report_oracle_sql()
-    from tesseract_glue_spark.operators.similarity import ann_topk_ivf_oracle_sql
-
-    o["emb_ann_topk_ivf"] = ann_topk_ivf_oracle_sql()
     from tesseract_glue_spark.operators.dedup import dedup_components_oracle_sql
 
     o["dedup_components"] = dedup_components_oracle_sql()

@@ -191,7 +191,7 @@ def main() -> None:
         lambda: extract_documents(docs, pages, cfg.with_(salt_reassembly=8)).count(),
     )
 
-    # q3+: registered operator benchmarks (text/dedup/similarity) as they land
+    # q3+: registered operator benchmarks (dedup, text and crawl readers)
     try:
         from tesseract_glue_spark.operators.bench_registry import register
 

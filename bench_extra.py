@@ -119,9 +119,6 @@ def main() -> None:
         )
         # registry thunks call .count(); rebuild the frames for noop + plans
         from tesseract_glue_spark.operators.bench_registry import (
-            ann_topk_bruteforce_sql,
-            ann_topk_lsh_sql,
-            cosine_neardup_lsh_sql,
             langid_sql,
             minhash_lsh_pairs_sql,
             ngram_jaccard_pairs_sql,
@@ -129,7 +126,6 @@ def main() -> None:
             simhash_pairs_sql,
         )
         from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
-        from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce, ann_topk_ivf
         from tesseract_glue_spark.operators.crawl import (
             html_main_content_spark,
             pdf_text_extract_spark,
@@ -140,9 +136,6 @@ def main() -> None:
             "dedup_minhash_lsh": (minhash_lsh_pairs_sql, ("documents",), True),
             "dedup_ngram_jaccard": (ngram_jaccard_pairs_sql, ("documents",), True),
             "dedup_simhash_pairs": (simhash_pairs_sql, ("documents",), True),
-            "ann_topk_brute": (ann_topk_bruteforce, ("embeddings",), "kernel"),
-            "ann_topk_lsh": (ann_topk_lsh_sql, ("embeddings",), False),
-            "emb_neardup_lsh": (cosine_neardup_lsh_sql, ("embeddings",), False),
             "text_langid_quality": (
                 lambda d, table="documents": f"SELECT q.doc_id, q.quality_score, l.lang_pred "
                 f"FROM ({quality_sql(d)}) q JOIN ({langid_sql(d)}) l ON q.doc_id = l.doc_id",
@@ -151,14 +144,11 @@ def main() -> None:
             ),
         }
         for name, (builder, tables, cached) in specs.items():
-            if cached == "kernel":
-                runner = builder  # already (spark, sf_dir) -> DataFrame
-            elif cached:
+            if cached:
                 runner = cached_shingles_runner(builder, tables=tables)
             else:
                 runner = spark_runner(builder, tables=tables)
             run_one(name, lambda r=runner: r(spark, sf_dir))
-        run_one("ann_topk_ivf", lambda: ann_topk_ivf(spark, sf_dir))
         run_one("html_main_content", lambda: html_main_content_spark(spark, sf_dir))
         run_one("pdf_text_extract", lambda: pdf_text_extract_spark(spark, sf_dir))
         run_one("warc_main_content", lambda: warc_main_content_spark(spark, sf_dir))

@@ -50,8 +50,8 @@ def build_spark(cpus: int):
 
 
 def stitched_corpus(spark, n_docs: int, spans_per_doc: int, hot_spans: int):
-    """Synthesize a stitched-shaped frame (doc_id, offset, kind, text,
-    media_ref, ocr_status): ``n_docs`` uniform docs of ``spans_per_doc``
+    """Synthesize a stitched-shaped frame (doc_id, n_spans, offset, kind,
+    text, media_ref, ocr_status): ``n_docs`` uniform docs of ``spans_per_doc``
     spans each, plus — when ``hot_spans`` > 0 — one hot document
     ``doc_id = -1`` with ``hot_spans`` spans. Text is ~120 chars/span so
     the hot doc is also byte-heavy, like a scanned-book outlier among
@@ -141,10 +141,8 @@ def main() -> None:
 
     for label, hot in (("uniform", 0), ("skewed", hot_spans)):
         stitched = stitched_corpus(spark, n_docs, spans_per_doc, hot).localCheckpoint()
-        # three plans over the SAME corpus in the SAME window:
+        # two plans over the SAME corpus in the SAME window:
         #   unsalted        — single-phase groupBy (the skew hazard)
-        #   salted          — unconditional range-chunked two-phase
-        #                     (every doc pays the phase-2 gather)
         #   salted_routed   — n_spans routing: small docs single-phase,
         #                     hot docs chunked (costs a second pass
         #                     over the span source for the small side —
@@ -153,9 +151,6 @@ def main() -> None:
         variants = {
             "unsalted": lambda: materialize(
                 reassemble(stitched.drop("n_spans"), cfg_plain)
-            ),
-            "salted": lambda: materialize(
-                reassemble(stitched.drop("n_spans"), cfg_salted)
             ),
             "salted_routed": lambda: materialize(reassemble(stitched, cfg_salted)),
         }
@@ -171,19 +166,17 @@ def main() -> None:
             ).select("doc_id", "pos", "s.kind", "s.text", "s.media_ref", "s.offset")
 
         a = flat(stitched.drop("n_spans"), cfg_plain)
-        for b in (flat(stitched.drop("n_spans"), cfg_salted),
-                  flat(stitched, cfg_salted)):
-            assert a.count() == b.count()
-            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        b = flat(stitched, cfg_salted)
+        assert a.count() == b.count()
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
         results[f"{label}_equal"] = True
         stitched.unpersist()
 
     for label in ("uniform", "skewed"):
         u = results[f"{label}_unsalted"]["best"]
-        for vname in ("salted", "salted_routed"):
-            results[f"{label}_speedup_{vname}"] = round(
-                u / results[f"{label}_{vname}"]["best"], 3
-            )
+        results[f"{label}_speedup_salted_routed"] = round(
+            u / results[f"{label}_salted_routed"]["best"], 3
+        )
 
     spark.stop()
     print(json.dumps({"metric": "salted_reassembly_skew_stress", **results}))

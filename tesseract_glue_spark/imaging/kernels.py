@@ -17,6 +17,8 @@ import numpy as np
 
 INK_THRESHOLD_DEFAULT = 128
 
+_SAMPLE_BLOCK_PX = 1 << 17
+
 
 def to_grayscale(img: np.ndarray) -> np.ndarray:
     """HxWx3 RGB → HxW luma (BT.601 weights); HxW passes through."""
@@ -27,6 +29,19 @@ def to_grayscale(img: np.ndarray) -> np.ndarray:
         gray = rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
         return np.clip(gray, 0, 255).astype(np.uint8)
     raise ValueError(f"unsupported image shape {img.shape}")
+
+
+def _gray_histogram(gray: np.ndarray) -> np.ndarray:
+    """256-bin float64 histogram of a uint8 page.
+
+    ``np.bincount`` casts its input to int64, so it runs over flat
+    blocks of at most ``_SAMPLE_BLOCK_PX`` pixels: the cast copy is
+    1 MB at most, not 8 B per pixel of the whole page."""
+    flat = gray.reshape(-1)
+    hist = np.zeros(256, dtype=np.int64)
+    for i in range(0, flat.size, _SAMPLE_BLOCK_PX):
+        hist += np.bincount(flat[i : i + _SAMPLE_BLOCK_PX], minlength=256)
+    return hist.astype(np.float64)
 
 
 def _otsu_threshold_from_hist(hist: np.ndarray) -> int:
@@ -44,8 +59,7 @@ def _otsu_threshold_from_hist(hist: np.ndarray) -> int:
 
 def otsu_threshold(gray: np.ndarray) -> int:
     """Otsu's method: threshold maximizing between-class variance."""
-    hist = np.bincount(gray.reshape(-1), minlength=256).astype(np.float64)
-    return _otsu_threshold_from_hist(hist)
+    return _otsu_threshold_from_hist(_gray_histogram(gray))
 
 
 def otsu_binarize_with_threshold(gray: np.ndarray) -> tuple[np.ndarray, int]:
@@ -58,7 +72,7 @@ def otsu_binarize_with_threshold(gray: np.ndarray) -> tuple[np.ndarray, int]:
     re-histogramming."""
     if gray.size == 0:
         return np.zeros_like(gray, dtype=bool), INK_THRESHOLD_DEFAULT
-    hist = np.bincount(gray.reshape(-1), minlength=256).astype(np.float64)
+    hist = _gray_histogram(gray)
     if np.count_nonzero(hist) <= 1:  # uniform page → no ink by convention
         return np.zeros_like(gray, dtype=bool), INK_THRESHOLD_DEFAULT
     t = _otsu_threshold_from_hist(hist)
@@ -71,9 +85,6 @@ def otsu_binarize(gray: np.ndarray) -> np.ndarray:
     A uniform (blank) page binarizes to all-False ink.
     """
     return otsu_binarize_with_threshold(gray)[0]
-
-
-_SAMPLE_BLOCK_PX = 1 << 17
 
 
 def sample_ink(ink: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

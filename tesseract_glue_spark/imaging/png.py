@@ -36,11 +36,13 @@ On the default path ``ocr_one_page`` holds 2 bytes per pixel at once
 (the inflated scanlines and the decoded page; its ``tracemalloc`` peak
 on a 6 Mpx all-ink page is 2.0 B/px), so about 145 MB at the cap in
 one Python worker. The opt-in layout analysis (``preprocess=True``)
-peaks at 9.0 B/px on the same page (the page plus the int64 copy of it
-that ``np.bincount`` makes for the Otsu histogram), about 650 MB at the
-cap. Without the cap, a 16000 x 16000 page would need 0.5 GB on the
-default path and 2.3 GB with layout analysis, and a few hundred KB of
-deflate stream can declare one."""
+adds nothing on that page, which Otsu finds uniform. On a 6 Mpx page of
+sheared text lines it peaks at 4.0 B/px (the page, its ink mask, the
+deskewed copy and that copy's mask; the Otsu histogram is built in
+bounded blocks), about 290 MB at the cap. Without the cap, a
+16000 x 16000 page would need 0.5 GB on the default path and 1.0 GB
+with layout analysis, and a few hundred KB of deflate stream can
+declare one."""
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:

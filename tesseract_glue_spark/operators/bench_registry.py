@@ -1,8 +1,8 @@
 """Operator benchmarks picked up by bench.py (name -> zero-arg thunk).
 
 Covers the heavy non-extraction families: MinHash-LSH dedup, n-gram
-Jaccard, SimHash pairs, brute-force + LSH ANN over embeddings, text
-quality + language id, and the crawl-input HTML/PDF/WARC readers.
+Jaccard, SimHash pairs, text quality + language id, and the crawl-input
+HTML/PDF/WARC readers.
 """
 
 from __future__ import annotations
@@ -17,27 +17,14 @@ from tesseract_glue_spark.operators.dedup import (
     simhash_pairs_sql,
 )
 from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
-from tesseract_glue_spark.operators.similarity import (
-    ann_topk_bruteforce_sql,
-    ann_topk_lsh_sql,
-    cosine_neardup_lsh_sql,
-)
 from tesseract_glue_spark.operators.text import langid_sql, quality_sql
 
 
 def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
-    from tesseract_glue_spark.operators.similarity import ann_topk_ivf
-
-    from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce
-
     specs = {
         "dedup_minhash_lsh": (minhash_lsh_pairs_sql, ("documents",)),
         "dedup_ngram_jaccard": (ngram_jaccard_pairs_sql, ("documents",)),
         "dedup_simhash_pairs": (simhash_pairs_sql, ("documents",)),
-        # numpy-kernel form (same contract/rows as ann_topk_bruteforce_sql)
-        "ann_topk_brute": (ann_topk_bruteforce, ("embeddings",)),
-        "ann_topk_lsh": (ann_topk_lsh_sql, ("embeddings",)),
-        "emb_neardup_lsh": (cosine_neardup_lsh_sql, ("embeddings",)),
         "text_langid_quality": (
             lambda d, table="documents": f"SELECT q.doc_id, q.quality_score, l.lang_pred "
             f"FROM ({quality_sql(d)}) q JOIN ({langid_sql(d)}) l ON q.doc_id = l.doc_id",
@@ -48,12 +35,9 @@ def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
     for name, (builder, tables) in specs.items():
         if name in ("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_pairs"):
             runner = cached_shingles_runner(builder, tables=tables)
-        elif name == "ann_topk_brute":
-            runner = builder  # already a (spark, sf_dir) -> DataFrame callable
         else:
             runner = spark_runner(builder, tables=tables)
         out[name] = (lambda r=runner: r(spark, sf_dir).count())
-    out["ann_topk_ivf"] = lambda: ann_topk_ivf(spark, sf_dir).count()
     from tesseract_glue_spark.operators.crawl import (
         html_main_content_spark,
         pdf_text_extract_spark,

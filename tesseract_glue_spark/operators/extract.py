@@ -27,13 +27,15 @@ Scale design notes (the part that must survive 1000 executors / 100 TB):
   ordering is reconstructed from the carried ``offset`` field via
   ``sort_array`` / ``array_sort`` inside the aggregation (SURVEY §7
   hard-point (a)).
-* **Skew**: many-page documents (heavy tail) are handled by optional
-  two-phase RANGE-CHUNKED reassembly (partial collect+sort per
+* **Skew**: with `salt_reassembly=S`, documents longer than one chunk
+  (``n_spans`` > max(S, 1024), the heavy tail) take a two-phase
+  RANGE-CHUNKED reassembly (partial collect+sort per
   (doc_id, offset DIV block), then an O(n) ordered concat of the
-  pre-sorted chunks) — `salt_reassembly=S`. The chunk key preserves
-  contiguous offset ranges, so order preservation needs no second
-  sort (SURVEY §7 hard-point (b); skew_bench.py for the measured
-  comparison against modulo salting, which re-sorted serially).
+  pre-sorted chunks); every other doc stays single-phase. The chunk
+  key preserves contiguous offset ranges, so order preservation needs
+  no second sort (SURVEY §7 hard-point (b); skew_bench.py for the
+  measured comparison against modulo salting, which re-sorted
+  serially).
 * **Degrade, don't die**: dangling refs / undecodable pages become
   status values, never task failures (``reader2.cpp:19-23``,
   ``ImageLoaderStrategies.cpp:14-16``).
@@ -284,9 +286,8 @@ def ocr_partition_metrics(ocr: DataFrame) -> DataFrame:
 
 def stitch(spans: DataFrame, ocr: DataFrame, config: ExtractionConfig) -> DataFrame:
     """Attach OCR text to media spans; pass text spans through. The
-    carried ``n_spans`` doc size (when the span frame has it) flows
-    through so reassembly can route heavy-tail docs."""
-    carry = ["n_spans"] if "n_spans" in spans.columns else []
+    span frame's ``n_spans`` doc size flows through so reassembly can
+    route heavy-tail docs."""
     media = spans.where(F.col("kind") == "media")
     # null-kind rows are empty-doc placeholders from posexplode_outer —
     # keep them so the doc survives reassembly, drop them from the array
@@ -296,7 +297,7 @@ def stitch(spans: DataFrame, ocr: DataFrame, config: ExtractionConfig) -> DataFr
     ocr_small = ocr.select("media_ref", "ocr_text", "ocr_status")
     stitched_media = media.join(ocr_small, "media_ref", "left").select(
         "doc_id",
-        *carry,
+        "n_spans",
         "offset",
         "kind",
         F.coalesce("ocr_text", F.lit("")).alias("text"),
@@ -304,7 +305,7 @@ def stitch(spans: DataFrame, ocr: DataFrame, config: ExtractionConfig) -> DataFr
         F.coalesce("ocr_status", F.lit(errors.STATUS_DANGLING)).alias("ocr_status"),
     )
     return text_spans.select(
-        "doc_id", *carry, "offset", "kind", "text", "media_ref", "ocr_status"
+        "doc_id", "n_spans", "offset", "kind", "text", "media_ref", "ocr_status"
     ).unionByName(stitched_media)
 
 
@@ -363,14 +364,14 @@ def reassemble(stitched: DataFrame, config: ExtractionConfig) -> DataFrame:
     (skew_bench.py, r5): it paid the same serial O(n log n) plus a
     second shuffle.
 
-    When the frame carries the doc size (``n_spans``, free from
-    ``size(spans)`` at explode time — no counting shuffle), documents
-    that fit one chunk take the SINGLE-PHASE plan and only heavy-tail
-    docs pay the two-phase gather: the uniform-corpus penalty of
-    unconditional two-phase measured 26% (skew_bench.py) and is
-    eliminated by the routing. Both branches read the same stitched
-    subtree; its exchanges are planned once and reused (ReusedExchange
-    / AQE stage reuse), so the OCR stage never re-executes.
+    Salting routes on the doc size ``n_spans``, which the stitched
+    frame must carry (free from ``size(spans)`` at explode time — no
+    counting shuffle): documents that fit one chunk take the
+    SINGLE-PHASE plan and only heavy-tail docs pay the two-phase
+    gather (two-phase for every doc cost uniform corpora 26%,
+    skew_bench.py r5). Both branches read the same stitched subtree;
+    its exchanges are planned once and reused (ReusedExchange / AQE
+    stage reuse), so the OCR stage never re-executes.
     """
     ordered_struct = F.struct("offset", "kind", "text", "media_ref")
 
@@ -401,12 +402,9 @@ def reassemble(stitched: DataFrame, config: ExtractionConfig) -> DataFrame:
 
     if config.salt_reassembly and config.salt_reassembly > 1:
         block = max(int(config.salt_reassembly), 1024)
-        if "n_spans" in stitched.columns:
-            small = stitched.where(F.col("n_spans") <= block)
-            big = stitched.where(F.col("n_spans") > block)
-            doc = single_phase(small).unionByName(two_phase(big, block))
-        else:
-            doc = two_phase(stitched, block)
+        small = stitched.where(F.col("n_spans") <= block)
+        big = stitched.where(F.col("n_spans") > block)
+        doc = single_phase(small).unionByName(two_phase(big, block))
     else:
         doc = single_phase(stitched)
     return doc.select(

@@ -9,7 +9,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_ORACLE = "/root/testdata/sf0.01"
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")

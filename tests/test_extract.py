@@ -313,8 +313,8 @@ class TestRobustness:
     def test_salted_web_routing_mixed_corpus(self, spark, pages):
         """Web extraction carries the doc size through the fused stage,
         so salted reassembly routes the normal docs to the single-phase
-        plan (the ``n_spans`` filter) instead of the two-phase fallback
-        for every doc — with output identical to the unsalted plan."""
+        plan (the ``n_spans`` filter) — with output identical to the
+        unsalted plan."""
         import re
 
         from tesseract_glue_spark.operators import web
@@ -330,21 +330,6 @@ class TestRobustness:
         a = {r["doc_id"]: spans_key(r["spans"]) for r in base.collect()}
         b = {r["doc_id"]: spans_key(r["spans"]) for r in salted.collect()}
         assert a == b and len(b) == 21
-
-    def test_salted_fallback_without_doc_size(self, spark):
-        """A stitched-shaped frame lacking the carried ``n_spans``
-        column (external callers) must still reassemble correctly via
-        the unconditional two-phase fallback."""
-        rows = [(1, o, "text", f"x{o}", "", None) for o in range(1500)]
-        stitched = spark.createDataFrame(
-            rows, "doc_id LONG, offset INT, kind STRING, text STRING, "
-                  "media_ref STRING, ocr_status STRING",
-        )
-        out = extract.reassemble(
-            stitched, ExtractionConfig(salt_reassembly=16).validated()
-        ).collect()
-        assert len(out) == 1
-        assert [s["offset"] for s in out[0]["spans"]] == list(range(1500))
 
     def test_over_cap_page_degrades_only_its_doc(self, spark, docs, pages):
         """A white page declaring just over ``png.MAX_PIXELS`` pixels is

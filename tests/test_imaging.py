@@ -234,6 +234,37 @@ class TestKernels:
     def test_otsu_blank_no_ink(self):
         assert not otsu_binarize(np.full((10, 10), 255, dtype=np.uint8)).any()
 
+    @pytest.mark.parametrize("shape", [(60, 70), (512, 256), (1000, 1311)])
+    def test_gray_histogram_matches_whole_page_bincount(self, shape):
+        """The blocked histogram equals one whole-page ``np.bincount``,
+        for a page smaller than a block, exactly one block, and a size
+        that is not a multiple of the block."""
+        from tesseract_glue_spark.imaging.kernels import _gray_histogram
+
+        gray = np.random.default_rng(shape[0]).integers(0, 256, shape, dtype=np.uint8)
+        want = np.bincount(gray.reshape(-1), minlength=256).astype(np.float64)
+        got = _gray_histogram(gray)
+        assert got.dtype == np.float64 and np.array_equal(got, want)
+
+    def test_otsu_binarize_memory_bounded(self):
+        """A 6 Mpx page: binarizing holds the 1 B/px ink mask and one
+        bounded histogram block, not the 8 B/px int64 copy that a
+        whole-page ``np.bincount`` makes."""
+        import tracemalloc
+
+        from tesseract_glue_spark.imaging.kernels import otsu_binarize_with_threshold
+
+        gray = np.full((2000, 3000), 230, dtype=np.uint8)
+        gray[::7, ::3] = 20
+        tracemalloc.start()
+        try:
+            ink, t = otsu_binarize_with_threshold(gray)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert 20 <= t < 230 and ink[0, 0] and not ink[1, 0]
+        assert peak <= 1.5 * gray.size, peak / gray.size
+
     def test_shear_estimate_and_deskew(self):
         # horizontal text lines, then shear, then recover
         img = np.full((120, 200), 255, dtype=np.uint8)

@@ -96,61 +96,6 @@ class TestAntiJoinPlanShape:
         )
         self._assert_scale_safe(spark, df)
 
-    def test_embedding_survivors_plan(self, spark):
-        from tesseract_glue_spark.operators.registry import spark_runner
-        from tesseract_glue_spark.operators.similarity import (
-            embedding_dedup_survivors_sql,
-        )
-
-        df = spark_runner(embedding_dedup_survivors_sql, tables=("embeddings",))(
-            spark, SF_DIR
-        )
-        self._assert_scale_safe(spark, df)
-
-
-class TestIvfPlanShape:
-    def test_assignment_aggregates_without_window(self, spark):
-        """The N×K nearest-centroid argmin must be a partial-aggregable
-        MIN, not a row_number window over the full candidate set
-        (round-1 judge finding: the window shuffled+sorted N×K rows)."""
-        from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators.similarity import (
-            ivf_init_sql,
-            ivf_qv_sql,
-            ivf_step_sql,
-        )
-
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet").createOrReplaceTempView(
-            "embeddings"
-        )
-        spark.sql(ivf_qv_sql(D.SPARK, "embeddings")).createOrReplaceTempView("ivf_qv")
-        # the runner materializes centroids as DATA between steps (see
-        # ann_topk_ivf); mirror that so the step plan is the real one
-        init = spark.sql(ivf_init_sql(D.SPARK, "ivf_qv")).collect()
-        spark.createDataFrame(
-            [(int(r["cluster"]), [int(v) for v in r["cq"]]) for r in init],
-            schema="cluster INT, cq ARRAY<BIGINT>",
-        ).createOrReplaceTempView("ivf_cent")
-        plan = C.plan_text(spark.sql(ivf_step_sql(D.SPARK, "ivf_qv", "ivf_cent")))
-        assert "Window" not in plan, plan
-        assert "HashAggregate" in plan, plan
-
-
-class TestBruteForceAnnPlanShape:
-    def test_only_capped_rows_reach_the_single_task(self, spark):
-        """The brute-force kernel ranks the whole capped vector set in
-        one task, but the scan, quantization and stride filter below it
-        stay parallel: a SinglePartition exchange sits between the scan
-        and the MapInPandas (a coalesce(1) there would be a narrow
-        dependency that pulls the whole scan into the one task)."""
-        from tesseract_glue_spark.operators.similarity import ann_topk_bruteforce
-
-        plan = C.plan_text(ann_topk_bruteforce(spark, SF_DIR), mode="simple")
-        lines = plan.splitlines()
-        kernel = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
-        assert "Exchange SinglePartition" in lines[kernel + 1], plan
-        assert any("Scan parquet" in ln for ln in lines[kernel + 2:]), plan
-
 
 class TestPackingPlanShape:
     def test_pack_sequences_window_is_partitioned(self, spark):
