@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline at sf0.001.
-``queries()`` / ``oracle_sql()`` pair each of the 42 implemented
+``queries()`` / ``oracle_sql()`` pair each of the 38 implemented
 operators with a DuckDB-checkable oracle at sf0.01 (driver compares
 row-count + schema + order-insensitive value-hash). The driver contract
 checks at most 50 queries, so every entry is inside that window and the
@@ -133,13 +133,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # composed pipeline: extraction → quality scoring of extracted text
     q["extract_quality_report"] = extract_quality_report_spark
     # crawl-input gate queries over the synthetic page corpus: HTML main
-    # content, robots/sitemap crawl control, WARC and PDF archives
+    # content and robots/sitemap crawl control
     from tesseract_glue_spark.operators.crawl import (
         html_main_content_spark,
-        pdf_spans_spark,
-        pdf_text_extract_spark,
-        warc_ingest_spark,
-        warc_main_content_spark,
         web_robots_filter_spark,
         web_sitemap_discover_spark,
         web_sitemap_parse_spark,
@@ -147,12 +143,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["html_main_content"] = html_main_content_spark
     q["web_robots_filter"] = web_robots_filter_spark
-    q["warc_ingest"] = warc_ingest_spark
-    q["warc_main_content"] = warc_main_content_spark
     q["web_sitemap_parse"] = web_sitemap_parse_spark
     q["web_sitemap_discover"] = web_sitemap_discover_spark
-    q["pdf_text_extract"] = pdf_text_extract_spark
-    q["pdf_spans"] = pdf_spans_spark
     from tesseract_glue_spark.operators.web import extract_web_flat_spark
 
     # composed flagship variant: interleaved web docs — text spans are
@@ -203,10 +195,6 @@ def oracle_sql() -> dict[str, str]:
     o["dedup_components"] = dedup_components_oracle_sql()
     from tesseract_glue_spark.operators.crawl import (
         html_main_content_oracle_sql,
-        pdf_spans_oracle_sql,
-        pdf_text_extract_oracle_sql,
-        warc_ingest_oracle_sql,
-        warc_main_content_oracle_sql,
         web_robots_filter_oracle_sql,
         web_sitemap_discover_oracle_sql,
         web_sitemap_parse_oracle_sql,
@@ -214,12 +202,8 @@ def oracle_sql() -> dict[str, str]:
 
     o["html_main_content"] = html_main_content_oracle_sql()
     o["web_robots_filter"] = web_robots_filter_oracle_sql()
-    o["warc_ingest"] = warc_ingest_oracle_sql()
-    o["warc_main_content"] = warc_main_content_oracle_sql()
     o["web_sitemap_parse"] = web_sitemap_parse_oracle_sql()
     o["web_sitemap_discover"] = web_sitemap_discover_oracle_sql()
-    o["pdf_text_extract"] = pdf_text_extract_oracle_sql()
-    o["pdf_spans"] = pdf_spans_oracle_sql()
     from tesseract_glue_spark.operators.web import extract_web_flat_oracle_sql
 
     o["extract_web_flat"] = extract_web_flat_oracle_sql()

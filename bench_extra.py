@@ -126,11 +126,7 @@ def main() -> None:
             simhash_pairs_sql,
         )
         from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
-        from tesseract_glue_spark.operators.crawl import (
-            html_main_content_spark,
-            pdf_text_extract_spark,
-            warc_main_content_spark,
-        )
+        from tesseract_glue_spark.operators.crawl import html_main_content_spark
 
         specs = {
             "dedup_minhash_lsh": (minhash_lsh_pairs_sql, ("documents",), True),
@@ -150,8 +146,6 @@ def main() -> None:
                 runner = spark_runner(builder, tables=tables)
             run_one(name, lambda r=runner: r(spark, sf_dir))
         run_one("html_main_content", lambda: html_main_content_spark(spark, sf_dir))
-        run_one("pdf_text_extract", lambda: pdf_text_extract_spark(spark, sf_dir))
-        run_one("warc_main_content", lambda: warc_main_content_spark(spark, sf_dir))
 
     print(json.dumps({"metric": "noop_isolated_wall", "queries": results,
                       "sf_dir": sf_dir, "cpus": cpus}))

@@ -44,5 +44,6 @@ class EngineInitError(ExtractionError):
 STATUS_OK = "ok"
 STATUS_EMPTY = "empty"          # recognized, whitespace-normalized to ""
 STATUS_DANGLING = "dangling"    # media_ref not resolvable
-STATUS_DECODE_ERROR = "decode_error"
+STATUS_DECODE_ERROR = "decode_error"  # page bytes unreadable or over the pixel cap
+STATUS_RECOGNIZE_ERROR = "recognize_error"  # page decoded; the recognizer raised
 STATUS_ENGINE_BAD = "engine_bad"

@@ -33,6 +33,25 @@ try:  # optional: widens format coverage when installed (not in sandbox)
 except ImportError:
     _HAVE_PIL = False
 
+MAX_PIXELS = 72_000_000
+"""Largest ``width * height`` a page may declare in its header (PNG
+IHDR, TIFF tags, JP2 ihdr/SIZ, or Pillow's header); :func:`decode_image`
+rejects a larger page before it dispatches to any codec, so no pixel
+data is read. It admits a 600-dpi A3 scan (7016 x 9922 = 69.6 Mpx) with
+a little margin.
+
+On the default path ``ocr_one_page`` holds 2 bytes per pixel at once
+(the inflated scanlines and the decoded page; its ``tracemalloc`` peak
+on a 6 Mpx all-ink page is 2.0 B/px), so about 145 MB at the cap in
+one Python worker. The opt-in layout analysis (``preprocess=True``)
+adds nothing on that page, which Otsu finds uniform. On a 6 Mpx page of
+sheared text lines it peaks at 3.0 B/px (the page, the deskewed copy
+and that copy's mask; the pre-deskew mask is dropped first and the Otsu
+histogram is built in bounded blocks), about 216 MB at the cap. Without
+the cap, a 16000 x 16000 page would need 0.5 GB on the default path and
+0.8 GB with layout analysis, and a few hundred KB of deflate stream can
+declare one."""
+
 
 def _pil_decode(data: bytes) -> np.ndarray:
     import io
@@ -48,20 +67,26 @@ def decode_image(data: bytes) -> np.ndarray:
     """Decode PNG or TIFF page bytes to a 2-D uint8 grayscale array,
     dispatching on magic bytes; unknown containers go to Pillow when
     installed, else raise :class:`ImageDecodeError` (degrade-don't-die:
-    callers map this to an error-status row)."""
+    callers map this to an error-status row). A page declaring more
+    than :data:`MAX_PIXELS` pixels in its header raises before any
+    codec runs."""
     if not isinstance(data, (bytes, bytearray, memoryview)) or len(data) < 4:
         raise ImageDecodeError("not an image buffer")
-    head = bytes(data[:8])
+    data = bytes(data)
+    w, h = image_dims_any(data)
+    if w * h > MAX_PIXELS:
+        raise ImageDecodeError(f"page {w}x{h} exceeds the {MAX_PIXELS}-pixel cap")
+    head = data[:8]
     if head == _PNG_SIG:
-        return decode_png(bytes(data))
+        return decode_png(data)
     if head[:4] in (TIFF_SIG_LE, TIFF_SIG_BE):
-        return decode_tiff(bytes(data))
-    if is_jp2(bytes(data[:12])):
+        return decode_tiff(data)
+    if is_jp2(data[:12]):
         # header parse is built-in; the entropy decode inside needs a
         # JPEG-2000-capable Pillow and degrades to the typed error
-        return decode_jp2(bytes(data))
+        return decode_jp2(data)
     if _HAVE_PIL:
-        return _pil_decode(bytes(data))
+        return _pil_decode(data)
     raise ImageDecodeError(f"unrecognized image container (magic {head[:4]!r})")
 
 

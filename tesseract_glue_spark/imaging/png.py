@@ -26,24 +26,6 @@ from tesseract_glue_spark.errors import ImageDecodeError
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
-MAX_PIXELS = 72_000_000
-"""Largest ``width * height`` a page may declare in IHDR (or, for
-:func:`~tesseract_glue_spark.imaging.tiff.decode_tiff`, in its tags); a
-larger page is rejected before any pixel data is read. It admits a
-600-dpi A3 scan (7016 x 9922 = 69.6 Mpx) with a little margin.
-
-On the default path ``ocr_one_page`` holds 2 bytes per pixel at once
-(the inflated scanlines and the decoded page; its ``tracemalloc`` peak
-on a 6 Mpx all-ink page is 2.0 B/px), so about 145 MB at the cap in
-one Python worker. The opt-in layout analysis (``preprocess=True``)
-adds nothing on that page, which Otsu finds uniform. On a 6 Mpx page of
-sheared text lines it peaks at 4.0 B/px (the page, its ink mask, the
-deskewed copy and that copy's mask; the Otsu histogram is built in
-bounded blocks), about 290 MB at the cap. Without the cap, a
-16000 x 16000 page would need 0.5 GB on the default path and 1.0 GB
-with layout analysis, and a few hundred KB of deflate stream can
-declare one."""
-
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
     return (
@@ -126,15 +108,16 @@ def decode_png(data: bytes) -> np.ndarray:
             body = data[pos + 8 : pos + 8 + length]
             if len(body) != length:
                 raise ImageDecodeError("truncated PNG chunk")
+            # IHDR is the first chunk and only there (the spec's order):
+            # the header-only pixel cap of codecs.decode_image reads the
+            # dims from that position, so no later chunk may redefine them
+            if (pos == 8) != (tag == b"IHDR"):
+                raise ImageDecodeError("PNG IHDR is not the first and only header chunk")
             if tag == b"IHDR":
                 w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", body)
                 if depth != 8 or ctype != 0 or interlace != 0:
                     raise ImageDecodeError(
                         f"unsupported PNG variant depth={depth} color={ctype} interlace={interlace}"
-                    )
-                if w * h > MAX_PIXELS:
-                    raise ImageDecodeError(
-                        f"PNG {w}x{h} exceeds the {MAX_PIXELS}-pixel cap"
                     )
             elif tag == b"IDAT":
                 idat += body

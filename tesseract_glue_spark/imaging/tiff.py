@@ -29,7 +29,6 @@ import struct
 import numpy as np
 
 from tesseract_glue_spark.errors import ImageDecodeError
-from tesseract_glue_spark.imaging.png import MAX_PIXELS
 
 TIFF_SIG_LE = b"II*\x00"
 TIFF_SIG_BE = b"MM\x00*"
@@ -165,8 +164,7 @@ def decode_tiff(data: bytes) -> np.ndarray:
     array (black-is-zero orientation; WhiteIsZero input is inverted).
 
     Raises :class:`ImageDecodeError` on any unsupported variant or
-    malformed structure, and on a page declaring more than
-    ``png.MAX_PIXELS`` pixels, before any strip is read."""
+    malformed structure."""
     if not isinstance(data, (bytes, bytearray)) or len(data) < 8:
         raise ImageDecodeError("not a TIFF buffer")
     data = bytes(data)
@@ -195,8 +193,6 @@ def decode_tiff(data: bytes) -> np.ndarray:
             raise ImageDecodeError(f"unsupported TIFF photometric {photo}")
         if w <= 0 or h <= 0:
             raise ImageDecodeError("invalid TIFF dimensions")
-        if w * h > MAX_PIXELS:
-            raise ImageDecodeError(f"TIFF {w}x{h} exceeds the {MAX_PIXELS}-pixel cap")
         if _T_STRIP_OFFSETS not in entries:
             raise ImageDecodeError("TIFF missing strip offsets (tiled TIFF?)")
         offsets = _tag_values(data, bo, entries[_T_STRIP_OFFSETS])

@@ -1,8 +1,8 @@
 """Operator benchmarks picked up by bench.py (name -> zero-arg thunk).
 
 Covers the heavy non-extraction families: MinHash-LSH dedup, n-gram
-Jaccard, SimHash pairs, text quality + language id, and the crawl-input
-HTML/PDF/WARC readers.
+Jaccard, SimHash pairs, text quality + language id, and crawl-input
+HTML main content.
 """
 
 from __future__ import annotations
@@ -38,13 +38,7 @@ def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
         else:
             runner = spark_runner(builder, tables=tables)
         out[name] = (lambda r=runner: r(spark, sf_dir).count())
-    from tesseract_glue_spark.operators.crawl import (
-        html_main_content_spark,
-        pdf_text_extract_spark,
-        warc_main_content_spark,
-    )
+    from tesseract_glue_spark.operators.crawl import html_main_content_spark
 
     out["html_main_content"] = lambda: html_main_content_spark(spark, sf_dir).count()
-    out["pdf_text_extract"] = lambda: pdf_text_extract_spark(spark, sf_dir).count()
-    out["warc_main_content"] = lambda: warc_main_content_spark(spark, sf_dir).count()
     return out

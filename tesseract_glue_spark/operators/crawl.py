@@ -1,8 +1,6 @@
 """Crawl-input operators over a synthetic page corpus: HTML main
-content, the URL frontier (canonicalize, dedup, politeness waves),
-robots.txt and sitemap crawl control, and the WARC and PDF archive
-readers (:mod:`tesseract_glue_spark.web.warc`,
-:mod:`tesseract_glue_spark.web.pdf`).
+content, the URL frontier (canonicalize, dedup, politeness waves) and
+robots.txt and sitemap crawl control.
 
 None of these is an extraction entry point: ``run_extract``,
 ``extract_stream`` and ``entry()`` reach only
@@ -11,13 +9,11 @@ None of these is an extraction entry point: ``run_extract``,
 
 Gate design follows the repo's synthetic-truth pattern (``functions/
 truth.py``): the corpus is derived *deterministically from the
-``documents`` table* — an HTML page is synthesized around each doc's
-text by a shared dual-dialect SQL template, a PDF or WARC archive is
-synthesized from the same text inside the workers — so the REAL
-parsers run end-to-end in Spark while DuckDB computes the expected
+``documents`` table* — an HTML page or sitemap fragment is synthesized
+around each doc's text by a shared dual-dialect SQL template — so the
+REAL parsers run end-to-end in Spark while DuckDB computes the expected
 output in closed form. The parsers' edge cases (malformed nesting,
-entities, escapes, TJ arrays, kerning, uncompressed streams, gzip
-members) are covered by handwritten adversarial fixtures in
+entities, comments) are covered by handwritten adversarial fixtures in
 ``tests/test_web.py`` so generator and parser cannot mirror each
 other's bugs.
 """
@@ -687,309 +683,5 @@ def web_robots_filter_oracle_sql(table: str = "documents") -> str:
     SELECT doc_id, {_ROBOTS_URL_EXPR} AS url,
            CAST(CASE WHEN doc_id % 3 IN (0, 1) THEN 0 ELSE 1 END AS BIGINT) AS allowed,
            CAST({ROBOTS_CRAWL_DELAY_MS} AS BIGINT) AS crawl_delay_ms
-    FROM {table}
-    """.strip()
-
-
-# ------------------------------------------------------------------ WARC
-
-# Crawl-synthesis contract: one .warc.gz archive per doc — warcinfo +
-# request + response records; response is the doc's HTML page with HTTP
-# 200, except every 13th doc is a 404 with a 'not found' text body (the
-# ingest filter must route on status, not assume success).
-_WARC_URL = "'https://example.org/doc/' || CAST(doc_id AS STRING)"
-_WARC_404 = "doc_id % 13 = 0"
-_CT_HTML = "text/html; charset=utf-8"
-_CT_PLAIN = "text/plain"
-
-WARC_INGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("http_status", T.LongType()),
-        T.StructField("content_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-WARC_MAIN_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("main_text", T.StringType()),
-    ]
-)
-
-
-def _synthesize_warc(doc_id: int, html: str) -> bytes:
-    from tesseract_glue_spark.web.warc import encode_http_response, encode_warc
-
-    url = f"https://example.org/doc/{doc_id}"
-    if doc_id % 13 == 0:
-        resp = encode_http_response(404, "Not Found", _CT_PLAIN, b"not found")
-    else:
-        resp = encode_http_response(200, "OK", _CT_HTML, html.encode("utf-8"))
-    return encode_warc(
-        [
-            ("warcinfo", "", {"WARC-Filename": f"doc-{doc_id}.warc.gz"}, b"software: synthetic"),
-            ("request", url, {}, b"GET / HTTP/1.1\r\nHost: example.org\r\n\r\n"),
-            ("response", url, {}, resp),
-        ],
-        compress=True,
-    )
-
-
-
-def _warc_corpus_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
-    return fan_out(spark.sql(html_corpus_sql(D.SPARK)))
-
-
-def warc_ingest_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-archive ingestion: gzip-member WARC parse → one row per
-    response record (url, status, content type, payload size). The
-    byte counts value-check the whole framing roundtrip (HTTP
-    Content-Length slicing included).
-
-    Fused synthesize→parse in ONE mapInPandas kernel: the former
-    two-kernel chain (synth stage → parse stage, pipelined) paid two
-    Python worker round-trips per task (~7 ms fixed cost each) to move
-    a gzip blob that is produced and consumed inside the same task —
-    the archive roundtrip itself (encode_warc → warc_responses) is
-    unchanged, so the framing is still fully exercised."""
-    from tesseract_glue_spark.web.warc import warc_responses
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                blob = _synthesize_warc(int(doc_id), html)
-                for r in warc_responses(blob):
-                    rows.append(
-                        (doc_id, r["url"], r["http_status"], r["content_type"], len(r["body"]))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in WARC_INGEST_SCHEMA.fields])
-
-    return _warc_corpus_src(spark, sf_dir).mapInPandas(run, schema=WARC_INGEST_SCHEMA)
-
-
-def warc_ingest_oracle_sql(table: str = "documents") -> str:
-    # octet_length(encode(...)): UTF-8 BYTE count — the Spark side
-    # measures len(body bytes), and char count only coincides on ASCII
-    body_len = f"octet_length(encode({html_corpus_expr(D.DUCKDB)}))"
-    return f"""
-    SELECT doc_id,
-           {_WARC_URL} AS url,
-           CAST(CASE WHEN {_WARC_404} THEN 404 ELSE 200 END AS BIGINT) AS http_status,
-           CASE WHEN {_WARC_404} THEN '{_CT_PLAIN}' ELSE '{_CT_HTML}' END AS content_type,
-           CAST(CASE WHEN {_WARC_404} THEN 9 ELSE {body_len} END AS BIGINT) AS n_bytes
-    FROM {table}
-    """.strip()
-
-
-def warc_main_content_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed crawl pipeline: WARC parse → keep HTTP-200 HTML
-    responses → DOM-strip the payload to main content. Parse and strip
-    pipeline in the generator's stage (no blob shuffle)."""
-    from tesseract_glue_spark.web.html_main import extract_main
-    from tesseract_glue_spark.web.warc import decode_http_body, warc_responses
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                blob = _synthesize_warc(int(doc_id), html)  # fused synth→parse
-                for r in warc_responses(blob):
-                    if r["http_status"] != 200 or not r["content_type"].startswith("text/html"):
-                        continue
-                    main = extract_main(decode_http_body(r["body"], r["content_type"]))[
-                        "main_text"
-                    ]
-                    rows.append((doc_id, r["url"], main))
-            yield pd.DataFrame(rows, columns=[f.name for f in WARC_MAIN_SCHEMA.fields])
-
-    return _warc_corpus_src(spark, sf_dir).mapInPandas(run, schema=WARC_MAIN_SCHEMA)
-
-
-def warc_main_content_oracle_sql(table: str = "documents") -> str:
-    return f"""
-    SELECT doc_id, {_WARC_URL} AS url, {expected_main_text_expr()} AS main_text
-    FROM {table} WHERE NOT ({_WARC_404})
-    """.strip()
-
-
-# ------------------------------------------------------------------- PDF
-
-# Corpus-construction contract: page 1 carries the doc text as three
-# 40-char chunks placed out of emission order — c0 top-left, c2 top-right
-# (same line as c0), c1 on the line below — so the reading-order sort is
-# load-bearing; page 2 carries a derivable marker line. Chunks whose
-# trimmed text is empty are not drawn.
-_CHUNK = 40
-_L0_Y, _L1_Y = 720.0, 700.0
-_C0_X, _C2_X = 72.0, 300.0
-
-
-def synthesize_doc_pdf(doc_id: int, text: str) -> bytes:
-    from tesseract_glue_spark.web.pdf import encode_pdf
-
-    c0, c1, c2 = text[:_CHUNK], text[_CHUNK : 2 * _CHUNK], text[2 * _CHUNK : 3 * _CHUNK]
-    page1 = []
-    if c1.strip():
-        page1.append((_C0_X, _L1_Y, c1))
-    if c2.strip():
-        page1.append((_C2_X, _L0_Y, c2))
-    if c0.strip():
-        page1.append((_C0_X, _L0_Y, c0))
-    page2 = [(_C0_X, _L0_Y, f"doc {doc_id} has {len(text)} chars")]
-    return encode_pdf([page1, page2])
-
-
-PDF_TEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("page_no", T.LongType()),
-        T.StructField("page_text", T.StringType()),
-        T.StructField("status", T.StringType()),
-    ]
-)
-
-PDF_SPANS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("page_no", T.LongType()),
-        T.StructField("x", T.LongType()),
-        T.StructField("y", T.LongType()),
-        T.StructField("seg_text", T.StringType()),
-    ]
-)
-
-
-def pdf_extract_text(docs: DataFrame) -> DataFrame:
-    """(doc_id, pdf: binary) → per-page reading-order text. Undecodable
-    PDFs yield a placeholder row (status='decode_error'), never a silent
-    drop — same corruption-screen policy as the image path."""
-    from tesseract_glue_spark.web.pdf import PdfDecodeError, extract_pdf_spans, reading_order_text
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, blob in zip(pdf_batch["doc_id"], pdf_batch["pdf"]):
-                try:
-                    spans = extract_pdf_spans(bytes(blob or b""))
-                except PdfDecodeError:
-                    rows.append((doc_id, 0, "", "decode_error"))
-                    continue
-                for page_no, page_text in reading_order_text(spans):
-                    rows.append((doc_id, page_no, page_text, "ok"))
-            yield pd.DataFrame(rows, columns=[f.name for f in PDF_TEXT_SCHEMA.fields])
-
-    return fan_out(docs.select("doc_id", "pdf")).mapInPandas(run, schema=PDF_TEXT_SCHEMA)
-
-
-def _pdf_roundtrip_kernel(out_spans: bool):
-    """ONE mapInPandas kernel doing synthesize → parse per row. The
-    former two-kernel chain (synth mapInPandas → parse mapInPandas)
-    pipelined in one stage but paid TWO Python worker round-trips per
-    task — at a measured ~7 ms fixed cost per mapInPandas task, the
-    gate query's 128-task × 2-kernel stage spent ~1.8 s on protocol
-    for ~30 ms of actual per-row work. Same bytes synthesized, same
-    parser, same rows."""
-    from tesseract_glue_spark.web.pdf import (
-        PdfDecodeError,
-        extract_pdf_spans,
-        reading_order_text,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = PDF_SPANS_SCHEMA if out_spans else PDF_TEXT_SCHEMA
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, txt in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                blob = synthesize_doc_pdf(int(doc_id), txt or "")
-                try:
-                    spans = extract_pdf_spans(blob)
-                except PdfDecodeError:
-                    if not out_spans:
-                        rows.append((doc_id, 0, "", "decode_error"))
-                    continue
-                if out_spans:
-                    for page_no, x, y, seg in spans:
-                        rows.append((doc_id, page_no, int(x), int(y), seg))
-                else:
-                    for page_no, page_text in reading_order_text(spans):
-                        rows.append((doc_id, page_no, page_text, "ok"))
-            yield pd.DataFrame(rows, columns=[f.name for f in cols.fields])
-
-    return run
-
-
-def _pdf_text_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", F.expr(doc_text_expr(D.SPARK)).alias("text")
-    )
-    return fan_out(docs)
-
-
-def pdf_text_extract_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused synthesize→parse kernel: one Python stage, one blob-free
-    # fan-out of (doc_id, text); the PDF bytes never cross a boundary
-    return _pdf_text_src(spark, sf_dir).mapInPandas(
-        _pdf_roundtrip_kernel(out_spans=False), schema=PDF_TEXT_SCHEMA
-    ).select("doc_id", "page_no", "page_text")
-
-
-def _chunk_exprs() -> tuple[str, str, str]:
-    doc = doc_text_expr(D.DUCKDB)
-    c0 = f"substr({doc}, 1, {_CHUNK})"
-    c1 = f"substr({doc}, {_CHUNK + 1}, {_CHUNK})"
-    c2 = f"substr({doc}, {2 * _CHUNK + 1}, {_CHUNK})"
-    return c0, c1, c2
-
-
-def pdf_text_extract_oracle_sql(table: str = "documents") -> str:
-    """Expected reading-order text from the chunk-placement contract:
-    line 1 = trim(c0) + ' ' + trim(c2) (left→right on y=720), line 2 =
-    trim(c1); empty trimmed chunks drop out (concat_ws skips NULLs)."""
-    c0, c1, c2 = _chunk_exprs()
-    line1 = f"concat_ws(' ', nullif(trim({c0}), ''), nullif(trim({c2}), ''))"
-    page1 = f"concat_ws(chr(10), nullif({line1}, ''), nullif(trim({c1}), ''))"
-    page2 = "'doc ' || CAST(doc_id AS VARCHAR) || ' has ' || CAST(length(" + doc_text_expr(D.DUCKDB) + ") AS VARCHAR) || ' chars'"
-    return f"""
-    SELECT doc_id, CAST(1 AS BIGINT) AS page_no, {page1} AS page_text
-    FROM {table} WHERE {page1} <> ''
-    UNION ALL
-    SELECT doc_id, CAST(2 AS BIGINT) AS page_no, {page2} AS page_text
-    FROM {table}
-    """.strip()
-
-
-def pdf_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused synthesize→parse kernel — see _pdf_roundtrip_kernel
-    return _pdf_text_src(spark, sf_dir).mapInPandas(
-        _pdf_roundtrip_kernel(out_spans=True), schema=PDF_SPANS_SCHEMA
-    )
-
-
-def pdf_spans_oracle_sql(table: str = "documents") -> str:
-    """Raw spans exactly as drawn (untrimmed chunk text, int positions),
-    one UNION branch per placement rule."""
-    c0, c1, c2 = _chunk_exprs()
-    marker = "'doc ' || CAST(doc_id AS VARCHAR) || ' has ' || CAST(length(" + doc_text_expr(D.DUCKDB) + ") AS VARCHAR) || ' chars'"
-    return f"""
-    SELECT doc_id, CAST(1 AS BIGINT) AS page_no, CAST({int(_C0_X)} AS BIGINT) AS x,
-           CAST({int(_L0_Y)} AS BIGINT) AS y, {c0} AS seg_text
-    FROM {table} WHERE trim({c0}) <> ''
-    UNION ALL
-    SELECT doc_id, CAST(1 AS BIGINT), CAST({int(_C2_X)} AS BIGINT),
-           CAST({int(_L0_Y)} AS BIGINT), {c2}
-    FROM {table} WHERE trim({c2}) <> ''
-    UNION ALL
-    SELECT doc_id, CAST(1 AS BIGINT), CAST({int(_C0_X)} AS BIGINT),
-           CAST({int(_L1_Y)} AS BIGINT), {c1}
-    FROM {table} WHERE trim({c1}) <> ''
-    UNION ALL
-    SELECT doc_id, CAST(2 AS BIGINT), CAST({int(_C0_X)} AS BIGINT),
-           CAST({int(_L0_Y)} AS BIGINT), {marker}
     FROM {table}
     """.strip()

@@ -139,7 +139,10 @@ def ocr_one_page(engine, config: ExtractionConfig, img_bytes):
                 if abs(shear) > 1e-3:
                     # deskew preserves pixel values → the Otsu
                     # threshold is unchanged; re-binarize by
-                    # compare only (no second histogram pass)
+                    # compare only (no second histogram pass). The
+                    # old mask goes first, so the page, its deskewed
+                    # copy and the new mask are all that is held.
+                    del ink
                     body = kernels.deskew(body, shear)
                     ink = body <= t
                 n_zones = len(kernels.xy_cut(ink))
@@ -153,9 +156,11 @@ def ocr_one_page(engine, config: ExtractionConfig, img_bytes):
         conf = 0 if not engine.good else 10000
         return (text, status, w, h, n_zones, float(shear), conf,
                 int(1e6 * (_time.perf_counter() - _t0)))
-    except errors.ExtractionError:
-        return ("", errors.STATUS_DECODE_ERROR, 0, 0, 0, 0.0, 0,
-                int(1e6 * (_time.perf_counter() - _t0)))
+    except errors.ImageDecodeError:
+        status = errors.STATUS_DECODE_ERROR
+    except errors.ExtractionError:  # the page decoded; the recognizer failed
+        status = errors.STATUS_RECOGNIZE_ERROR
+    return ("", status, 0, 0, 0, 0.0, 0, int(1e6 * (_time.perf_counter() - _t0)))
 
 
 def fan_out(df: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -277,6 +282,9 @@ def ocr_partition_metrics(ocr: DataFrame) -> DataFrame:
         F.sum(
             F.when(F.col("ocr_status") == errors.STATUS_DECODE_ERROR, 1).otherwise(0)
         ).alias("n_decode_errors"),
+        F.sum(
+            F.when(F.col("ocr_status") == errors.STATUS_RECOGNIZE_ERROR, 1).otherwise(0)
+        ).alias("n_recognize_errors"),
         F.sum("n_zones").alias("n_zones_total"),
         F.avg(F.abs("shear")).alias("avg_abs_shear"),
         F.avg("confidence_x10k").alias("avg_confidence_x10k"),
@@ -337,7 +345,9 @@ def _metric_aggs() -> list:
         .alias("ocr_empty_pages"),
         F.max(
             F.when(
-                F.col("ocr_status").isin(errors.STATUS_DANGLING, errors.STATUS_DECODE_ERROR)
+                F.col("ocr_status").isin(
+                    errors.STATUS_DANGLING, errors.STATUS_DECODE_ERROR, errors.STATUS_RECOGNIZE_ERROR
+                )
                 & (F.col("kind") == "media"),
                 1,
             ).otherwise(0)

@@ -7,9 +7,4 @@ navigation/footer/ad chrome before the text enters a training corpus.
 The kernel here is dependency-free (one compiled-regex tokenizer, with
 stdlib ``html.parser`` as its differential reference) and runs
 Arrow-batched inside ``mapInPandas`` — never per-row Python UDFs.
-
-The archive readers :mod:`.pdf` (from-scratch PDF text/layout parse)
-and :mod:`.warc` (WARC/HTTP record framing) serve only the crawl-input
-gate queries of ``operators/crawl.py``; no extraction entry point
-reaches them.
 """

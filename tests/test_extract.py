@@ -332,12 +332,12 @@ class TestRobustness:
         assert a == b and len(b) == 21
 
     def test_over_cap_page_degrades_only_its_doc(self, spark, docs, pages):
-        """A white page declaring just over ``png.MAX_PIXELS`` pixels is
+        """A white page declaring just over ``codecs.MAX_PIXELS`` pixels is
         rejected from its header: its doc reads ``partial``, every other
         doc keeps its status, and the job completes (local mode runs each
         task once, so a task failure would fail the job). Without the cap
         the page inflates to 72 MB, decodes, and its doc reads ``ok``."""
-        from tesseract_glue_spark.imaging.png import MAX_PIXELS
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS
         from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC
         from tests.conftest import streamed_png
 
@@ -351,14 +351,51 @@ class TestRobustness:
         )
         _assert_page_degrades_only_its_doc(spark, docs, pages, page, w, h)
 
+    def test_recognizer_failure_is_not_a_decode_error(self, spark):
+        """A page that decodes but carries no fixture payload fails in
+        the recognizer: it reads ``recognize_error``, not
+        ``decode_error``, and its doc still reads ``partial``. A
+        truncated page still reads ``decode_error``."""
+        import numpy as np
+
+        from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA, PAGES_SCHEMA
+        from tesseract_glue_spark.imaging.png import encode_png
+
+        blank = encode_png(np.full((40, 60), 255, dtype=np.uint8))
+        bad_docs = spark.createDataFrame(
+            [
+                (990002, [("media", "", "no_payload", 0)]),
+                (990003, [("media", "", "truncated", 0)]),
+            ],
+            schema=DOCUMENTS_SCHEMA,
+        )
+        bad_pages = spark.createDataFrame(
+            [
+                ("no_payload", blank, 60, 40, ""),
+                ("truncated", blank[: len(blank) // 2], 60, 40, ""),
+            ],
+            schema=PAGES_SCHEMA,
+        )
+        cfg = ExtractionConfig()
+        ocr = extract.ocr_media(extract.explode_spans(bad_docs), bad_pages, cfg)
+        assert {r["media_ref"]: r["ocr_status"] for r in ocr.collect()} == {
+            "no_payload": "recognize_error",
+            "truncated": "decode_error",
+        }
+        m = extract.ocr_partition_metrics(ocr).collect()
+        assert sum(r["n_recognize_errors"] for r in m) == 1
+        assert sum(r["n_decode_errors"] for r in m) == 1
+        out = extract.extract_documents(bad_docs, bad_pages, cfg).collect()
+        assert {r["doc_id"]: r["status"] for r in out} == {990002: "partial", 990003: "partial"}
+
     def test_over_cap_tiff_page_degrades_only_its_doc(self, spark, docs, pages):
-        """A TIFF page declaring just over ``png.MAX_PIXELS`` pixels, its
+        """A TIFF page declaring just over ``codecs.MAX_PIXELS`` pixels, its
         first strip an empty stub payload and every other strip one
         shared white block, is rejected from its tags: its doc reads
         ``partial`` and every other doc keeps its status. Without the
         cap the strips fill the page, it decodes, and its doc reads
         ``ok``."""
-        from tesseract_glue_spark.imaging.png import MAX_PIXELS
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS
         from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC
         from tests.conftest import strip_bomb_tiff
 
@@ -483,6 +520,40 @@ class TestLayoutAnalysisOptIn:
         rows = ocr.collect()
         assert any(r["ocr_status"] == "ok" for r in rows)
         assert all(r["n_zones"] == 0 and r["shear"] == 0.0 for r in rows)
+
+    def test_layout_analysis_drops_the_pre_deskew_mask(self):
+        """A 6 Mpx page of sheared text lines through ``ocr_one_page``
+        with layout analysis: the peak holds the page, its deskewed copy
+        and that copy's mask (3.0 B/px), not also the mask from before
+        deskewing (4.0 B/px)."""
+        import tracemalloc
+
+        import numpy as np
+
+        from tesseract_glue_spark.engine import StubBackend
+        from tesseract_glue_spark.imaging.kernels import deskew
+        from tesseract_glue_spark.imaging.png import encode_png
+        from tesseract_glue_spark.imaging.render import PAYLOAD_MAGIC, PAYLOAD_ROWS
+
+        h, w = 2000, 3000
+        page = np.full((h, w), 255, dtype=np.uint8)
+        for y in range(PAYLOAD_ROWS + 40, h - 40, 40):
+            page[y : y + 4] = 0
+        page[:, 40::50] = 255  # break each line into words
+        page = deskew(page, -0.02)  # apply shear
+        page[0, :6] = np.frombuffer(PAYLOAD_MAGIC + bytes(4), dtype=np.uint8)  # empty text
+        data = encode_png(page)
+        cfg = ExtractionConfig(preprocess=True)
+        tracemalloc.start()
+        try:
+            text, status, _, _, n_zones, shear, _, _ = extract.ocr_one_page(
+                StubBackend(cfg), cfg, data
+            )
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert (text, status) == ("", "empty") and n_zones >= 1 and abs(shear) > 1e-3
+        assert peak <= 3.5 * page.size, peak / page.size
 
 
 class TestTiffPageStore:

@@ -94,12 +94,12 @@ class TestPng:
     def test_pixel_cap_checked_before_inflate(self, monkeypatch):
         import zlib
 
-        from tesseract_glue_spark.imaging import png
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image
         from tests.conftest import streamed_png
 
-        assert 7016 * 9922 <= png.MAX_PIXELS  # a 600-dpi A3 page decodes
+        assert 7016 * 9922 <= MAX_PIXELS  # a 600-dpi A3 page decodes
         w = 10_000
-        h = png.MAX_PIXELS // w + 1
+        h = MAX_PIXELS // w + 1
         page = streamed_png(w, h, [b"\x00" + b"\xff" * w])
 
         def no_inflate(*_a, **_k):
@@ -107,7 +107,31 @@ class TestPng:
 
         monkeypatch.setattr(zlib, "decompressobj", no_inflate)
         with pytest.raises(ImageDecodeError, match="pixel cap"):
-            decode_png(page)
+            decode_image(page)
+
+    def test_ihdr_only_as_first_chunk(self, monkeypatch):
+        """The pixel cap reads the dims where the first chunk's IHDR
+        body sits. A small decoy chunk there, or a second IHDR, must not
+        let a later over-cap header through to the inflate."""
+        import struct
+        import zlib
+
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image
+        from tesseract_glue_spark.imaging.png import _PNG_SIG, _chunk
+        from tests.conftest import streamed_png
+
+        w = 10_000
+        big = streamed_png(w, MAX_PIXELS // w + 1, [b"\x00" + b"\xff" * w])[8:]
+        small_ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", 10, 10, 8, 0, 0, 0, 0))
+        decoy = _chunk(b"tEXt", struct.pack(">II", 10, 10) + b"decoy")
+
+        def no_inflate(*_a, **_k):
+            raise AssertionError("inflated a page past its first-chunk header")
+
+        monkeypatch.setattr(zlib, "decompressobj", no_inflate)
+        for page in (_PNG_SIG + decoy + big, _PNG_SIG + small_ihdr + big):
+            with pytest.raises(ImageDecodeError, match="IHDR"):
+                decode_image(page)
 
 
 class TestJp2:
@@ -153,6 +177,17 @@ class TestJp2:
             pytest.skip("JPEG-2000-capable Pillow present: decode path live")
         with pytest.raises(ImageDecodeError):
             decode_image(encode_jp2_skeleton(16, 16))
+
+    def test_pixel_cap_covers_jp2(self):
+        """An over-cap JP2 header is rejected by the cap itself, before
+        the codec (whose pixel decode, with openjpeg, has no cap of its
+        own) is reached."""
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image
+        from tesseract_glue_spark.imaging.jp2 import encode_jp2_skeleton
+
+        w = 10_000
+        with pytest.raises(ImageDecodeError, match="pixel cap"):
+            decode_image(encode_jp2_skeleton(w, MAX_PIXELS // w + 1))
 
     def test_corrupt_headers_typed_or_zero_dims(self):
         from tesseract_glue_spark.imaging.jp2 import (
@@ -849,25 +884,24 @@ class TestTiff:
         assert peak <= 1.1 * w * h, peak
 
     def test_pixel_cap_checked_before_strips(self):
-        """A TIFF declaring more than ``png.MAX_PIXELS`` pixels is rejected
+        """A TIFF declaring more than ``codecs.MAX_PIXELS`` pixels is rejected
         from its tags: its strips point past the end of the file, so
         reading any of them would raise a truncation error instead."""
         import struct
 
-        from tesseract_glue_spark.imaging import png
-        from tesseract_glue_spark.imaging.tiff import decode_tiff
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image
         from tests.conftest import strip_bomb_tiff
 
         w = 10_000
-        h = png.MAX_PIXELS // w + 1
+        h = MAX_PIXELS // w + 1
         data = bytearray(strip_bomb_tiff(w, h, b"\xff" * (100 * w)))
         del data[-100 * w :]  # the shared block is gone
         with pytest.raises(ImageDecodeError, match="pixel cap"):
-            decode_tiff(bytes(data))
+            decode_image(bytes(data))
         # the same file one row under the cap reads its strips and fails there
         struct.pack_into("<I", data, 8 + 2 + 12 + 8, h - 1)
         with pytest.raises(ImageDecodeError, match="truncated TIFF strip"):
-            decode_tiff(bytes(data))
+            decode_image(bytes(data))
 
 
 class TestCodecDispatch:

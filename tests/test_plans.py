@@ -114,18 +114,6 @@ class TestPackingPlanShape:
 
 
 class TestWebPlanShape:
-    def test_pdf_pipeline_single_blob_shuffle(self, spark):
-        """synthesize→parse is ONE fused kernel (r6): exactly one
-        round-robin fan-out of (doc_id, text) — the PDF blob is
-        produced and consumed inside the same Python worker call, so
-        no exchange ever moves it and the stage pays ONE mapInPandas
-        task protocol round-trip, not two."""
-        from tesseract_glue_spark.operators.crawl import pdf_text_extract_spark
-
-        plan = C.plan_text(pdf_text_extract_spark(spark, SF_DIR), mode="simple")
-        assert plan.count("Exchange") == 1, plan
-        assert plan.count("MapInPandas") == 1, plan
-
     def test_html_strip_scan_prunes_and_fans_out(self, spark):
         """The HTML corpus scan reads only (doc_id, text); the stripper
         sits behind an explicit round-robin fan-out that must survive

@@ -130,60 +130,6 @@ class TestKernelProperties:
 
 class TestWebCodecProperties:
     @given(
-        segs=st.lists(
-            st.tuples(
-                st.integers(0, 600),
-                st.integers(0, 780),
-                st.text(
-                    st.characters(min_codepoint=32, max_codepoint=126), min_size=1, max_size=60
-                ),
-            ),
-            min_size=1,
-            max_size=8,
-        ),
-        compress=st.booleans(),
-    )
-    @settings(max_examples=40, deadline=None)
-    def test_pdf_roundtrip_any_ascii_segments(self, segs, compress):
-        """encode→extract reproduces every segment's text and position
-        exactly — including parens/backslashes, which must survive the
-        PDF string escaping."""
-        from tesseract_glue_spark.web.pdf import encode_pdf, extract_pdf_spans
-
-        spans = extract_pdf_spans(encode_pdf([segs], compress=compress))
-        assert spans == [(1, float(x), float(y), s) for x, y, s in segs]
-
-    @given(
-        payloads=st.lists(st.binary(min_size=0, max_size=300), min_size=1, max_size=5),
-        status=st.sampled_from([200, 301, 404, 503]),
-        compress=st.booleans(),
-    )
-    @settings(max_examples=40, deadline=None)
-    def test_warc_roundtrip_any_binary_payloads(self, payloads, status, compress):
-        """Response bodies — arbitrary bytes, including CRLFs and fake
-        'endstream'/'WARC/' markers — survive framing exactly (the
-        Content-Length discipline, never delimiter scanning)."""
-        from tesseract_glue_spark.web.warc import (
-            encode_http_response,
-            encode_warc,
-            warc_responses,
-        )
-
-        recs = [
-            (
-                "response",
-                f"https://h.org/{i}",
-                {},
-                encode_http_response(status, "X", "application/octet-stream", body),
-            )
-            for i, body in enumerate(payloads)
-        ]
-        got = warc_responses(encode_warc(recs, compress=compress))
-        assert [(r["http_status"], r["body"]) for r in got] == [
-            (status, body) for body in payloads
-        ]
-
-    @given(
         words=st.lists(
             st.text(
                 st.characters(min_codepoint=33, max_codepoint=126, exclude_characters="<>&"),

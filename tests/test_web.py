@@ -1,7 +1,6 @@
 """Web extraction (HTML DOM-heuristic main content, alone and fused
 with OCR in ``extract_web_documents``) and the crawl-input readers of
-``operators/crawl.py`` (PDF and WARC codecs, robots/sitemap parsing,
-URL frontier).
+``operators/crawl.py`` (robots/sitemap parsing, URL frontier).
 
 Kernel tests use handwritten adversarial fixtures (NOT the synthetic
 gate corpus) so the corpus generators and the parsers cannot mirror
@@ -24,13 +23,6 @@ from tesseract_glue_spark.web.html_main import (
     extract_main,
     segment_blocks,
 )
-from tesseract_glue_spark.web.pdf import (
-    PdfDecodeError,
-    encode_pdf,
-    extract_pdf_spans,
-    reading_order_text,
-)
-
 from tests.conftest import SF_DIR, canonical_csv
 
 LONG = "this paragraph easily clears the twenty five char floor"
@@ -224,266 +216,6 @@ class TestFastParserDifferential:
         assert self._observe(html, False) == self._observe(html, True), html
 
 
-class TestPdfCodec:
-    def test_roundtrip_compressed_and_uncompressed(self):
-        pages = [[(72.0, 720.0, "hello (world)"), (72.0, 700.0, "line \\ two")]]
-        for compress in (True, False):
-            spans = extract_pdf_spans(encode_pdf(pages, compress=compress))
-            assert spans == [(1, 72.0, 720.0, "hello (world)"), (1, 72.0, 700.0, "line \\ two")]
-
-    def test_multipage_order_follows_kids(self):
-        pdf = encode_pdf([[(72, 700, "first")], [(72, 700, "second")]])
-        assert [(p, t) for p, _, _, t in extract_pdf_spans(pdf)] == [
-            (1, "first"),
-            (2, "second"),
-        ]
-
-    def test_handwritten_tj_tm_tstar_escapes_no_xref(self):
-        raw = (
-            b"%PDF-1.4\n"
-            b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-            b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
-            b"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n"
-            b"4 0 obj << >>\nstream\n"
-            b"BT 1 0 0 1 100 650 Tm (oct\\141l \\(ok\\)) Tj ET\n"
-            b"BT 14 TL 72 700 Td [(Hel)-20(lo )(world)] TJ T* (below) Tj ET\n"
-            b"endstream\nendobj\n"
-        )
-        spans = extract_pdf_spans(raw)
-        assert (1, 100.0, 650.0, "octal (ok)") in spans
-        assert (1, 72.0, 700.0, "Hello world") in spans
-        assert (1, 72.0, 686.0, "below") in spans
-
-    def test_reading_order_xy(self):
-        spans = [(1, 300.0, 720.0, "right"), (1, 72.0, 700.0, "lower"), (1, 72.0, 721.0, "left")]
-        assert reading_order_text(spans) == [(1, "left right\nlower")]
-
-    def test_typed_errors(self):
-        with pytest.raises(PdfDecodeError):
-            extract_pdf_spans(b"GIF89a not a pdf")
-        with pytest.raises(PdfDecodeError):
-            extract_pdf_spans(b"%PDF-1.4\nno pages here")
-        # corrupt Flate payload inside a valid skeleton
-        good = bytearray(encode_pdf([[(72, 700, "x" * 50)]]))
-        i = good.index(b"stream\n") + len(b"stream\n")
-        good[i + 5 : i + 15] = b"\x00" * 10
-        with pytest.raises(PdfDecodeError):
-            extract_pdf_spans(bytes(good))
-
-    def test_balanced_unescaped_parens_in_literal_string(self):
-        # PDF spec 7.3.4.2: literal strings may contain BALANCED pairs of
-        # unescaped parentheses — "(a(b)c)" is one string, not two tokens
-        raw = (
-            b"%PDF-1.4\n"
-            b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-            b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
-            b"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n"
-            b"4 0 obj << >>\nstream\n"
-            b"BT 72 700 Td (a(b)c) Tj ET\n"
-            b"BT 72 680 Td [(x(y(z))w)] TJ ET\n"
-            b"endstream\nendobj\n"
-        )
-        spans = extract_pdf_spans(raw)
-        assert (1, 72.0, 700.0, "a(b)c") in spans
-        assert (1, 72.0, 680.0, "x(y(z))w") in spans
-
-    @staticmethod
-    def _pdf_with_xref(objs: list[bytes]) -> bytes:
-        buf = bytearray(b"%PDF-1.4\n")
-        offsets = []
-        for n, body in enumerate(objs, start=1):
-            offsets.append(len(buf))
-            buf += b"%d 0 obj\n%s\nendobj\n" % (n, body)
-        xref_at = len(buf)
-        buf += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-        for off in offsets:
-            buf += b"%010d 00000 n \n" % off
-        buf += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
-            len(objs) + 1,
-            xref_at,
-        )
-        return bytes(buf)
-
-    def test_streamless_objects_bounded_at_endobj(self):
-        # xref path, NO /Kids array: page classification must rely on
-        # correctly-bounded per-object bodies. An unbounded stream-keyword
-        # search from the stream-less Catalog/Font objects would latch
-        # onto object 4's stream, pulling the /Type /Page dict of object
-        # 3 into their bodies and triplicating the page text.
-        content = b"BT 72 700 Td (once) Tj ET\n"
-        pdf = self._pdf_with_xref(
-            [
-                b"<< /Type /Catalog >>",
-                b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-                b"<< /Type /Page /Contents 4 0 R >>",
-                b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-            ]
-        )
-        assert extract_pdf_spans(pdf) == [(1, 72.0, 700.0, "once")]
-
-    def test_stream_payload_containing_keywords(self):
-        # adversarial: the DRAWN TEXT contains PDF structural keywords;
-        # xref + /Length slicing must not be confused by them once they
-        # appear (uncompressed) inside the stream payload
-        evil = "endstream endobj 5 0 obj stream"
-        spans = extract_pdf_spans(encode_pdf([[(72, 700, evil)]], compress=False))
-        assert spans == [(1, 72.0, 700.0, evil)]
-
-
-class TestPdfFuzz:
-    """Volume fuzz for the PDF reader: writer↔parser differential on
-    arbitrary printable-ASCII payloads (the two sides share no code —
-    the writer escapes, the scanner unescapes), plus byte-mutation
-    robustness (any structural damage must surface as PdfDecodeError or
-    a successful tolerant parse, never an untyped exception)."""
-
-    @given(
-        texts=st.lists(
-            st.text(
-                st.characters(min_codepoint=32, max_codepoint=126),
-                min_size=0,
-                max_size=60,
-            ),
-            min_size=1,
-            max_size=6,
-        ),
-        compress=st.booleans(),
-    )
-    @settings(max_examples=250, deadline=None)
-    def test_roundtrip_arbitrary_ascii(self, texts, compress):
-        pages = [
-            [(72.0 + 10 * i, 720.0 - 14 * i, t) for i, t in enumerate(texts)]
-        ]
-        spans = extract_pdf_spans(encode_pdf(pages, compress=compress))
-        assert spans == [
-            (1, 72.0 + 10 * i, 720.0 - 14 * i, t) for i, t in enumerate(texts)
-        ]
-
-    @given(pos=st.integers(min_value=0), byte=st.integers(min_value=0, max_value=255))
-    @settings(max_examples=250, deadline=None)
-    def test_single_byte_mutation_typed_or_parsed(self, pos, byte):
-        base = encode_pdf(
-            [[(72, 700, "stable payload (with) escapes \\ here")],
-             [(72, 700, "page two")]],
-            compress=True,
-        )
-        mutated = bytearray(base)
-        mutated[pos % len(base)] = byte
-        try:
-            extract_pdf_spans(bytes(mutated))
-        except PdfDecodeError:
-            pass  # typed degrade is the contract
-
-
-class TestWarcFuzz:
-    @given(pos=st.integers(min_value=0), byte=st.integers(min_value=0, max_value=255))
-    @settings(max_examples=250, deadline=None)
-    def test_single_byte_mutation_typed_or_parsed(self, pos, byte):
-        from tesseract_glue_spark.web.warc import (
-            WarcDecodeError,
-            encode_http_response,
-            encode_warc,
-            warc_responses,
-        )
-
-        base = encode_warc(
-            [
-                ("warcinfo", "", {}, b"software: fuzz"),
-                (
-                    "response",
-                    "https://x.org/1",
-                    {},
-                    encode_http_response(200, "OK", "text/html", b"<p>body</p>"),
-                ),
-            ],
-            compress=True,
-        )
-        mutated = bytearray(base)
-        mutated[pos % len(base)] = byte
-        try:
-            warc_responses(bytes(mutated))
-        except WarcDecodeError:
-            pass  # typed degrade is the contract
-
-
-class TestWarcCodec:
-    def _recs(self):
-        from tesseract_glue_spark.web.warc import encode_http_response
-
-        return [
-            ("warcinfo", "", {}, b"software: test"),
-            ("request", "https://x.org/1", {}, b"GET /1 HTTP/1.1\r\n\r\n"),
-            (
-                "response",
-                "https://x.org/1",
-                {},
-                encode_http_response(200, "OK", "text/html", b"<p>hello</p>"),
-            ),
-            (
-                "response",
-                "https://x.org/2",
-                {},
-                encode_http_response(404, "Not Found", "text/plain", b"nope"),
-            ),
-        ]
-
-    def test_roundtrip_plain_and_gzip_members(self):
-        from tesseract_glue_spark.web.warc import encode_warc, warc_responses
-
-        for compress in (False, True):
-            got = warc_responses(encode_warc(self._recs(), compress=compress))
-            assert [(r["url"], r["http_status"], r["body"]) for r in got] == [
-                ("https://x.org/1", 200, b"<p>hello</p>"),
-                ("https://x.org/2", 404, b"nope"),
-            ]
-
-    def test_handwritten_record_case_insensitive_headers(self):
-        from tesseract_glue_spark.web.warc import warc_responses
-
-        block = b"HTTP/1.1 200 OK\r\ncontent-TYPE: text/html\r\nCONTENT-length: 4\r\n\r\nbodyEXTRA"
-        raw = (
-            b"WARC/1.0\r\nwarc-type: response\r\nWarc-Target-Uri: https://y.org\r\n"
-            b"content-length: %d\r\n\r\n%s\r\n\r\n" % (len(block), block)
-        )
-        (r,) = warc_responses(raw)
-        # HTTP Content-Length slices the body even when bytes trail it
-        assert (r["url"], r["content_type"], r["body"]) == ("https://y.org", "text/html", b"body")
-
-    def test_reserved_header_names_do_not_clobber_payload(self):
-        # a crafted record with headers literally named "Block" /
-        # "WARC-Type" must not displace the parsed payload keys
-        from tesseract_glue_spark.web.warc import encode_http_response, warc_responses
-
-        http = encode_http_response(200, "OK", "text/html", b"<p>ok</p>")
-        raw = (
-            b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://z.org\r\n"
-            b"Block: evil\r\nWarc_Type: evil\r\n"
-            b"Content-Length: %d\r\n\r\n%s\r\n\r\n" % (len(http), http)
-        )
-        (r,) = warc_responses(raw)
-        assert (r["url"], r["http_status"], r["body"]) == ("https://z.org", 200, b"<p>ok</p>")
-
-    def test_charset_aware_body_decode(self):
-        from tesseract_glue_spark.web.warc import decode_http_body
-
-        assert decode_http_body(b"caf\xe9", "text/html; charset=latin-1") == "caf\xe9"
-        assert decode_http_body(b"caf\xc3\xa9", "text/html; charset=utf-8") == "caf\xe9"
-        # invalid utf-8 with no charset: degrade via replacement, never raise
-        assert "�" in decode_http_body(b"caf\xe9", "text/html")
-        # garbage codec label: fall back to utf-8+replace, never raise
-        assert decode_http_body(b"ok", 'text/html; charset="no-such-enc"') == "ok"
-
-    def test_typed_errors(self):
-        from tesseract_glue_spark.web.warc import WarcDecodeError, encode_warc, warc_responses
-
-        with pytest.raises(WarcDecodeError):
-            warc_responses(b"not a warc")
-        with pytest.raises(WarcDecodeError):
-            warc_responses(encode_warc(self._recs(), compress=True)[:-8])  # truncated member
-        with pytest.raises(WarcDecodeError):
-            warc_responses(b"WARC/1.0\r\nWARC-Type: response\r\n\r\nx")  # no Content-Length
-
-
 @pytest.mark.usefixtures("spark")
 class TestWebSpark:
     def _oracle(self, sql: str):
@@ -501,26 +233,6 @@ class TestWebSpark:
 
         got = html_main_content_spark(spark, SF_DIR).toPandas()
         exp = self._oracle(html_main_content_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_pdf_text_extract_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.crawl import (
-            pdf_text_extract_oracle_sql,
-            pdf_text_extract_spark,
-        )
-
-        got = pdf_text_extract_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(pdf_text_extract_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_pdf_spans_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.crawl import (
-            pdf_spans_oracle_sql,
-            pdf_spans_spark,
-        )
-
-        got = pdf_spans_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(pdf_spans_oracle_sql())
         assert canonical_csv(got) == canonical_csv(exp)
 
     def test_web_sitemap_parse_matches_oracle(self, spark):
@@ -546,21 +258,6 @@ class TestWebSpark:
         assert canonical_csv(got) == canonical_csv(exp)
         row = got[got.doc_id == 0].iloc[0]
         assert row.url_norm == "https://example.com/Doc/0?q=1"  # case/port/fragment rules
-
-    def test_warc_queries_match_oracle(self, spark):
-        from tesseract_glue_spark.operators.crawl import (
-            warc_ingest_oracle_sql,
-            warc_ingest_spark,
-            warc_main_content_oracle_sql,
-            warc_main_content_spark,
-        )
-
-        got = warc_ingest_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(warc_ingest_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        got = warc_main_content_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(warc_main_content_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
 
     def test_web_sitemap_discover_matches_oracle(self, spark):
         """Two-level discovery: sitemapindex parse → child resolution →
@@ -697,14 +394,3 @@ class TestWebSpark:
         ).where("s.kind = 'text'").selectExpr("s.text AS t")
         assert texts.where("t LIKE '%<%'").count() == 0  # markup stripped
         assert texts.where("t <> ''").count() > 0
-
-    def test_pdf_decode_error_yields_placeholder_row(self, spark):
-        from tesseract_glue_spark.operators.crawl import pdf_extract_text
-
-        docs = spark.createDataFrame(
-            [(1, bytearray(b"not a pdf")), (2, bytearray(encode_pdf([[(72, 700, "fine")]])))],
-            schema="doc_id LONG, pdf BINARY",
-        )
-        rows = {r["doc_id"]: r for r in pdf_extract_text(docs).collect()}
-        assert rows[1]["status"] == "decode_error" and rows[1]["page_no"] == 0
-        assert rows[2]["status"] == "ok" and rows[2]["page_text"] == "fine"
