@@ -36,9 +36,9 @@ except ImportError:
 MAX_PIXELS = 72_000_000
 """Largest ``width * height`` a page may declare in its header (PNG
 IHDR, TIFF tags, JP2 ihdr/SIZ, or Pillow's header); :func:`decode_image`
-rejects a larger page before it dispatches to any codec, so no pixel
-data is read. It admits a 600-dpi A3 scan (7016 x 9922 = 69.6 Mpx) with
-a little margin.
+rejects a larger page before any pixel data is read: from the header
+before it dispatches, or for TIFF from the tags before any strip. It
+admits a 600-dpi A3 scan (7016 x 9922 = 69.6 Mpx) with a little margin.
 
 On the default path ``ocr_one_page`` holds 2 bytes per pixel at once
 (the inflated scanlines and the decoded page; its ``tracemalloc`` peak
@@ -63,24 +63,29 @@ def _pil_decode(data: bytes) -> np.ndarray:
         raise ImageDecodeError(f"Pillow failed to decode: {exc}") from exc
 
 
+def _check_pixel_cap(w: int, h: int) -> None:
+    if w * h > MAX_PIXELS:
+        raise ImageDecodeError(f"page {w}x{h} exceeds the {MAX_PIXELS}-pixel cap")
+
+
 def decode_image(data: bytes) -> np.ndarray:
     """Decode PNG or TIFF page bytes to a 2-D uint8 grayscale array,
     dispatching on magic bytes; unknown containers go to Pillow when
     installed, else raise :class:`ImageDecodeError` (degrade-don't-die:
     callers map this to an error-status row). A page declaring more
     than :data:`MAX_PIXELS` pixels in its header raises before any
-    codec runs."""
+    pixel data is read."""
     if not isinstance(data, (bytes, bytearray, memoryview)) or len(data) < 4:
         raise ImageDecodeError("not an image buffer")
     data = bytes(data)
-    w, h = image_dims_any(data)
-    if w * h > MAX_PIXELS:
-        raise ImageDecodeError(f"page {w}x{h} exceeds the {MAX_PIXELS}-pixel cap")
     head = data[:8]
+    if head[:4] in (TIFF_SIG_LE, TIFF_SIG_BE):
+        # the codec checks the cap between its tags and its strips, so
+        # the IFD is parsed once
+        return decode_tiff(data, check_dims=_check_pixel_cap)
+    _check_pixel_cap(*image_dims_any(data))
     if head == _PNG_SIG:
         return decode_png(data)
-    if head[:4] in (TIFF_SIG_LE, TIFF_SIG_BE):
-        return decode_tiff(data)
     if is_jp2(data[:12]):
         # header parse is built-in; the entropy decode inside needs a
         # JPEG-2000-capable Pillow and degrades to the typed error

@@ -146,7 +146,9 @@ def image_dims(data: bytes) -> tuple[int, int]:
     return 0 for a null image (``Image.cpp:15-27``, ``tests/test_basic.cpp:45-58``).
     """
     try:
-        if bytes(data[:8]) != _PNG_SIG:
+        # the dims are read from IHDR as the first chunk, the only place
+        # decode_png accepts it
+        if bytes(data[:8]) != _PNG_SIG or bytes(data[12:16]) != b"IHDR":
             return (0, 0)
         w, h = struct.unpack(">II", bytes(data[16:24]))
         return (int(w), int(h))

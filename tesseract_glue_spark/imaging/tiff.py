@@ -25,6 +25,7 @@ this module doesn't cover.
 from __future__ import annotations
 
 import struct
+from typing import Callable
 
 import numpy as np
 
@@ -159,12 +160,15 @@ def _tag_scalar(data: bytes, bo: str, entries, tid: int, default: int | None = N
     return _tag_values(data, bo, entries[tid])[0]
 
 
-def decode_tiff(data: bytes) -> np.ndarray:
+def decode_tiff(data: bytes, check_dims: Callable[[int, int], None] | None = None) -> np.ndarray:
     """Decode an uncompressed 8-bit grayscale TIFF into a 2-D uint8
     array (black-is-zero orientation; WhiteIsZero input is inverted).
 
-    Raises :class:`ImageDecodeError` on any unsupported variant or
-    malformed structure."""
+    ``check_dims(width, height)``, when given, runs on the tags before
+    any strip is read and may raise to reject the page (the pixel cap
+    of :func:`~tesseract_glue_spark.imaging.codecs.decode_image`, which
+    so parses the IFD once). Raises :class:`ImageDecodeError` on any
+    unsupported variant or malformed structure."""
     if not isinstance(data, (bytes, bytearray)) or len(data) < 8:
         raise ImageDecodeError("not a TIFF buffer")
     data = bytes(data)
@@ -179,6 +183,8 @@ def decode_tiff(data: bytes) -> np.ndarray:
         entries = _read_ifd(data, bo)
         w = _tag_scalar(data, bo, entries, _T_WIDTH)
         h = _tag_scalar(data, bo, entries, _T_HEIGHT)
+        if check_dims is not None:
+            check_dims(w, h)
         bits = _tag_scalar(data, bo, entries, _T_BITS, default=1)
         comp = _tag_scalar(data, bo, entries, _T_COMPRESSION, default=1)
         photo = _tag_scalar(data, bo, entries, _T_PHOTOMETRIC, default=1)

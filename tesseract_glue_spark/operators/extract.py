@@ -185,13 +185,20 @@ def fan_out(df: DataFrame, n_parts: int | None = None) -> DataFrame:
     and it load-balances rows evenly regardless of key-hash skew.
 
     1 task per core by default (r6, measured): every mapInPandas task
-    pays a fixed Python protocol cost (~7-14 ms on an identity kernel:
-    32 tasks 0.46 s, 64 tasks 0.63 s, 128 tasks 1.09 s, 256 tasks
-    2.04 s on idle local[32]; mapInArrow measured the same, so it is
-    the task protocol, not pandas conversion), while round-robin keeps
-    per-task ROW COUNTS exactly even — per-row cost variance (page
-    size, and with ``preprocess`` on, deskew and picture blocks)
-    averages out over the ~100+ rows each task holds.
+    pays a fixed cost (identity kernel: 32 tasks 0.46 s, 64 tasks
+    0.63 s, 128 tasks 1.09 s, 256 tasks 2.04 s on idle local[32];
+    mapInArrow measured the same). Most of it was not the task
+    protocol: Spark's worker calls ``importlib.invalidate_caches()``
+    before every task, and on CPython 3.11 each of the ~21
+    zipimporters on its path re-read its archive, 204 ms of worker
+    time per task. The kernels install
+    :func:`~tesseract_glue_spark.sources.shipping.guard_zip_reloads`,
+    so a worker pays that once; an identity kernel with it costs
+    about 15 ms of wall per further task on local[4], 4-core VM
+    (64 → 128 tasks: 1.25 → 2.20 s; 4.54 → 8.94 s without it).
+    Round-robin keeps per-task ROW COUNTS exactly even — per-row cost
+    variance (page size, and with ``preprocess`` on, deskew and picture
+    blocks) averages out over the ~100+ rows each task holds.
     Interleaved A/B at sf0.1: extract_full med 2.14 s at 1× vs 2.29 s
     at 2× vs 2.82 s at the old 4×. The straggler question was also
     settled by measurement, not assumption: 4→16 scaling_bench pairs at
@@ -253,9 +260,14 @@ def _ocr_kernel(config: ExtractionConfig):
     """The OCR mapInPandas kernel. The engine is constructed at most
     once per Python worker process via the module-global cache in
     :mod:`tesseract_glue_spark.engine` (the Reader-reuse analogue,
-    ``reader2.cpp:15-27``) — NOT per batch, NOT per row."""
+    ``reader2.cpp:15-27``) — NOT per batch, NOT per row. Likewise the
+    worker's per-task zip re-reads are skipped from its second task on
+    (:func:`~tesseract_glue_spark.sources.shipping.guard_zip_reloads`)."""
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from tesseract_glue_spark.sources.shipping import guard_zip_reloads
+
+        guard_zip_reloads()
         engine = get_engine(config)  # lazy init, cached for the worker's lifetime
         for pdf in batches:
             yield ocr_batch(engine, config, pdf)

@@ -129,8 +129,15 @@ def strip_text_spans(spans: DataFrame) -> DataFrame:
     from tesseract_glue_spark.sources.shipping import ensure_shipped
 
     ensure_shipped(spans.sparkSession)
+
+    def strip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from tesseract_glue_spark.sources.shipping import guard_zip_reloads
+
+        guard_zip_reloads()
+        return map(strip_batch, batches)
+
     return spans.select("doc_id", "offset", "text").mapInPandas(
-        lambda batches: map(strip_batch, batches), schema=STRIPPED_SPAN_SCHEMA
+        strip_batches, schema=STRIPPED_SPAN_SCHEMA
     )
 
 
@@ -164,6 +171,9 @@ def _fused_web_kernel(config):
         return pd.DataFrame({c: part[c] if c in part.columns else None for c in cols})
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from tesseract_glue_spark.sources.shipping import guard_zip_reloads
+
+        guard_zip_reloads()  # before the lazy engine: strip-only tasks too
         engine = None
         for pdf in batches:
             is_media = pdf["media_ref"].notna()

@@ -6,13 +6,20 @@ we self-ship: zip the package once per session and ``addPyFile`` it, so
 UDF closures that reference package modules unpickle on workers no
 matter the driver's cwd. Mirrors the reference's asset-staging
 discipline (atomic tmp→rename, ``languages.py:206-207``).
+
+On the worker side, :func:`guard_zip_reloads` keeps each task from
+re-reading the unchanged zips on the worker's path (set-up paid once
+per worker, like the engine cache).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -82,9 +89,61 @@ def ensure_shipped(spark: SparkSession) -> None:
     setattr(sc, _SHIPPED_ATTR, True)
 
 
+_ZIP_STAT_ATTR = "_tesseract_glue_spark_stat"
+
+
+def _zip_stat(archive: str) -> tuple[int, int, int]:
+    st = os.stat(archive)
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def guard_zip_reloads() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive on
+    ``sys.path`` only when the archive changed. Idempotent; call it
+    from inside a Python worker task, never on the driver.
+
+    Spark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``pyspark/worker_util.py::setup_spark_files``). On
+    CPython 3.11 each zipimporter then re-reads its archive's whole
+    central directory: 21 importers in a local-mode worker
+    (``pyspark.zip`` and its sub-packages, the py4j zip, the
+    spark-core jar, the shipped package zip), 204 ms per task.
+    CPython 3.13 drops the cached directory instead and reads it only
+    on the next lookup. Here an importer re-reads only when its
+    archive's ``(st_mtime_ns, st_size, st_ino)`` differs from when that
+    importer last read it; a failing ``stat`` falls through to the
+    original method. The importers already on the path are stamped
+    with their archives' current state: inside a task, the worker read
+    every one of them moments ago. Importers made later are stamped
+    on their first re-read."""
+    cls = zipimport.zipimporter
+    reload = cls.invalidate_caches
+    if hasattr(reload, "__wrapped__"):
+        return
+
+    @functools.wraps(reload)
+    def invalidate_caches(self):
+        try:
+            stat = _zip_stat(self.archive)
+        except OSError:
+            self.__dict__.pop(_ZIP_STAT_ATTR, None)
+            return reload(self)
+        # stat before reading: an archive rewritten in between reads
+        # as changed next time, never as unchanged
+        if getattr(self, _ZIP_STAT_ATTR, None) != stat:
+            reload(self)
+            setattr(self, _ZIP_STAT_ATTR, stat)
+
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            try:
+                setattr(finder, _ZIP_STAT_ATTR, _zip_stat(finder.archive))
+            except OSError:
+                pass
+    cls.invalidate_caches = invalidate_caches
+
+
 if __name__ == "__main__":
     # `python -m tesseract_glue_spark.sources.shipping [dest_dir]` →
     # prints the zip path for `spark-submit --py-files <zip>`
-    import sys
-
     print(build_pyfiles_zip(sys.argv[1] if len(sys.argv) > 1 else None))

@@ -116,7 +116,7 @@ class TestPng:
         import struct
         import zlib
 
-        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image
+        from tesseract_glue_spark.imaging.codecs import MAX_PIXELS, decode_image, image_dims_any
         from tesseract_glue_spark.imaging.png import _PNG_SIG, _chunk
         from tests.conftest import streamed_png
 
@@ -132,6 +132,8 @@ class TestPng:
         for page in (_PNG_SIG + decoy + big, _PNG_SIG + small_ihdr + big):
             with pytest.raises(ImageDecodeError, match="IHDR"):
                 decode_image(page)
+        # the header-only dims agree with the decoder: no IHDR first, no dims
+        assert image_dims_any(_PNG_SIG + decoy + big) == (0, 0)
 
 
 class TestJp2:
@@ -792,6 +794,117 @@ class TestShipping:
         )
         assert shipping.build_pyfiles_zip(str(tmp_path)) == str(fake_zip)
 
+    def test_zip_reload_guard_rereads_only_changed_archives(self, tmp_path, monkeypatch):
+        """With the guard on, ``importlib.invalidate_caches()`` re-reads a
+        zip on the path only after the archive changed, and a failing
+        ``stat`` falls through to the original method."""
+        import importlib
+        import os
+        import sys
+        import zipfile
+        import zipimport
+
+        from tesseract_glue_spark.sources import shipping
+
+        current = zipimport.zipimporter.invalidate_caches
+        monkeypatch.setattr(
+            zipimport.zipimporter, "invalidate_caches", getattr(current, "__wrapped__", current)
+        )
+        monkeypatch.setattr(sys, "path_importer_cache", dict(sys.path_importer_cache))
+        archive = tmp_path / "guarded.zip"
+
+        def write(**modules):
+            tmp = tmp_path / "next.zip"
+            with zipfile.ZipFile(tmp, "w") as zf:
+                for name, src in modules.items():
+                    zf.writestr(f"{name}.py", src)
+            os.replace(tmp, archive)
+
+        write(zg_first="VALUE = 1\n")
+        monkeypatch.syspath_prepend(str(archive))
+        reads = []
+        read_directory = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda path: reads.append(path) or read_directory(path)
+        )
+        try:
+            assert importlib.import_module("zg_first").VALUE == 1
+            shipping.guard_zip_reloads()
+            shipping.guard_zip_reloads()  # idempotent: one wrapper
+            assert not hasattr(zipimport.zipimporter.invalidate_caches.__wrapped__, "__wrapped__")
+            reads.clear()
+            importlib.invalidate_caches()
+            importlib.invalidate_caches()
+            assert reads == []
+            write(zg_first="VALUE = 1\n", zg_second="VALUE = 2\n")
+            importlib.invalidate_caches()
+            assert reads == [str(archive)]
+            assert importlib.import_module("zg_second").VALUE == 2
+            archive.unlink()
+            importlib.invalidate_caches()
+            assert reads == [str(archive)] * 2
+        finally:
+            for name in ("zg_first", "zg_second"):
+                sys.modules.pop(name, None)
+
+    def test_zip_reload_guard_in_a_worker_task(self, spark):
+        """Inside a real worker task, once the kernels' hook is on, the
+        next ``importlib.invalidate_caches()`` (Spark's worker calls it
+        at the start of every task) reads no archive."""
+        from tesseract_glue_spark.sources.shipping import ensure_shipped
+
+        ensure_shipped(spark)
+
+        def probe(batches):
+            import importlib
+            import sys
+            import zipimport
+
+            import pandas as pd
+
+            from tesseract_glue_spark.sources.shipping import guard_zip_reloads
+
+            guard_zip_reloads()
+            reads = []
+            read_directory = zipimport._read_directory
+            zipimport._read_directory = lambda path: reads.append(path) or read_directory(path)
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = read_directory
+            n_zip = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"zip_importers": [n_zip], "reads": [len(reads)]})
+
+        got = spark.range(4).repartition(4).mapInPandas(
+            probe, "zip_importers long, reads long"
+        ).collect()
+        # pyspark.zip, the py4j zip and the shipped package zip at least
+        assert len(got) == 4 and min(r["zip_importers"] for r in got) >= 3
+        assert [r["reads"] for r in got] == [0] * 4
+
+    def test_extraction_kernels_install_the_guard(self, monkeypatch):
+        """The OCR kernel and the fused web kernel install the guard at
+        the start of every task, strip-only web tasks included."""
+        import pandas as pd
+
+        from tesseract_glue_spark.config import ExtractionConfig
+        from tesseract_glue_spark.operators import extract, web
+        from tesseract_glue_spark.sources import shipping
+
+        calls = []
+        monkeypatch.setattr(shipping, "guard_zip_reloads", lambda: calls.append("hook"))
+        cfg = ExtractionConfig()
+        assert list(extract._ocr_kernel(cfg)(iter([]))) == []
+        strip_only = pd.DataFrame(
+            {"media_ref": [None], "image": [None], "doc_id": [1], "n_spans": [1],
+             "offset": [0], "text": ["<p>a</p>"]}
+        )
+        out = list(web._fused_web_kernel(cfg)(iter([strip_only])))
+        assert len(out) == 1 and out[0]["doc_id"].tolist() == [1]
+        assert calls == ["hook", "hook"]
+
 
 class TestTiff:
     """Built-in TIFF gray8 codec (the reference's corpus format:
@@ -902,6 +1015,22 @@ class TestTiff:
         struct.pack_into("<I", data, 8 + 2 + 12 + 8, h - 1)
         with pytest.raises(ImageDecodeError, match="truncated TIFF strip"):
             decode_image(bytes(data))
+
+    def test_decode_image_parses_the_ifd_once(self, monkeypatch):
+        """The pixel cap and the strip read share one IFD parse."""
+        from tesseract_glue_spark.imaging import tiff
+        from tesseract_glue_spark.imaging.codecs import decode_image
+
+        calls = []
+        read_ifd = tiff._read_ifd
+        monkeypatch.setattr(
+            tiff, "_read_ifd", lambda data, bo: calls.append(bo) or read_ifd(data, bo)
+        )
+        img = self._img(seed=8)
+        for big_endian in (False, True):
+            calls.clear()
+            assert np.array_equal(decode_image(tiff.encode_tiff(img, big_endian=big_endian)), img)
+            assert len(calls) == 1
 
 
 class TestCodecDispatch:
