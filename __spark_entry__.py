@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline at sf0.001.
-``queries()`` / ``oracle_sql()`` pair each of the 38 implemented
+``queries()`` / ``oracle_sql()`` pair each of the 28 implemented
 operators with a DuckDB-checkable oracle at sf0.01 (driver compares
 row-count + schema + order-insensitive value-hash). The driver contract
 checks at most 50 queries, so every entry is inside that window and the
@@ -85,7 +85,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _sql_ops() -> dict[str, tuple]:
     """All dual-dialect SQL operators: name -> (builder, tables)."""
-    from tesseract_glue_spark.operators.dedup import DEDUP_OPS
     from tesseract_glue_spark.operators.text import TEXT_OPS
     from tesseract_glue_spark.operators.crawl import WEB_SQL_OPS
 
@@ -93,8 +92,6 @@ def _sql_ops() -> dict[str, tuple]:
     for name, b in TEXT_OPS.items():
         ops[name] = (b, ("documents",))
     for name, b in WEB_SQL_OPS.items():
-        ops[name] = (b, ("documents",))
-    for name, b in DEDUP_OPS.items():
         ops[name] = (b, ("documents",))
     return ops
 
@@ -119,17 +116,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_pixel_stats": image_pixel_stats_spark,
         "image_features_blank": image_features_blank_spark,
     }
-    from tesseract_glue_spark.operators.registry import cached_shingles_runner
-
     from tesseract_glue_spark.operators.pipeline_report import (
         extract_quality_report_spark,
     )
 
-    # connected components of the near-dup pair graph: stepwise label
-    # propagation on the Spark side, same templates unrolled for DuckDB
-    from tesseract_glue_spark.operators.dedup import dedup_components
-
-    q["dedup_components"] = dedup_components
     # composed pipeline: extraction → quality scoring of extracted text
     q["extract_quality_report"] = extract_quality_report_spark
     # crawl-input gate queries over the synthetic page corpus: HTML main
@@ -152,10 +142,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["extract_web_flat"] = extract_web_flat_spark
 
     for name, (builder, tables) in _sql_ops().items():
-        if name in ("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash_pairs"):
-            q[name] = cached_shingles_runner(builder, tables=tables)
-        else:
-            q[name] = spark_runner(builder, tables=tables)
+        q[name] = spark_runner(builder, tables=tables)
     return q
 
 
@@ -190,9 +177,6 @@ def oracle_sql() -> dict[str, str]:
     o["image_pixel_stats"] = image_pixel_stats_oracle_sql()
     o["image_features_blank"] = image_features_blank_oracle_sql()
     o["extract_quality_report"] = extract_quality_report_oracle_sql()
-    from tesseract_glue_spark.operators.dedup import dedup_components_oracle_sql
-
-    o["dedup_components"] = dedup_components_oracle_sql()
     from tesseract_glue_spark.operators.crawl import (
         html_main_content_oracle_sql,
         web_robots_filter_oracle_sql,

@@ -191,7 +191,7 @@ def main() -> None:
         lambda: extract_documents(docs, pages, cfg.with_(salt_reassembly=8)).count(),
     )
 
-    # q3+: registered operator benchmarks (dedup, text and HTML main content)
+    # q3+: registered operator benchmarks (text and HTML main content)
     try:
         from tesseract_glue_spark.operators.bench_registry import register
 

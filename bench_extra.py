@@ -102,7 +102,6 @@ def main() -> None:
 
         from tesseract_glue_spark import ExtractionConfig, extract_documents
         from tesseract_glue_spark.fixtures import interleaved_documents, materialize_corpus
-        from tesseract_glue_spark.operators.bench_registry import register
 
         sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "?"
         corpus_dir = os.path.join(tempfile.gettempdir(), f"tg_corpus_{sf}")
@@ -118,33 +117,12 @@ def main() -> None:
             lambda: extract_documents(docs, pages, cfg.with_(salt_reassembly=8)),
         )
         # registry thunks call .count(); rebuild the frames for noop + plans
-        from tesseract_glue_spark.operators.bench_registry import (
-            langid_sql,
-            minhash_lsh_pairs_sql,
-            ngram_jaccard_pairs_sql,
-            quality_sql,
-            simhash_pairs_sql,
-        )
-        from tesseract_glue_spark.operators.registry import cached_shingles_runner, spark_runner
+        from tesseract_glue_spark.operators.bench_registry import langid_quality_sql
+        from tesseract_glue_spark.operators.registry import spark_runner
         from tesseract_glue_spark.operators.crawl import html_main_content_spark
 
-        specs = {
-            "dedup_minhash_lsh": (minhash_lsh_pairs_sql, ("documents",), True),
-            "dedup_ngram_jaccard": (ngram_jaccard_pairs_sql, ("documents",), True),
-            "dedup_simhash_pairs": (simhash_pairs_sql, ("documents",), True),
-            "text_langid_quality": (
-                lambda d, table="documents": f"SELECT q.doc_id, q.quality_score, l.lang_pred "
-                f"FROM ({quality_sql(d)}) q JOIN ({langid_sql(d)}) l ON q.doc_id = l.doc_id",
-                ("documents",),
-                False,
-            ),
-        }
-        for name, (builder, tables, cached) in specs.items():
-            if cached:
-                runner = cached_shingles_runner(builder, tables=tables)
-            else:
-                runner = spark_runner(builder, tables=tables)
-            run_one(name, lambda r=runner: r(spark, sf_dir))
+        langid_quality = spark_runner(langid_quality_sql)
+        run_one("text_langid_quality", lambda: langid_quality(spark, sf_dir))
         run_one("html_main_content", lambda: html_main_content_spark(spark, sf_dir))
 
     print(json.dumps({"metric": "noop_isolated_wall", "queries": results,

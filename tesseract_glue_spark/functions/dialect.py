@@ -83,8 +83,8 @@ def md5_hex(d: str, expr: str) -> str:
 
 
 def hex_prefix_to_bigint(d: str, expr: str) -> str:
-    """First 8 hex chars of an md5 → BIGINT in [0, 2^32). The portable
-    bridge from string hashing to minhash arithmetic."""
+    """First 8 hex chars of an md5 → BIGINT in [0, 2^32), equal in both
+    engines."""
     if d == SPARK:
         return f"CAST(conv(substring({expr}, 1, 8), 16, 10) AS BIGINT)"
     return f"CAST(concat('0x', substr({expr}, 1, 8)) AS BIGINT)"
@@ -94,21 +94,6 @@ def str_hash64(d: str, expr: str) -> str:
     """Deterministic 32-bit integer hash of a string expression, equal
     across engines (md5-based; NOT xxhash64/hash(), which differ)."""
     return hex_prefix_to_bigint(d, md5_hex(d, expr))
-
-
-def hex_prefix60_to_bigint(d: str, expr: str) -> str:
-    """First 15 hex chars of an md5 → BIGINT in [0, 2^60). 16 chars
-    would overflow signed BIGINT (2^64-1); 15 keeps the value positive
-    so right-shifts behave identically in both engines."""
-    if d == SPARK:
-        return f"CAST(conv(substring({expr}, 1, 15), 16, 10) AS BIGINT)"
-    return f"CAST(concat('0x', substr({expr}, 1, 15)) AS BIGINT)"
-
-
-def str_hash60(d: str, expr: str) -> str:
-    """Deterministic 60-bit integer hash of a string expression, equal
-    across engines — the SimHash base (wide enough for 4×15-bit bands)."""
-    return hex_prefix60_to_bigint(d, md5_hex(d, expr))
 
 
 def word_set_count(d: str, col: str, words: tuple[str, ...]) -> str:
@@ -161,11 +146,3 @@ def scaled_ratio(d: str, num: str, den: str, scale: int = 10000) -> str:
         f"(CASE WHEN {den} = 0 THEN CAST(0 AS BIGINT) "
         f"ELSE CAST(floor({scale} * CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)) AS BIGINT) END)"
     )
-
-
-def bit_count(d: str, expr: str) -> str:
-    return f"bit_count({expr})"
-
-
-def bitwise_xor(d: str, a: str, b: str) -> str:
-    return f"({a} ^ {b})" if d == SPARK else f"xor({a}, {b})"

@@ -75,14 +75,6 @@ def truth_text_expr(n: str, dialect: str) -> str:
     )
 
 
-def span_status_expr(n: str) -> str:
-    """Per-media-span status (same text in both dialects)."""
-    return (
-        f"(CASE WHEN {n} % 7 = 0 THEN 'empty' "
-        f"WHEN {n} % 13 = 0 THEN 'dangling' ELSE 'ok' END)"
-    )
-
-
 def spans_array_expr() -> str:
     """Spark-only: build the interleaved ``spans`` array<struct> column
     from the flat documents table (matches BASELINE.json input_hint)."""

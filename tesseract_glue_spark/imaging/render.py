@@ -140,15 +140,3 @@ def render_page(n: int) -> tuple[bytes, int, int, str]:
         img[PAYLOAD_ROWS:] = sheared
 
     return encode_png(img), w, h, truth_text(n)
-
-
-def render_corpus(ns: list[int]) -> list[tuple[str, bytes, int, int, str]]:
-    """Render pages for the given ids, skipping dangling refs (they have
-    no backing page by construction)."""
-    out = []
-    for n in ns:
-        if is_dangling(n):
-            continue
-        png, w, h, truth = render_page(n)
-        out.append((num_to_ref(n), png, w, h, truth))
-    return out

@@ -33,62 +33,6 @@ def spark_runner(
     return run
 
 
-# One persisted shingle table per (application, corpus): every
-# shingle-pair query in a session (minhash sig/LSH/survivors, simhash,
-# ngram-jaccard, components) reuses the same materialization instead of
-# persisting a fresh copy per call — repeated/concurrent queries in one
-# SparkSession used to leak one cached DataFrame each (round-2 advisor
-# finding). Evicted entries are unpersisted explicitly.
-_SHINGLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-SHINGLES_VIEW = "shingles_mv"
-
-
-def get_cached_shingles(spark: SparkSession, sf_dir: str, table: str = "documents") -> DataFrame:
-    """Materialize (once per session+corpus) and register the shingle
-    table under the ``shingles_mv`` view; returns the materialized frame.
-
-    ``localCheckpoint`` (not ``persist``): the consuming pair queries
-    wrap the view reference in their own ``WITH`` chains, and Spark 4's
-    CTE handling re-numbers the merged ``CTERelationDef`` ids, so the
-    canonicalized subtree of a *persisted* plan never matches inside a
-    consumer's own CTE — CacheManager silently misses and every union
-    branch re-ran the whole shingle pipeline from the parquet scan
-    (measured: 8 full ``Scan parquet → Generate → 3×Exchange`` chains
-    per simhash-pairs plan, 12 per minhash-LSH plan; r6 plan captures).
-    Checkpointing truncates the lineage to a scan-free leaf, which every
-    branch reads directly — no cache matching involved."""
-    from tesseract_glue_spark.operators.dedup import shingles_sql
-
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        for old_key in [k for k in _SHINGLE_CACHE if k[0] != key[0]]:
-            _SHINGLE_CACHE.pop(old_key).unpersist()  # dead sessions
-        spark.read.parquet(f"{sf_dir}/{table}.parquet").createOrReplaceTempView(table)
-        sh = spark.sql(shingles_sql(D.SPARK, table)).localCheckpoint(eager=True)
-        _SHINGLE_CACHE[key] = sh
-    sh.createOrReplaceTempView(SHINGLES_VIEW)
-    return sh
-
-
-def cached_shingles_runner(
-    builder: SqlBuilder, tables: tuple[str, ...] = ("documents",)
-) -> Callable[[SparkSession, str], DataFrame]:
-    """Runner for shingle-pair queries: materialize + cache the shingle
-    table once, then run the query against the cached view. CTEs are
-    inlined by Catalyst, so the inline form recomputes shingling in
-    every plan branch (sig, sizes, and both sides of the verification
-    join — 5× at sf0.1). The DuckDB oracle keeps the inline CTE; results
-    are identical by construction."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register(spark, sf_dir, tables)
-        get_cached_shingles(spark, sf_dir)
-        return spark.sql(builder(D.SPARK, shingles_table=SHINGLES_VIEW))
-
-    return run
-
-
 def oracle(builder: SqlBuilder) -> str:
     """→ the DuckDB SQL string for ``oracle_sql()``."""
     return builder(D.DUCKDB)

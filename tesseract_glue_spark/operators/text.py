@@ -120,7 +120,7 @@ def fingerprint_sql(d: str, table: str = "documents") -> str:
 
     Explode-index + MIN-aggregate rather than a transform/array_min
     lambda: Spark never codegens higher-order functions, so the lambda
-    form runs interpreted (see operators/dedup.py::_shingles_cte)."""
+    form runs interpreted."""
     norm = _norm(d)
     w = D.ws_tokens(d, "norm")
     nw = D.array_len(d, "w")
@@ -305,8 +305,7 @@ def dup_spans_sql(d: str, table: str = "documents") -> str:
     Scale shape: one shuffle keyed by window hash (the HAVING group),
     one hash semi-join back on the same key (exchange reused / AQE),
     one shuffle keyed by doc_id for the island window — never
-    all-pairs; candidates ∝ hash collisions exactly like the
-    inverted-index dedup family (operators/dedup.py).
+    all-pairs; candidates ∝ hash collisions, as in an inverted index.
     """
     W = DUP_SPAN_W
     norm = _norm(d)

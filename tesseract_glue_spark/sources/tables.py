@@ -1,10 +1,9 @@
-"""Table IO: sources and Iceberg-format-ready sinks.
+"""Table IO: the documents and pages sources.
 
-Sandbox tests run on parquet; on a real cluster with the Iceberg
-runtime jar + catalog configured, the same writer targets
-``df.writeTo(table)`` (format-version-2 upsert-ready tables). The
-format choice is a flag, not a code path fork — the pipeline above is
-identical.
+Sandbox tests read parquet paths; on a cluster with the Iceberg runtime
+jar and a catalog configured, an ``iceberg:<table>`` source reads the
+table instead, and the pipeline is the same. Output is written by
+:func:`tesseract_glue_spark.sources.manifests.write_extracted`.
 """
 
 from __future__ import annotations
@@ -24,19 +23,3 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     if source.startswith("iceberg:"):
         return spark.read.format("iceberg").load(source[len("iceberg:"):])
     return spark.read.parquet(source)
-
-
-def write_output(df: DataFrame, dest: str, mode: str = "append") -> None:
-    """Write pipeline output. ``iceberg:<table>`` → ``writeTo`` append
-    (requires the Iceberg runtime on the cluster classpath); anything
-    else → parquet path. Partitioned/manifested writes go through
-    :mod:`tesseract_glue_spark.sources.manifests` instead."""
-    if dest.startswith("iceberg:"):
-        table = dest[len("iceberg:"):]
-        writer = df.writeTo(table)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    df.write.mode(mode).parquet(dest)

@@ -1,13 +1,16 @@
-"""Guard against dead options: every settable value of the package must
-be read somewhere, or it is code the system does not need."""
+"""Guard against dead options and dead code: every settable value of the
+package must be read somewhere, and every top-level function or class
+named somewhere, or it is code the system does not need."""
 
+import ast
 import dataclasses
 import pathlib
 import re
 
 from tesseract_glue_spark.config import ExtractionConfig
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "tesseract_glue_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "tesseract_glue_spark"
 
 
 def _sources(exclude: str = "") -> str:
@@ -33,3 +36,28 @@ def test_no_package_conf_keys():
     session confs of the package's own namespace."""
     keys = sorted(set(re.findall(r"spark\.tesseract_glue\.[\w.]+", _sources())))
     assert keys == [], f"package conf keys read: {keys}"
+
+
+def test_every_package_function_is_referenced():
+    """Each top-level ``def``/``class`` of the package is named (as a
+    whole word) at least once outside its own definition, somewhere in
+    the package, the tests, perfbench, the driver entry or the root-level
+    bench scripts."""
+    files = [
+        *PKG.rglob("*.py"), *(ROOT / "tests").rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"), ROOT / "__spark_entry__.py",
+        *ROOT.glob("*bench*.py"),
+    ]
+    texts = {p: p.read_text() for p in files}
+    unnamed = []
+    for path in sorted(PKG.rglob("*.py")):
+        lines = texts[path].splitlines(keepends=True)
+        for node in ast.parse(texts[path]).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            own = "".join(lines[: first - 1] + lines[node.end_lineno:])
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            if not any(word.search(own if p == path else t) for p, t in texts.items()):
+                unnamed.append(f"{path.relative_to(ROOT)}::{node.name}")
+    assert unnamed == [], f"package functions nothing names: {unnamed}"

@@ -1,27 +1,17 @@
-"""Semantics of the two round-5 dedup-family operators, on PLANTED
-corpora where the expected output is known by construction:
-
-* ``text_dup_spans`` — exact substring-duplication span detection
-  (window hashes + gaps-and-islands merge);
-* ``dedup_incremental`` — cross-snapshot ingest gating on the
-  near-dup-stable min-shingle fingerprint.
+"""Semantics of ``text_dup_spans`` — exact substring-duplication span
+detection (window hashes + gaps-and-islands merge) — on PLANTED corpora
+where the expected output is known by construction.
 
 Cross-engine parity on adversarial inputs is covered by
-tests/test_fuzz_parity.py (both ops are in TEXT_OPS / DEDUP_OPS and the
-fuzz tests iterate the dicts); the driver-style sf0.01 oracle check is
+tests/test_fuzz_parity.py (the op is in TEXT_OPS and the fuzz test
+iterates the dict); the driver-style sf0.01 oracle check is
 tests/test_entry.py. Here the point is that the answers are RIGHT, not
 merely engine-consistent, so the oracle is hand-computed."""
 
 import duckdb
 import pandas as pd
-import pytest
 
 from tesseract_glue_spark.functions import dialect as D
-from tesseract_glue_spark.operators.dedup import (
-    INC_BASE_BUCKETS,
-    INC_BUCKETS,
-    incremental_dedup_sql,
-)
 from tesseract_glue_spark.operators.text import DUP_SPAN_W, dup_spans_sql
 
 
@@ -98,55 +88,14 @@ class TestDupSpans:
         df = con.sql(dup_spans_sql(D.DUCKDB)).df()
         assert len(df) == 0
 
-
-class TestIncrementalDedup:
-    def _buckets(self, con, doc_ids):
-        cast = "VARCHAR"
-        h = D.str_hash64(D.DUCKDB, f"concat('inc_', CAST(doc_id AS {cast}))")
-        ids = ", ".join(f"({i})" for i in doc_ids)
-        df = con.sql(
-            f"SELECT doc_id, {h} % {INC_BUCKETS} AS b "
-            f"FROM (VALUES {ids}) t(doc_id)"
-        ).df()
-        return dict(zip(df.doc_id, df.b))
-
-    def test_flags_match_hand_oracle(self):
-        # 40 docs in 8 content groups of 5 (identical text per group, so
-        # min-shingle fp is equal within a group by construction), plus
-        # 8 singletons with unique text
-        rows = []
-        for g in range(8):
-            for k in range(5):
-                rows.append((g * 5 + k, _words(f"grp{g}w", 12)))
-        for s in range(8):
-            rows.append((100 + s, _words(f"solo{s}w", 12)))
-        con = _duck_for(rows)
-        buckets = self._buckets(con, [r[0] for r in rows])
-        base = {i for i, b in buckets.items() if b < INC_BASE_BUCKETS}
-        incoming = sorted(set(buckets) - base)
-        assert incoming, "hash split left no incoming docs — enlarge corpus"
-
-        content = dict(rows)
-        base_by_content = {}
-        for i in sorted(base):
-            base_by_content.setdefault(content[i], i)
-
-        df = con.sql(incremental_dedup_sql(D.DUCKDB)).df().set_index("doc_id")
-        assert sorted(df.index) == incoming
-        for i in incoming:
-            expected_rep = base_by_content.get(content[i], -1)
-            assert df.loc[i].dup_of_base == (1 if expected_rep != -1 else 0), i
-            assert df.loc[i].base_rep_doc_id == expected_rep, i
-
     def test_spark_plan_no_nested_loop(self, spark):
-        """The fp join must stay a hashed equi-join — never a broadcast
-        nested loop / cartesian (the shape that dies at 10^12 docs)."""
+        """The window-hash join must stay a hashed equi-join — never a
+        broadcast nested loop / cartesian (the shape that dies at 10^12
+        docs)."""
         from tesseract_glue_spark.operators.registry import spark_runner
         from tesseract_glue_spark.plans import checks as C
         from tests.conftest import SF_DIR
 
-        for builder in (incremental_dedup_sql, dup_spans_sql):
-            df = spark_runner(builder)(spark, SF_DIR)
-            plan = C.plan_text(df)
-            assert "CartesianProduct" not in plan, plan
-            assert "BroadcastNestedLoopJoin" not in plan, plan
+        plan = C.plan_text(spark_runner(dup_spans_sql)(spark, SF_DIR))
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan

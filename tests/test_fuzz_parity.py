@@ -73,13 +73,6 @@ def test_text_ops_on_adversarial_input(spark, fuzz_dir, fuzz_duck):
         _check(spark, fuzz_duck, b, fuzz_dir, name)
 
 
-def test_dedup_ops_on_adversarial_input(spark, fuzz_dir, fuzz_duck):
-    from tesseract_glue_spark.operators.dedup import DEDUP_OPS
-
-    for name, b in DEDUP_OPS.items():
-        _check(spark, fuzz_duck, b, fuzz_dir, name)
-
-
 def _check_query(spark, duck, query_fn, oracle_sql, fuzz_dir, name):
     from tests.conftest import canonical_csv
 

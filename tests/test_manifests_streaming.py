@@ -1,5 +1,5 @@
 """Tests: manifest/resume protocol + streaming extraction + SQL-operator
-parity (text/dedup vs DuckDB)."""
+parity (text vs DuckDB)."""
 
 import json
 import os
@@ -177,12 +177,6 @@ class TestSqlOperatorParity:
         for name, b in TEXT_OPS.items():
             assert self._check(spark, duck, b, ("documents",)) > 0, name
 
-    def test_dedup_ops(self, spark, duck):
-        from tesseract_glue_spark.operators.dedup import DEDUP_OPS
-
-        for name, b in DEDUP_OPS.items():
-            self._check(spark, duck, b, ("documents",))
-
     def test_pack_sequences_groups_parameter(self, spark, duck):
         """`groups` (production: ≈ shuffle parallelism) must flow
         through both dialects identically and widen the packing
@@ -265,82 +259,3 @@ class TestStreamingExtraction:
         )
         q2.awaitTermination(300)
         assert len(globmod.glob(f"{out}/batch=*")) == n_batches
-
-
-class TestDedupComponents:
-    def test_components_fixpoint_and_pair_consistency(self, spark):
-        """The fixpoint loop must converge within CC_ROUNDS on the gate
-        corpus (otherwise the unrolled-CC_ROUNDS oracle would diverge
-        from the Spark side), and every verified near-dup pair must land
-        in one component."""
-        from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators.dedup import (
-            CC_ROUNDS,
-            _cc_init_sql,
-            dedup_components,
-            minhash_lsh_pairs_sql,
-            propagate_min_labels,
-        )
-        from tesseract_glue_spark.operators.registry import (
-            SHINGLES_VIEW,
-            get_cached_shingles,
-            spark_runner,
-        )
-
-        a = dedup_components(spark, SF_DIR).toPandas()
-        # convergence round must sit within the oracle's unrolled depth
-        get_cached_shingles(spark, SF_DIR)
-        edges = spark.sql(
-            minhash_lsh_pairs_sql(D.SPARK, "documents", shingles_table=SHINGLES_VIEW)
-        ).localCheckpoint(eager=True)
-        _, rounds_run = propagate_min_labels(
-            spark, edges, spark.sql(_cc_init_sql("documents"))
-        )
-        assert rounds_run <= CC_ROUNDS + 1, (
-            f"gate corpus needs {rounds_run - 1} propagation rounds; the "
-            f"unrolled oracle only runs {CC_ROUNDS}"
-        )
-        comp = dict(zip(a["doc_id"], a["component"]))
-        pairs = spark_runner(minhash_lsh_pairs_sql, tables=("documents",))(
-            spark, SF_DIR).toPandas()
-        assert len(pairs) > 0
-        for r in pairs.itertuples():
-            assert comp[r.doc_a] == comp[r.doc_b], (r.doc_a, r.doc_b)
-        # components are rooted at their minimum member
-        assert (a["component"] <= a["doc_id"]).all()
-
-    def test_components_deep_chain_reaches_fixpoint(self, spark):
-        """Adversarial chain a-b-c-...-j (diameter 9 ≫ CC_ROUNDS): the
-        fixpoint loop must merge it into ONE component — the fixed
-        4-round version this replaced under-merged it into three."""
-        from tesseract_glue_spark.operators.dedup import (
-            CC_ROUNDS,
-            propagate_min_labels,
-        )
-
-        n = 10
-        ids = [f"doc{i:02d}" for i in range(n)]
-        edges = spark.createDataFrame(
-            [(ids[i], ids[i + 1]) for i in range(n - 1)], "doc_a string, doc_b string"
-        )
-        vertices = spark.createDataFrame([(i, i) for i in ids], "v string, lbl string")
-        labels, rounds_run = propagate_min_labels(spark, edges, vertices)
-        out = labels.toPandas()
-        assert set(out["component"]) == {ids[0]}, "chain split into multiple components"
-        assert rounds_run > CC_ROUNDS, (
-            "test graph no longer exercises the beyond-CC_ROUNDS regime"
-        )
-
-    def test_components_fixed_rounds_would_under_merge(self, spark):
-        """Documents the failure mode the fixpoint loop fixes: capping
-        propagation at CC_ROUNDS on the same chain leaves >1 label."""
-        from tesseract_glue_spark.operators.dedup import CC_ROUNDS, propagate_min_labels
-
-        n = 10
-        ids = [f"doc{i:02d}" for i in range(n)]
-        edges = spark.createDataFrame(
-            [(ids[i], ids[i + 1]) for i in range(n - 1)], "doc_a string, doc_b string"
-        )
-        vertices = spark.createDataFrame([(i, i) for i in ids], "v string, lbl string")
-        labels, _ = propagate_min_labels(spark, edges, vertices, max_rounds=CC_ROUNDS)
-        assert labels.select("component").distinct().count() > 1

@@ -76,27 +76,6 @@ class TestExtractionPlanShape:
         assert C.count_exchanges(extraction_plan) <= 8, extraction_plan
 
 
-class TestAntiJoinPlanShape:
-    """Round-1 judge findings: the survivors keep-lists must plan as
-    hash LEFT ANTI joins — never BroadcastNestedLoopJoin (the NOT IN
-    null-aware fallback) or CartesianProduct (all-pairs sources)."""
-
-    def _assert_scale_safe(self, spark, df):
-        plan = C.plan_text(df)
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "LeftAnti" in plan, plan
-
-    def test_minhash_survivors_plan(self, spark):
-        from tesseract_glue_spark.operators.dedup import minhash_dedup_survivors_sql
-        from tesseract_glue_spark.operators.registry import spark_runner
-
-        df = spark_runner(minhash_dedup_survivors_sql, tables=("documents",))(
-            spark, SF_DIR
-        )
-        self._assert_scale_safe(spark, df)
-
-
 class TestPackingPlanShape:
     def test_pack_sequences_window_is_partitioned(self, spark):
         """The running-sum window must be partitioned by pack_group —

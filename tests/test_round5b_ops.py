@@ -1,11 +1,7 @@
-"""Semantic unit tests for the second batch of round-5 additions:
-the C4/Gopher-style filter chain (every rule branch + rule ordering on
-constructed docs) and benchmark decontamination (known overlap,
-short-doc fallback, ambient-gram cap). Oracle parity for both is
-covered by tests/test_entry.py::test_queries_match_oracles; these tests
-pin the SEMANTICS with known-answer inputs instead."""
-
-import hashlib
+"""Semantic unit tests for the C4/Gopher-style filter chain: every rule
+branch and the rule ordering on constructed docs, and its plan shape.
+Oracle parity is covered by tests/test_entry.py::test_queries_match_oracles;
+these tests pin the SEMANTICS with known-answer inputs instead."""
 
 import duckdb
 import pandas as pd
@@ -90,106 +86,6 @@ class TestFilterChain:
         df = spark_runner(filter_chain_sql, tables=("documents",))(spark, SF_DIR)
         reasons = {r["reason"] for r in df.select("reason").distinct().collect()}
         assert "ok" in reasons and len(reasons) >= 3, reasons
-
-
-def _bucket(doc_id: int) -> int:
-    return int(hashlib.md5(f"dec_{doc_id}".encode()).hexdigest()[:8], 16) % 10
-
-
-class TestDecontaminate:
-    @pytest.fixture(scope="class")
-    def out(self, spark):
-        from tesseract_glue_spark.operators.dedup import decontaminate_sql
-
-        bench_ids = [i for i in range(400) if _bucket(i) == 0]
-        train_ids = [i for i in range(400) if _bucket(i) != 0]
-        assert len(bench_ids) >= 2 and len(train_ids) >= 70
-        b1, b2 = bench_ids[0], bench_ids[1]
-        t_hit, t_clean, t_short = train_ids[0], train_ids[1], train_ids[2]
-        fillers = train_ids[3:63]  # 60 docs sharing ONE ambient gram
-        rows = [
-            (b1, "alpha beta gamma delta epsilon zeta"),
-            (b2, "the common phrase repeated often indeed"),
-            # shares exactly the 4-gram 'alpha beta gamma delta'
-            (t_hit, "alpha beta gamma delta unrelated trailing words"),
-            (t_clean, "completely different content with nothing shared"),
-            # < DECON_W words: whole-text gram; no bench doc matches it
-            (t_short, "tiny doc"),
-        ] + [
-            # each filler's only bench-shared gram is
-            # 'common phrase repeated often' — present in 60 > 50 train
-            # docs, so it is AMBIENT and must not flag them
-            (i, f"u{i}a u{i}b common phrase repeated often u{i}c")
-            for i in fillers
-        ]
-        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-        out = _run_both(spark, pdf, decontaminate_sql)
-        return out, b1, b2, t_hit, t_clean, t_short, fillers
-
-    def test_benchmark_docs_absent_from_output(self, out):
-        res, b1, b2, *_ = out
-        assert b1 not in res.index and b2 not in res.index
-
-    def test_known_overlap_flagged(self, out):
-        res, _, _, t_hit, t_clean, _, _ = out
-        assert res.loc[t_hit, "contaminated"] == 1
-        assert res.loc[t_hit, "n_hit"] == 1
-        assert res.loc[t_hit, "hit_x10k"] == 10000 // res.loc[t_hit, "n_grams"] * 1
-        assert res.loc[t_clean, "contaminated"] == 0
-        assert res.loc[t_clean, "n_hit"] == 0
-
-    def test_short_doc_whole_text_gram(self, out):
-        res, *_ , t_short, _ = out
-        assert res.loc[t_short, "n_grams"] == 1
-        assert res.loc[t_short, "contaminated"] == 0
-
-    def test_ambient_gram_cap(self, out):
-        res, *_, fillers = out
-        assert (res.loc[fillers, "contaminated"] == 0).all()
-
-    def test_exact_benchmark_copy_is_contaminated(self, spark):
-        from tesseract_glue_spark.operators.dedup import decontaminate_sql
-
-        bench_ids = [i for i in range(100) if _bucket(i) == 0]
-        train_ids = [i for i in range(100) if _bucket(i) != 0]
-        text = "exact benchmark passage lifted verbatim into training data"
-        pdf = pd.DataFrame(
-            [(bench_ids[0], text), (train_ids[0], text)],
-            columns=["doc_id", "text"],
-        )
-        res = _run_both(spark, pdf, decontaminate_sql)
-        assert res.loc[train_ids[0], "contaminated"] == 1
-        # every gram of the copy hits → full-coverage ratio
-        assert res.loc[train_ids[0], "hit_x10k"] == 10000
-
-    def test_plan_no_quadratic_join(self, spark):
-        from tests.conftest import SF_DIR
-        from tesseract_glue_spark.operators.dedup import decontaminate_sql
-        from tesseract_glue_spark.operators.registry import spark_runner
-
-        df = spark_runner(decontaminate_sql, tables=("documents",))(spark, SF_DIR)
-        plan = C.plan_text(df)
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-    def test_plan_probe_joins_broadcast(self, spark):
-        """The benchmark/ambient sides are tiny relative to the corpus;
-        the probe must plan as broadcast hash joins — a sort-merge here
-        would shuffle the full train gram stream per join at 10^12
-        docs. (At gate scale every join qualifies; locking the shape
-        catches an accidental broadcast-threshold or hint regression.)"""
-        from tests.conftest import SF_DIR
-        from tesseract_glue_spark.operators.dedup import decontaminate_sql
-        from tesseract_glue_spark.operators.registry import spark_runner
-
-        df = spark_runner(decontaminate_sql, tables=("documents",))(spark, SF_DIR)
-        plan = C.plan_text(df)
-        # ≥2 broadcast joins = the bench_eff anti-join + the hits probe
-        # join both hash-broadcast. Scoped assertion (r5 advisor): a
-        # plan-wide "no SortMergeJoin" ban is broadcast-threshold/AQE-
-        # sensitive — at a larger SF a legitimately-SMJ outer join
-        # would fail the suite although the probe joins are correct.
-        assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 class TestFilterChainPlan:
