@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline at sf0.001.
-``queries()`` / ``oracle_sql()`` pair each of the 28 implemented
+``queries()`` / ``oracle_sql()`` pair each of the 21 implemented
 operators with a DuckDB-checkable oracle at sf0.01 (driver compares
 row-count + schema + order-insensitive value-hash). The driver contract
 checks at most 50 queries, so every entry is inside that window and the
@@ -86,14 +86,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def _sql_ops() -> dict[str, tuple]:
     """All dual-dialect SQL operators: name -> (builder, tables)."""
     from tesseract_glue_spark.operators.text import TEXT_OPS
-    from tesseract_glue_spark.operators.crawl import WEB_SQL_OPS
 
-    ops: dict[str, tuple] = {}
-    for name, b in TEXT_OPS.items():
-        ops[name] = (b, ("documents",))
-    for name, b in WEB_SQL_OPS.items():
-        ops[name] = (b, ("documents",))
-    return ops
+    return {name: (b, ("documents",)) for name, b in TEXT_OPS.items()}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -122,19 +116,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # composed pipeline: extraction → quality scoring of extracted text
     q["extract_quality_report"] = extract_quality_report_spark
-    # crawl-input gate queries over the synthetic page corpus: HTML main
-    # content and robots/sitemap crawl control
-    from tesseract_glue_spark.operators.crawl import (
-        html_main_content_spark,
-        web_robots_filter_spark,
-        web_sitemap_discover_spark,
-        web_sitemap_parse_spark,
-    )
-
-    q["html_main_content"] = html_main_content_spark
-    q["web_robots_filter"] = web_robots_filter_spark
-    q["web_sitemap_parse"] = web_sitemap_parse_spark
-    q["web_sitemap_discover"] = web_sitemap_discover_spark
     from tesseract_glue_spark.operators.web import extract_web_flat_spark
 
     # composed flagship variant: interleaved web docs — text spans are
@@ -177,17 +158,6 @@ def oracle_sql() -> dict[str, str]:
     o["image_pixel_stats"] = image_pixel_stats_oracle_sql()
     o["image_features_blank"] = image_features_blank_oracle_sql()
     o["extract_quality_report"] = extract_quality_report_oracle_sql()
-    from tesseract_glue_spark.operators.crawl import (
-        html_main_content_oracle_sql,
-        web_robots_filter_oracle_sql,
-        web_sitemap_discover_oracle_sql,
-        web_sitemap_parse_oracle_sql,
-    )
-
-    o["html_main_content"] = html_main_content_oracle_sql()
-    o["web_robots_filter"] = web_robots_filter_oracle_sql()
-    o["web_sitemap_parse"] = web_sitemap_parse_oracle_sql()
-    o["web_sitemap_discover"] = web_sitemap_discover_oracle_sql()
     from tesseract_glue_spark.operators.web import extract_web_flat_oracle_sql
 
     o["extract_web_flat"] = extract_web_flat_oracle_sql()

@@ -70,7 +70,9 @@ def idle_gate(threshold: float = 2.0, max_wait_s: int = 180, poll_s: int = 20) -
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
-    return (
+    from tesseract_glue_spark import spark_session
+
+    return spark_session(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("tesseract_glue_spark-bench")
         # 2 shuffle tasks per core: exact-width shuffles (1 task/core)
@@ -79,12 +81,8 @@ def build_spark(cpus: int):
         # coalesces genuinely small stages below this number
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
 
 
@@ -191,7 +189,7 @@ def main() -> None:
         lambda: extract_documents(docs, pages, cfg.with_(salt_reassembly=8)).count(),
     )
 
-    # q3+: registered operator benchmarks (text and HTML main content)
+    # q3+: registered operator benchmarks (text)
     try:
         from tesseract_glue_spark.operators.bench_registry import register
 

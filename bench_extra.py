@@ -30,17 +30,15 @@ import time
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
-    return (
+    from tesseract_glue_spark import spark_session
+
+    return spark_session(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("tesseract_glue_spark-bench-extra")
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
 
 
@@ -119,11 +117,9 @@ def main() -> None:
         # registry thunks call .count(); rebuild the frames for noop + plans
         from tesseract_glue_spark.operators.bench_registry import langid_quality_sql
         from tesseract_glue_spark.operators.registry import spark_runner
-        from tesseract_glue_spark.operators.crawl import html_main_content_spark
 
         langid_quality = spark_runner(langid_quality_sql)
         run_one("text_langid_quality", lambda: langid_quality(spark, sf_dir))
-        run_one("html_main_content", lambda: html_main_content_spark(spark, sf_dir))
 
     print(json.dumps({"metric": "noop_isolated_wall", "queries": results,
                       "sf_dir": sf_dir, "cpus": cpus}))

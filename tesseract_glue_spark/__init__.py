@@ -10,7 +10,7 @@ Public surface (the analogue of the reference's ``__init__.py:19-32``
 export set):
 """
 
-from tesseract_glue_spark.config import ExtractionConfig
+from tesseract_glue_spark.config import ExtractionConfig, spark_session
 from tesseract_glue_spark.engine import (
     engine_info,
     get_engine,
@@ -44,6 +44,7 @@ __all__ = [
     "extract_flat",
     "get_engine",
     "normalize_text",
+    "spark_session",
     "validate_language",
 ]
 

@@ -72,3 +72,15 @@ class ExtractionConfig:
 
     def with_(self, **kwargs) -> "ExtractionConfig":
         return replace(self, **kwargs)
+
+
+def spark_session(builder):
+    """``builder`` (the caller's master, memory, shuffle width) with the
+    extraction confs: AQE with skew-join splitting for heavy-tail docs,
+    and Arrow batches of 256 rows so page-image batches stay small."""
+    return (
+        builder.config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .getOrCreate()
+    )

@@ -150,14 +150,24 @@ def py_spans(doc_id: int, text: str) -> list[dict]:
     return spans
 
 
-def py_expected_extracted(doc_id: int, text: str) -> list[dict]:
-    """Expected output spans after extraction (the oracle of FIXTURES.md §3)."""
-    out = []
+def py_expected_extracted(doc_id: int, text: str) -> dict:
+    """Expected extracted row of one doc (the oracle of FIXTURES.md §3):
+    ``spans`` with each media span's text replaced by its page's truth
+    ('' when dangling), ``ocr_pages`` (resolvable pages), their blank
+    share ``ocr_empty_pages``, and ``status`` 'partial' iff some page
+    is dangling."""
+    spans, pages, empty, dangling = [], 0, 0, False
     for s in py_spans(doc_id, text):
         if s["kind"] == "media":
             n = render.ref_to_num(s["media_ref"])
-            t = "" if render.is_dangling(n) else render.truth_text(n)
-            out.append({**s, "text": t})
+            if render.is_dangling(n):
+                dangling = True
+                spans.append({**s, "text": ""})
+            else:
+                pages += 1
+                empty += render.is_blank(n)
+                spans.append({**s, "text": render.truth_text(n)})
         else:
-            out.append(dict(s))
-    return out
+            spans.append(dict(s))
+    return {"spans": spans, "ocr_pages": pages, "ocr_empty_pages": empty,
+            "status": "partial" if dangling else "ok"}

@@ -1,7 +1,6 @@
 """Operator benchmarks picked up by bench.py (name -> zero-arg thunk).
 
-Covers the non-extraction operators: text quality + language id, and
-crawl-input HTML main content.
+Covers the non-extraction operators: text quality + language id.
 """
 
 from __future__ import annotations
@@ -22,10 +21,7 @@ def langid_quality_sql(d: str, table: str = "documents") -> str:
 
 
 def register(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], int]]:
-    from tesseract_glue_spark.operators.crawl import html_main_content_spark
-
     langid_quality = spark_runner(langid_quality_sql)
     return {
         "text_langid_quality": lambda: langid_quality(spark, sf_dir).count(),
-        "html_main_content": lambda: html_main_content_spark(spark, sf_dir).count(),
     }

@@ -253,7 +253,7 @@ def strip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     stage."""
     from tesseract_glue_spark.web.html_main import extract_main
 
-    return pdf.assign(text=[extract_main(html or "")["main_text"] for html in pdf["text"]])
+    return pdf.assign(text=[extract_main(html) for html in pdf["text"]])
 
 
 def _ocr_kernel(config: ExtractionConfig):

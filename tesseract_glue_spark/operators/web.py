@@ -43,13 +43,10 @@ from tesseract_glue_spark.operators.extract import (
 # reject (invisible head, nav and footer link lists)
 _NAV = '<nav><a href="/">home</a> <a href="/about">about</a> <a href="/contact">contact</a></nav>'
 _FOOTER = '<footer><a href="/terms">terms</a> <a href="/privacy">privacy</a></footer>'
-_HEAD_OPEN = "<html><head>"
-_HEAD_REST = "<style>body{margin:0}</style><script>var x = 1;</script></head><body>"
-# wrapper pages keep a constant head; the crawl page corpus
-# (operators/crawl.py) injects doc-dependent metadata between _HEAD_OPEN
-# and _HEAD_REST — invisible to the block segmenter (head is a skip
-# subtree)
-_HEAD = _HEAD_OPEN + "<title>synthetic</title>" + _HEAD_REST
+_HEAD = (
+    "<html><head><title>synthetic</title><style>body{margin:0}</style>"
+    "<script>var x = 1;</script></head><body>"
+)
 
 
 def safe_text_expr(d: str, col: str = "text") -> str:

@@ -49,15 +49,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.appName("tesseract-glue-spark-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .getOrCreate()
-    )
+    from tesseract_glue_spark import ExtractionConfig, extract_documents, spark_session
 
-    from tesseract_glue_spark import ExtractionConfig, extract_documents
+    spark = spark_session(SparkSession.builder.appName("tesseract-glue-spark-extract"))
+
     from tesseract_glue_spark.sources import manifests as M
     from tesseract_glue_spark.sources.tables import read_documents, read_pages
 

@@ -1,6 +1,6 @@
 """DOM-heuristic main-content extraction (boilerpipe/Readability-style).
 
-A streaming ``html.parser.HTMLParser`` pass segments the document into
+One tokenizer pass (``web/html_fast.py``) segments the document into
 text *blocks* at block-level tag boundaries, collecting per-block
 features (raw char count, chars inside ``<a>``, owning tag, whether the
 block sits inside semantic chrome like ``<nav>``/``<footer>``). A
@@ -19,10 +19,10 @@ deterministic classifier then labels each block content vs boilerplate:
   classic boilerpipe neighbour rule).
 
 ``script``/``style``/``noscript``/``template``/``head``/``svg``/
-``iframe`` subtrees contribute no text; character references are decoded
-by the parser (``convert_charrefs=True``); whitespace is collapsed per
-block. The classifier is rule-based and fully deterministic so the gate
-query's expected output is SQL-derivable (see ``operators/web.py``).
+``iframe`` subtrees contribute no text; character references are
+decoded; whitespace is collapsed per block. The classifier is
+rule-based and deterministic, so ``extract_web_flat``'s expected output
+is SQL-derivable (see ``operators/web.py``).
 
 Reference parity note: the reference tool (Tesseract_Glue) has no HTML
 path — this module is the round-3 ``north_rule`` surface ("HTML
@@ -199,20 +199,7 @@ def segment_blocks(html: str) -> list[Block]:
     return blocks
 
 
-def extract_main(html: str) -> dict:
-    """Main-content record for one document.
-
-    Returns ``main_text`` (content blocks joined by ``\\n``), block
-    counts, and the whole-page link density scaled to x10k (ints only —
-    floats are banned from oracle-compared outputs)."""
-    blocks = segment_blocks(html)
-    content = [b for b in blocks if b.label == LABEL_CONTENT]
-    raw = sum(b.raw_chars for b in blocks)
-    link = sum(b.link_chars for b in blocks)
-    return {
-        "main_text": "\n".join(b.text for b in content),
-        "n_blocks": len(blocks),
-        "n_content_blocks": len(content),
-        "n_boilerplate_blocks": len(blocks) - len(content),
-        "link_density_x10k": (link * 10000) // raw if raw else 0,
-    }
+def extract_main(html: str) -> str:
+    """Main text of one document: its content blocks joined by ``\\n``
+    ('' for an empty or null page)."""
+    return "\n".join(b.text for b in segment_blocks(html) if b.label == LABEL_CONTENT)

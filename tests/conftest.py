@@ -71,16 +71,15 @@ def strip_bomb_tiff(w, h, block, first=b""):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
+    from tesseract_glue_spark import spark_session
+
+    spark = spark_session(
         SparkSession.builder.master("local[4]")
         .appName("tesseract_glue_spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
-        .getOrCreate()
     )
     yield spark
     spark.stop()

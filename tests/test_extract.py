@@ -90,30 +90,19 @@ class TestExtraction:
         for doc_id, text in flat_docs.items():
             expected = [
                 (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in py_expected_extracted(doc_id, text)
+                for s in py_expected_extracted(doc_id, text)["spans"]
             ]
             assert spans_key(got[doc_id]["spans"]) == expected, f"doc {doc_id}"
 
     def test_metrics_and_status(self, docs, pages, flat_docs):
-        from tesseract_glue_spark.imaging.render import (
-            is_blank,
-            is_dangling,
-            ref_to_num,
-        )
-        from tesseract_glue_spark.fixtures import py_spans
-
         out = extract.extract_documents(docs, pages, ExtractionConfig())
         got = {r["doc_id"]: r for r in out.collect()}
         for doc_id, text in flat_docs.items():
-            media = [s for s in py_spans(doc_id, text) if s["kind"] == "media"]
-            ns = [ref_to_num(s["media_ref"]) for s in media]
-            resolvable = [n for n in ns if not is_dangling(n)]
+            expected = py_expected_extracted(doc_id, text)
             r = got[doc_id]
-            assert r["ocr_pages"] == len(resolvable)
-            assert r["ocr_empty_pages"] == sum(1 for n in resolvable if is_blank(n))
-            assert r["status"] == (
-                "partial" if any(is_dangling(n) for n in ns) else "ok"
-            )
+            assert r["ocr_pages"] == expected["ocr_pages"]
+            assert r["ocr_empty_pages"] == expected["ocr_empty_pages"]
+            assert r["status"] == expected["status"]
 
     def test_salted_reassembly_identical(self, docs, pages):
         """Salting must not change results — only the shuffle shape

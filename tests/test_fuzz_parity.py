@@ -84,24 +84,6 @@ def _check_query(spark, duck, query_fn, oracle_sql, fuzz_dir, name):
     )
 
 
-def test_web_gate_on_adversarial_input(spark, fuzz_dir, fuzz_duck):
-    """The crawl gate corpus interpolates documents.text into HTML
-    markup and attribute values — exactly where raw
-    '&'/'<'/'\"'/double-space/unicode/short-text payloads diverged from
-    the closed-form oracles before safe_text_expr. Pin that surface
-    against the adversarial corpus, kernel included."""
-    from tesseract_glue_spark.operators import crawl as W
-
-    _check_query(
-        spark,
-        fuzz_duck,
-        W.html_main_content_spark,
-        W.html_main_content_oracle_sql(),
-        fuzz_dir,
-        "html_main_content",
-    )
-
-
 def test_web_wrapper_flagship_on_adversarial_input(spark, fuzz_dir, fuzz_duck):
     """extract_web_flat wraps raw interleaved text-span chunks in HTML
     (<h1>chunk</h1>) before DOM-stripping — the wrapper normalizes each

@@ -93,17 +93,6 @@ class TestPackingPlanShape:
 
 
 class TestWebPlanShape:
-    def test_html_strip_scan_prunes_and_fans_out(self, spark):
-        """The HTML corpus scan reads only (doc_id, text); the stripper
-        sits behind an explicit round-robin fan-out that must survive
-        Catalyst (same trap as the OCR stage)."""
-        from tesseract_glue_spark.operators.crawl import html_main_content_spark
-
-        df = html_main_content_spark(spark, SF_DIR)
-        plan = C.plan_text(df)
-        assert C.columns_pruned(plan, "documents", {"doc_id", "text"}), plan
-        assert "RoundRobinPartitioning" in C.plan_text(df, mode="simple")
-
     def test_fused_web_input_no_html_shuffle(self, spark):
         """The fused strip+OCR stage's input partitions each union side
         SEPARATELY: the media side round-robin fans out (pages must

@@ -75,7 +75,7 @@ class TestContractProperties:
         """Span-sequence equality structure: extraction only rewrites
         media-span text; kind/media_ref/offset are untouched."""
         before = py_spans(doc_id, text)
-        after = py_expected_extracted(doc_id, text)
+        after = py_expected_extracted(doc_id, text)["spans"]
         assert len(before) == len(after)
         for b, a in zip(before, after):
             assert (b["kind"], b["media_ref"], b["offset"]) == (
@@ -154,4 +154,4 @@ class TestWebCodecProperties:
             f"<article><p>{para}</p></article>"
             '<footer><a href="/t">t</a></footer>'
         )
-        assert extract_main(html)["main_text"] == " ".join(para.split())
+        assert extract_main(html) == " ".join(para.split())

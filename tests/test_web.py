@@ -1,6 +1,6 @@
-"""Web extraction (HTML DOM-heuristic main content, alone and fused
-with OCR in ``extract_web_documents``) and the crawl-input readers of
-``operators/crawl.py`` (robots/sitemap parsing, URL frontier).
+"""Web extraction: HTML DOM-heuristic main content, alone and fused
+with OCR in ``extract_web_documents``, and the tokenizer's time on
+hostile markup.
 
 Kernel tests use handwritten adversarial fixtures (NOT the synthetic
 gate corpus) so the corpus generators and the parsers cannot mirror
@@ -66,13 +66,13 @@ class TestHtmlBlocks:
 
     def test_malformed_markup_survives(self):
         html = f"<div><p>{LONG}</div></p></footer><p>{LONG}"
-        r = extract_main(html)
-        assert r["n_content_blocks"] == 2
-        assert r["main_text"].count(LONG) == 2
+        blocks = segment_blocks(html)
+        assert sum(b.label == LABEL_CONTENT for b in blocks) == 2
+        assert extract_main(html).count(LONG) == 2
 
     def test_empty_and_none(self):
-        assert extract_main("")["n_blocks"] == 0
-        assert extract_main(None)["main_text"] == ""
+        assert segment_blocks("") == []
+        assert extract_main(None) == ""
 
     def test_full_page_main_text_exact(self):
         """Every segmenter rule on one page: the invisible meta head,
@@ -97,63 +97,13 @@ class TestHtmlBlocks:
             '<footer><a href="/terms">terms</a> <a href="/privacy">privacy</a></footer>'
             "</body></html>"
         )
-        r = extract_main(html)
-        assert r["main_text"] == (
+        assert extract_main(html) == (
             "quarterly notes\n"
             "tide log see also reference docs for background and details\n"
             "the harbour froze early and the ferries stopped running"
         )
-        assert (r["n_blocks"], r["n_content_blocks"]) == (8, 3)
-
-    def test_robots_rules_first_match_and_agent_section(self):
-        from tesseract_glue_spark.operators.crawl import ROBOTS_AGENT, ROBOTS_TXT
-        from urllib.robotparser import RobotFileParser
-
-        rp = RobotFileParser()
-        rp.parse(ROBOTS_TXT.splitlines())
-        assert rp.can_fetch(ROBOTS_AGENT, "https://example.org/doc/5/view")
-        assert not rp.can_fetch(ROBOTS_AGENT, "https://example.org/private/5")
-        assert not rp.can_fetch(ROBOTS_AGENT, "https://example.org/doc/archive/5")
-        assert not rp.can_fetch("otherbot", "https://example.org/doc/5/view")
-
-    def test_robots_crawl_delay_and_sitemap_discovery(self):
-        from urllib.robotparser import RobotFileParser
-
-        from tesseract_glue_spark.operators.crawl import (
-            ROBOTS_AGENT,
-            ROBOTS_CRAWL_DELAY_MS,
-            ROBOTS_TXT,
-        )
-
-        rp = RobotFileParser()
-        rp.parse(ROBOTS_TXT.splitlines())
-        assert int(1000 * rp.crawl_delay(ROBOTS_AGENT)) == ROBOTS_CRAWL_DELAY_MS
-        assert rp.site_maps() == ["https://example.org/sitemap.xml"]
-
-    def test_sitemap_index_entries_parsed(self):
-        from tesseract_glue_spark.operators.crawl import parse_sitemap_xml
-
-        idx = (
-            '<?xml version="1.0"?>'
-            '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-            "<sitemap><loc>https://x.org/sitemap-1.xml</loc>"
-            "<lastmod>2026-01-01</lastmod></sitemap>"
-            "<!-- <sitemap><loc>https://x.org/ghost.xml</loc></sitemap> -->"
-            "<sitemap><loc>https://x.org/sitemap-2.xml</loc></sitemap>"
-            "</sitemapindex>"
-        )
-        got = parse_sitemap_xml(idx)
-        assert [(e["kind"], e["loc"], e["lastmod"]) for e in got] == [
-            ("sitemap", "https://x.org/sitemap-1.xml", "2026-01-01"),
-            ("sitemap", "https://x.org/sitemap-2.xml", ""),
-        ]
-        assert parse_sitemap_xml("<not-xml") == []
-
-    def test_link_density_x10k_exact(self):
-        # raw chars: 'abcde'(link,5) + ' tail'(5) => 10 raw, 5 link
-        html = '<p><a href="/">abcde</a> tail</p>'
-        assert extract_main(html)["link_density_x10k"] == 5000
-
+        blocks = segment_blocks(html)
+        assert (len(blocks), sum(b.label == LABEL_CONTENT for b in blocks)) == (8, 3)
 
 class TestFastParserDifferential:
     """The regex tokenizer must observe exactly what stdlib html.parser
@@ -216,6 +166,45 @@ class TestFastParserDifferential:
         assert self._observe(html, False) == self._observe(html, True), html
 
 
+# Markup that opens what it never closes, about 1 MB per family. The
+# tokenizer once read ahead to the end of the input at every '<' of most
+# of them and was super-quadratic: 24 KB of "<a " took 10 s.
+HOSTILE_HTML = {
+    "open_tags_no_gt": "<a " * 350_000,
+    "comment_openers_no_close": "<!--x" * 210_000,
+    "tag_then_spaces": "<a" + " " * 1_050_000,
+    "text_lt_no_gt": "ab x<y " * 150_000,
+    "plain_text": "lorem ipsum " * 87_000,
+    "deep_div_nesting": "<div>" * 210_000,
+    "comment_openers_with_gt": "<!--x>" * 175_000,
+    "cdata_openers_with_gt": "<![CDATA[x>" * 95_000,
+    "open_tags_unclosed_quote": "<a " * 350_000 + '">',
+    "long_name_unclosed_quote": "<" + "a" * 1_050_000 + '">',
+    "script_close_no_gt": "<script>" + "</script " * 116_000,
+}
+# the slowest family (deep nesting) takes 0.35 s, one thread of a 4-core VM
+HOSTILE_BUDGET_S = 2.0
+
+
+class TestTokenizerTime:
+    @pytest.mark.parametrize("family", sorted(HOSTILE_HTML))
+    def test_hostile_megabyte_within_budget(self, family):
+        """A 1 MB hostile span strips within the budget; SIGALRM stops a
+        scan that would run far longer, so the test fails in seconds."""
+        import signal
+
+        def expire(signum, frame):
+            raise TimeoutError(f"{family}: over {HOSTILE_BUDGET_S} s")
+
+        previous = signal.signal(signal.SIGALRM, expire)
+        signal.setitimer(signal.ITIMER_REAL, HOSTILE_BUDGET_S)
+        try:
+            extract_main(HOSTILE_HTML[family])
+        finally:
+            signal.setitimer(signal.ITIMER_REAL, 0)
+            signal.signal(signal.SIGALRM, previous)
+
+
 @pytest.mark.usefixtures("spark")
 class TestWebSpark:
     def _oracle(self, sql: str):
@@ -224,85 +213,6 @@ class TestWebSpark:
             f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
         )
         return con.execute(sql).df()
-
-    def test_html_main_content_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.crawl import (
-            html_main_content_oracle_sql,
-            html_main_content_spark,
-        )
-
-        got = html_main_content_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(html_main_content_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-
-    def test_web_sitemap_parse_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.crawl import (
-            web_sitemap_parse_oracle_sql,
-            web_sitemap_parse_spark,
-        )
-
-        got = web_sitemap_parse_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_sitemap_parse_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        # commented-out entries must be honored as comments, not scraped
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        n_live = docs.where("doc_id % 7 <> 0").count()
-        assert len(got) == n_live < docs.count()
-
-    def test_web_url_normalize_matches_oracle(self, spark):
-        from tesseract_glue_spark.operators.registry import oracle, spark_runner
-        from tesseract_glue_spark.operators.crawl import url_normalize_sql
-
-        got = spark_runner(url_normalize_sql)(spark, SF_DIR).toPandas()
-        exp = self._oracle(oracle(url_normalize_sql))
-        assert canonical_csv(got) == canonical_csv(exp)
-        row = got[got.doc_id == 0].iloc[0]
-        assert row.url_norm == "https://example.com/Doc/0?q=1"  # case/port/fragment rules
-
-    def test_web_sitemap_discover_matches_oracle(self, spark):
-        """Two-level discovery: sitemapindex parse → child resolution →
-        urlset parse; oracle = closed-form hosts×fanout equi-join. The
-        commented index reference (host % 20 == 0, k=2) must be honored
-        at the INDEX level, and commented url entries at the leaf
-        level."""
-        from tesseract_glue_spark.operators.crawl import (
-            SM_IDX_COMMENTED_MOD,
-            SM_IDX_MOD,
-            web_sitemap_discover_oracle_sql,
-            web_sitemap_discover_spark,
-        )
-
-        got = web_sitemap_discover_spark(spark, SF_DIR).toPandas()
-        exp = self._oracle(web_sitemap_discover_oracle_sql())
-        assert canonical_csv(got) == canonical_csv(exp)
-        # index-level comment honoring: commented hosts reference child
-        # host+2 only inside a comment → that child must be absent
-        commented_hosts = got[got.index_doc_id % SM_IDX_COMMENTED_MOD == 0]
-        assert len(commented_hosts) > 0
-        assert not (
-            commented_hosts.child_doc_id == commented_hosts.index_doc_id + 2
-        ).any()
-        live_hosts = got[got.index_doc_id % SM_IDX_COMMENTED_MOD != 0]
-        assert (live_hosts.child_doc_id == live_hosts.index_doc_id + 2).any()
-        assert (got.index_doc_id % SM_IDX_MOD == 0).all()
-
-    def test_web_frontier_dedup_collapses_variants(self, spark):
-        """Frontier dedup: canonicalization must COLLAPSE the colliding
-        raw-URL variants (case/port/fragment/www over a shared id
-        space) — n_fetches > 1 groups must exist, and totals must add
-        back up to one row per document."""
-        from tesseract_glue_spark.functions import dialect as D
-        from tesseract_glue_spark.operators.crawl import url_frontier_dedup_sql
-
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").createOrReplaceTempView(
-            "documents"
-        )
-        got = spark.sql(url_frontier_dedup_sql(D.SPARK)).toPandas()
-        exp = self._oracle(url_frontier_dedup_sql(D.DUCKDB))
-        assert canonical_csv(got) == canonical_csv(exp)
-        assert (got["n_fetches"] > 1).any()
-        n_docs = spark.table("documents").count()
-        assert int(got["n_fetches"].sum()) == n_docs
 
     def test_extract_web_flat_matches_oracle(self, spark):
         """Composed flagship: HTML-wrapped text spans + OCR'd media
@@ -315,6 +225,53 @@ class TestWebSpark:
         got = extract_web_flat_spark(spark, SF_DIR).toPandas()
         exp = self._oracle(extract_web_flat_oracle_sql())
         assert canonical_csv(got) == canonical_csv(exp)
+
+    def test_hostile_span_leaves_its_doc_intact(self, spark):
+        """One doc carries a 1 MB text span of "<a " with no '>' between
+        wrapped pages and a page image: the job finishes within its
+        budget (cancelled past it), the doc is present, its other spans
+        strip and OCR as usual, and the hostile span, which closes no
+        tag, comes back as its own text."""
+        import threading
+
+        from tesseract_glue_spark import ExtractionConfig
+        from tesseract_glue_spark.fixtures import DOCUMENTS_SCHEMA, PAGES_SCHEMA
+        from tesseract_glue_spark.imaging.render import num_to_ref, render_page, truth_text
+        from tesseract_glue_spark.operators.web import (
+            _SPAN_PREFIX,
+            _SPAN_SUFFIX,
+            extract_web_documents,
+        )
+
+        hostile = HOSTILE_HTML["open_tags_no_gt"]
+        page = num_to_ref(1)
+        docs = [
+            (1, [
+                ("text", f"{_SPAN_PREFIX}first chunk{_SPAN_SUFFIX}", "", 0),
+                ("media", "", page, 1),
+                ("text", hostile, "", 2),
+                ("text", f"{_SPAN_PREFIX}last chunk{_SPAN_SUFFIX}", "", 3),
+            ]),
+            (2, [("text", f"{_SPAN_PREFIX}other doc{_SPAN_SUFFIX}", "", 0)]),
+        ]
+        # the builder runs the strip stage (eager checkpoint), so the
+        # budget covers it too
+        timer = threading.Timer(120, spark.sparkContext.cancelAllJobs)
+        timer.start()
+        try:
+            out = extract_web_documents(
+                spark.createDataFrame(docs, schema=DOCUMENTS_SCHEMA),
+                spark.createDataFrame([(page, render_page(1)[0], 0, 0, "")], schema=PAGES_SCHEMA),
+                ExtractionConfig(),
+            )
+            got = {r["doc_id"]: r for r in out.collect()}
+        finally:
+            timer.cancel()
+        assert [s["text"] for s in got[1]["spans"]] == [
+            "first chunk", truth_text(1), hostile.strip(), "last chunk"
+        ]
+        assert (got[1]["ocr_pages"], got[1]["status"]) == (1, "ok")
+        assert [s["text"] for s in got[2]["spans"]] == ["other doc"]
 
     def test_web_extraction_streams_like_batch(self, spark, tmp_path):
         """Web pipeline as a structured stream (foreachBatch, extractor
